@@ -41,12 +41,8 @@ final class PprEngine(
 
   val edgesDf: DataFrame = edges.persist()
   lazy val csr: Csr = GraphOps.buildCsr(edgesDf)
-  private lazy val rcsr: Csr = GraphOps.buildCsr(
-    edgesDf.select(col("dst").as("src"), col("src").as("dst")))
-  private lazy val fwdDeg: Array[Int] = Array.tabulate(rcsr.numNodes) { v =>
-    val d = csr.denseOf(rcsr.originalOf(v))
-    if (d < 0) 0 else csr.outDegree(d)
-  }
+  private lazy val rcsr: Csr = Base.reversedCsr(edgesDf)
+  private lazy val fwdDeg: Array[Int] = Base.forwardDegrees(csr, rcsr)
 
   private def topkOf(df: DataFrame, k: Int): DataFrame = {
     val kth = df.orderBy(col("score").desc).limit(k)
@@ -130,7 +126,7 @@ final class PprEngine(
   final class base(rmax: Double, threshold: Double, k: Int = -1)
       extends PrecomputedPpr {
     def preprocess(dir: String): Unit = {
-      val ap = Base.allPairs(spark, edgesDf, conf.alpha, rmax, 0, threshold)
+      val ap = Base.allPairs(spark, csr, rcsr, fwdDeg, conf.alpha, rmax, 0, threshold)
       if (k > 0) Base.writeTopkStore(ap, dir, k)
       else Base.writeStore(ap, dir)
     }

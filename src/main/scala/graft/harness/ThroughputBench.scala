@@ -2,7 +2,7 @@ package graft.harness
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.graph.{Got, GraphOps}
-import graft.ppr.{Base, Fora}
+import graft.ppr.{Base, Fora, PprStore}
 
 /** BASELINE.md §BENCH axis 2 — the reference-shaped throughput
   * measurement: batched multi-source FORA throughput (queries/min, both
@@ -140,18 +140,14 @@ object ThroughputBench {
           scoreThreshold = baseThreshold),
         store)
       val prepSec = (System.nanoTime() - t2) / 1e9
-      val storeDf = spark.read.parquet(store)
-      val stored = storeDf.count()
+      val stored = PprStore.table(spark, store).count()
       // BASE per-source query latency (the reference's headline BASE
       // property: query time ≈ constant, one file read per source —
-      // Dissertation §5.3-5.4). The DataFrame is built ONCE (one
-      // partition discovery, the cataloged-table shape); each query is
-      // then a Catalyst partition-pruned single-directory scan.
+      // Dissertation §5.3-5.4), through the API's lookup path: the store
+      // is opened once, each query is a Catalyst partition-pruned
+      // single-directory scan.
       val t3 = System.nanoTime()
-      srcs.foreach { s =>
-        storeDf.where(org.apache.spark.sql.functions.col("src") === s)
-          .count()
-      }
+      srcs.foreach(s => PprStore.read(spark, store, s).count())
       val readSec = (System.nanoTime() - t3) / 1e9
       Base.deleteStore(spark, store)
       emit(s"${tag}_base_prep_sec" -> r3(prepSec))

@@ -27,7 +27,8 @@ object Base {
   /** All-pair PPR: (src, dst, score) where score ≈ π(src, dst), computed by
     * multi-target backward search and inverted to source-major.
     * `scoreThreshold` drops near-zero entries before storing (P1,
-    * `Base_Whole_Graph.java:83-87`).
+    * `Base_Whole_Graph.java:83-87`). Builds the forward and reversed CSRs
+    * from `edges`; a caller that already holds them uses the other overload.
     */
   def allPairs(
       spark: SparkSession,
@@ -37,20 +38,41 @@ object Base {
       maxSupersteps: Int = 0,
       scoreThreshold: Double = 0.0): DataFrame = {
     val csr = GraphOps.buildCsr(edges)
-    val rcsr = GraphOps.buildCsr(
-      edges.select(col("dst").as("src"), col("src").as("dst")))
-    // forward out-degree in the reversed CSR's dense id space.
-    val fwdDeg = Array.tabulate(rcsr.numNodes) { v =>
-      val d = csr.denseOf(rcsr.originalOf(v))
-      if (d < 0) 0 else csr.outDegree(d)
-    }
-    val targets = csr.ids.toSeq
+    val rcsr = reversedCsr(edges)
+    allPairs(spark, csr, rcsr, forwardDegrees(csr, rcsr), alpha, rmax,
+      maxSupersteps, scoreThreshold)
+  }
+
+  /** [[allPairs]] over prebuilt graphs: `csr` of the edges, `rcsr` of the
+    * reversed edges ([[reversedCsr]]) and `fwdDeg` the forward out-degrees
+    * in `rcsr`'s dense id space ([[forwardDegrees]]).
+    */
+  def allPairs(
+      spark: SparkSession,
+      csr: Csr,
+      rcsr: Csr,
+      fwdDeg: Array[Int],
+      alpha: Double,
+      rmax: Double,
+      maxSupersteps: Int,
+      scoreThreshold: Double): DataFrame = {
     val inverted = BackwardSearch
-      .batch(spark, rcsr, fwdDeg, targets, alpha, rmax, maxSupersteps)
+      .batch(spark, rcsr, fwdDeg, csr.ids.toSeq, alpha, rmax, maxSupersteps)
       .select(col("node_id").as("src"), col("dst"), col("score"))
     if (scoreThreshold > 0.0) inverted.where(col("score") >= scoreThreshold)
     else inverted
   }
+
+  /** CSR of the reversed edges — backward search walks in-edges. */
+  def reversedCsr(edges: DataFrame): Csr =
+    GraphOps.buildCsr(edges.select(col("dst").as("src"), col("src").as("dst")))
+
+  /** Forward out-degree of every node, in `rcsr`'s dense id space. */
+  def forwardDegrees(csr: Csr, rcsr: Csr): Array[Int] =
+    Array.tabulate(rcsr.numNodes) { v =>
+      val d = csr.denseOf(rcsr.originalOf(v))
+      if (d < 0) 0 else csr.outDegree(d)
+    }
 
   /** S7 — persist the all-pair table source-major via the shared
     * [[PprStore]] layout (Parquet partitioned by `src`, so a per-source
@@ -88,19 +110,16 @@ object Base {
     * [[PprStore]], plus the rank column.
     */
   def writeTopkStore(allPairs: DataFrame, dir: String, k: Int): Unit =
-    topkTable(allPairs, k)
-      .select(col("src"), col("dst").as("node_id"), col("score"), col("rk"))
-      .repartition(col("src"))
-      .write.mode("overwrite")
-      .partitionBy("src")
-      .parquet(dir)
+    PprStore.writePartitioned(topkTable(allPairs, k)
+      .select(col("src"), col("dst").as("node_id"), col("score"), col("rk")), dir)
 
   /** S8 (top-k mode) — ordered read-back of one source's pre-truncated
     * vector: rank ascending (node_id tie-break), the reference's
-    * insertion-order `getTopKNodeIds` semantics.
+    * insertion-order `getTopKNodeIds` semantics. Served from the store
+    * opened once by [[PprStore.table]].
     */
   def readTopkSource(spark: SparkSession, dir: String, source: Long): DataFrame =
-    spark.read.parquet(dir).where(col("src") === source)
+    PprStore.table(spark, dir).where(col("src") === source)
       .select(col("node_id"), col("score"), col("rk"))
       .orderBy(col("rk").asc, col("node_id").asc)
 

@@ -2090,12 +2090,8 @@ object Graph {
     "g_bwdsearch" -> ((s, dir) => {
       val csr = GraphOps.lineitemCsr(s, dir, Mod)
       val rcsr = GraphOps.lineitemCsr(s, dir, Mod, reversed = true)
-      val fwdDeg = Array.tabulate(rcsr.numNodes) { v =>
-        val d = csr.denseOf(rcsr.originalOf(v))
-        if (d < 0) 0 else csr.outDegree(d)
-      }
-      BackwardSearch.batch(s, rcsr, fwdDeg, BatchSources, Alpha, PushRmax,
-          PushSupersteps)
+      BackwardSearch.batch(s, rcsr, Base.forwardDegrees(csr, rcsr),
+          BatchSources, Alpha, PushRmax, PushSupersteps)
         .select(col("dst"), col("node_id"), round(col("score"), 9).as("score"))
         .where(col("score") =!= 0.0)
     }),

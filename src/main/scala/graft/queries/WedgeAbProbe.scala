@@ -69,6 +69,7 @@ object WedgeAbProbe {
     require(mismatch == 0L)
     val maxDeg = deg.agg(max(col("dg"))).head().getLong(0)
     println(s"[ab] max degree = $maxDeg (packing exact iff < ${1L << 21})")
+    require(maxDeg < (1L << 21), s"max degree $maxDeg overflows the 21-bit packing")
 
     def scoped(p: Int)(f: => Unit): Unit = {
       val prev = s.conf.get("spark.sql.shuffle.partitions")

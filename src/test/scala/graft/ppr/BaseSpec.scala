@@ -27,6 +27,21 @@ class BaseSpec extends SparkSpec {
     }
   }
 
+  test("allPairs over prebuilt CSRs returns the rows allPairs over the " +
+      "edges returns") {
+    val csr = graft.graph.GraphOps.buildCsr(edgesDf)
+    val rcsr = Base.reversedCsr(edgesDf)
+    val fwdDeg = Base.forwardDegrees(csr, rcsr)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      .sortBy(r => (r._1, r._2)).toSeq
+    for (threshold <- Seq(0.0, 0.05)) {
+      val viaEdges = rows(Base.allPairs(spark, edgesDf, 0.15, 1e-6, 0, threshold))
+      val viaCsr = rows(Base.allPairs(spark, csr, rcsr, fwdDeg, 0.15, 1e-6, 0, threshold))
+      assert(viaEdges.nonEmpty && viaCsr == viaEdges, s"threshold $threshold")
+    }
+  }
+
   test("the shared all-pair fit: g_base_allpair == a fresh uncached " +
       "sweep, g_base_topk == the rank cut over it, and invalidation " +
       "refits to the same answer") {

@@ -1,0 +1,8 @@
+package org.apache.spark
+
+/** Test access to the listener bus's drain, which Spark keeps package-private:
+  * after it returns, every event posted so far has reached every listener.
+  */
+object ListenerBusDrain {
+  def apply(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
