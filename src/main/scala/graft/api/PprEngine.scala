@@ -44,20 +44,37 @@ final class PprEngine(
   private lazy val rcsr: Csr = Base.reversedCsr(edgesDf)
   private lazy val fwdDeg: Array[Int] = Base.forwardDegrees(csr, rcsr)
 
-  private def topkOf(df: DataFrame, k: Int): DataFrame = {
-    val kth = df.orderBy(col("score").desc).limit(k)
-      .agg(min("score")).head
-    if (kth.isNullAt(0)) df
-    else df.where(col("score") >= kth.getDouble(0))
+  /** `(node_id, score)` of a one-source batch result. */
+  private def vectorOf(batch: DataFrame): DataFrame =
+    batch.select(col("node_id"), col("score"))
+
+  /** Tie-inclusive top-k (T2) of `vector`, evaluated once: `k` is checked
+    * first, then the vector is collected, cut at [[Fora.kthLargest]] (the
+    * FORA top-k rule) and returned as a local DataFrame, so the caller's
+    * action runs no second job.
+    */
+  private def topkOf(vector: => DataFrame, k: Int): DataFrame = {
+    requireK(k)
+    val v = vector
+    val rows = v.collect()
+    val kth = Fora.kthLargest(rows.map(_.getDouble(1)), k)
+    spark.createDataFrame(
+      java.util.Arrays.asList(rows.filter(_.getDouble(1) >= kth): _*),
+      v.schema)
   }
 
-  /** K1 — exact oracle. */
+  private def requireK(k: Int): Unit =
+    require(k >= 1, s"k must be >= 1, got $k")
+
+  private def requirePositive(name: String, v: Double): Unit =
+    require(v > 0, s"$name must be > 0, got $v")
+
+  /** K1 — exact oracle (100 iterations). */
   object power extends SsPpr with TopkPpr {
-    def wholeGraphPpr(source: Long): DataFrame =
-      PowerIteration.run(spark, edgesDf, source, conf.alpha, 100)
+    def wholeGraphPpr(source: Long): DataFrame = vectorOf(batch(Seq(source)))
     def topkPpr(source: Long, k: Int): DataFrame =
       topkOf(wholeGraphPpr(source), k)
-    /** Batched multi-source variant (the Spark-shaped fast path). */
+    /** Multi-source variant: `(src, node_id, score)`. */
     def batch(sources: Seq[Long]): DataFrame =
       PowerIteration.batch(spark, csr, sources, conf.alpha, 100)
   }
@@ -81,8 +98,8 @@ final class PprEngine(
 
   /** K2 — forward push at rmax. */
   final class forwardPush(rmax: Double) extends SsPpr with TopkPpr with PrepVia {
-    def wholeGraphPpr(source: Long): DataFrame =
-      ForwardPush.run(spark, edgesDf, source, conf.alpha, rmax)
+    requirePositive("rmax", rmax)
+    def wholeGraphPpr(source: Long): DataFrame = vectorOf(batchAll(Seq(source)))
     def topkPpr(source: Long, k: Int): DataFrame =
       topkOf(wholeGraphPpr(source), k)
     protected def batchAll(sources: Seq[Long]): DataFrame =
@@ -91,8 +108,8 @@ final class PprEngine(
 
   /** K5 — Monte-Carlo at epsilon. */
   final class monteCarlo(epsilon: Double) extends SsPpr with TopkPpr with PrepVia {
-    def wholeGraphPpr(source: Long): DataFrame =
-      MonteCarlo.ssppr(spark, csr, source, conf.alpha, epsilon, seed = conf.seed)
+    requirePositive("epsilon", epsilon)
+    def wholeGraphPpr(source: Long): DataFrame = vectorOf(batchAll(Seq(source)))
     def topkPpr(source: Long, k: Int): DataFrame =
       topkOf(wholeGraphPpr(source), k)
     protected def batchAll(sources: Seq[Long]): DataFrame =
@@ -100,22 +117,25 @@ final class PprEngine(
         seed = conf.seed)
   }
 
-  /** K6/K7 — FORA. */
+  /** K6/K7 — FORA. A top-k call with `k >= n` returns the whole vector. */
   final class fora(epsilon: Double) extends SsPpr with TopkPpr {
+    requirePositive("epsilon", epsilon)
     private def fconf =
       Fora.Conf(conf.alpha, epsilon, conf.pfail, conf.delta, conf.seed)
     def wholeGraphPpr(source: Long): DataFrame =
-      Fora.batch(spark, csr, Seq(source), fconf)
-        .select(col("node_id"), col("score"))
-    def topkPpr(source: Long, k: Int): DataFrame =
-      Fora.topkBatch(spark, csr, Seq(source), k, fconf)
-        .select(col("node_id"), col("score"))
+      vectorOf(Fora.batch(spark, csr, Seq(source), fconf))
+    def topkPpr(source: Long, k: Int): DataFrame = {
+      requireK(k)
+      vectorOf(Fora.topkBatch(spark, csr, Seq(source), k, fconf))
+    }
   }
 
   /** K8 — backward search: the PPR COLUMN π(·, target). */
   final class backward(rmax: Double) {
+    requirePositive("rmax", rmax)
     def pprColumn(target: Long): DataFrame =
-      BackwardSearch.run(spark, edgesDf, target, conf.alpha, rmax)
+      vectorOf(BackwardSearch.batch(spark, rcsr, fwdDeg, Seq(target),
+        conf.alpha, rmax))
   }
 
   /** K9 — BASE all-pair store (S7-S9 lifecycle). `k > 0` selects the T5
@@ -125,6 +145,8 @@ final class PprEngine(
     */
   final class base(rmax: Double, threshold: Double, k: Int = -1)
       extends PrecomputedPpr {
+    requirePositive("rmax", rmax)
+    require(threshold >= 0, s"threshold must be >= 0, got $threshold")
     def preprocess(dir: String): Unit = {
       val ap = Base.allPairs(spark, csr, rcsr, fwdDeg, conf.alpha, rmax, 0, threshold)
       if (k > 0) Base.writeTopkStore(ap, dir, k)

@@ -1,8 +1,7 @@
 package graft.ppr
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import graft.graph.{Csr, GraphOps}
+import graft.graph.Csr
 
 /** K8 — Backward Search (reverse local push), SURVEY §2.8; reference
   * `Backward_Search.java:38-100`.
@@ -20,68 +19,14 @@ import graft.graph.{Csr, GraphOps}
   * bulk-synchronous superstep; a FIXED superstep count gives the
   * deterministic schedule the unrolled-SQL oracle replays.
   *
-  * Scale: the distributed variant shuffles once per superstep on the
-  * reversed edge list; the dense kernel ([[runLocal]]) is the unit the
-  * BASE all-pair preprocessing ([[Base]]) fans out over targets — the
-  * embarrassingly parallel axis at 100 TB is *targets*, not edges.
+  * Scale: [[batch]] broadcasts the reversed CSR and runs the kernel
+  * ([[runLocal]], or its bit-identical sparse twin [[runLocalSparse]]) for
+  * a slice of targets per task, zero per-superstep shuffles. The same
+  * batch serves a single column (`PprEngine.backward`) and the BASE
+  * all-pair preprocessing ([[Base]]), which fans out over every target —
+  * the embarrassingly parallel axis is *targets*, not edges.
   */
 object BackwardSearch {
-
-  /** Distributed BSP backward search from one target.
-    * Returns (node_id LONG, score DOUBLE) = π(node, target) estimates.
-    */
-  def run(
-      spark: SparkSession,
-      edges: DataFrame,
-      target: Long,
-      alpha: Double = 0.15,
-      rmax: Double = 1e-4,
-      maxSupersteps: Int = 0,
-      checkpointEvery: Int = 1): DataFrame = {
-    // see ForwardPush.run: residue feeds multiple branches per superstep;
-    // checkpoint each round to keep the plan linear, releasing the dead
-    // previous generation as each new one materializes.
-    import spark.implicits._
-    val ckpt = new graft.operators.CkptChain(spark.sparkContext)
-
-    val deg = GraphOps.outDegrees(edges).persist()
-    val e = edges.persist()
-
-    var residue = Seq((target, 1.0)).toDF("id", "r")
-    var reserve = spark.emptyDataset[(Long, Double)].toDF("id", "p")
-
-    var it = 0
-    var active = true
-    while (active && (maxSupersteps <= 0 || it < maxSupersteps)) {
-      val eligible = residue.where(col("r") > rmax)
-      val retained = residue.where(col("r") <= rmax)
-      if (maxSupersteps <= 0 && eligible.isEmpty) {
-        active = false
-      } else {
-        reserve = reserve
-          .union(eligible.select(col("id"), (lit(alpha) * col("r")).as("p")))
-          .groupBy("id").agg(sum("p").as("p"))
-        // receiver u's share: (1-α)·r(v)/outdeg(u) for each edge (u, v).
-        val pushed = eligible
-          .join(e, eligible("id") === e("dst"))
-          .select(col("src").as("id"), (lit(1.0 - alpha) * col("r")).as("m"))
-          .join(deg, Seq("id"))
-          .select(col("id"), (col("m") / col("deg")).as("r"))
-        residue = pushed.union(retained).groupBy("id").agg(sum("r").as("r"))
-        it += 1
-        if (it % checkpointEvery == 0) {
-          // joint generation — see ForwardPush.run: both states derive
-          // from the previous residue.
-          val Seq(r2, p2) = ckpt(Seq(residue, reserve))
-          residue = r2; reserve = p2
-        }
-      }
-    }
-    val out = reserve.select(col("id").as("node_id"), col("p").as("score"))
-      .where(col("score") =!= 0.0)
-    deg.unpersist(); e.unpersist()
-    out
-  }
 
   /** Dense per-task kernel over the REVERSED CSR.
     * `rcsr` must be the CSR of reversed edges (dst→src); `fwdDeg(u)` is the

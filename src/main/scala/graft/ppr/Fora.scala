@@ -204,10 +204,14 @@ object Fora {
   }
 
   /** K7 — top-k FORA for one source; returns the full estimate vector of
-    * the terminating round (caller applies tie-inclusive top-k).
+    * the terminating round (caller applies tie-inclusive top-k). With
+    * `k ≥ n` every node is in the tie-inclusive top-k, so the answer is the
+    * whole-graph vector ([[wholeGraphLocal]]); the round loop's bounds
+    * need `ln(n/k) > 0`.
     */
   def topkLocal(csr: Csr, srcDense: Int, k: Int, conf: Conf): Array[Double] =
-    topkRun(csr, srcDense, k, conf, rec = null)._3
+    if (k >= csr.numNodes) wholeGraphLocal(csr, srcDense, conf)
+    else topkRun(csr, srcDense, k, conf, rec = null)._3
 
   /** kth largest value (0.0 when fewer than k nonzero entries) — the
     * `Algo_Util.kth_ppr` quickselect becomes a sort over the nonzero
@@ -277,52 +281,29 @@ object Fora {
       csr: Csr,
       sources: Seq[Long],
       conf: Conf = Conf(),
-      slices: Int = 0): DataFrame = {
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(csr)
-    val nSlices = if (slices > 0) slices
-      else math.min(math.max(1, sources.length), spark.sparkContext.defaultParallelism)
-    spark.sparkContext.parallelize(sources, nSlices)
-      .flatMap { s =>
-        val g = bc.value
-        val sd = g.denseOf(s)
-        if (sd < 0) Iterator.empty
-        else {
-          val scores = wholeGraphLocal(g, sd, conf)
-          scores.iterator.zipWithIndex.collect {
-            case (p, v) if p != 0.0 => (s, g.originalOf(v), p)
-          }
-        }
-      }
-      .toDF("src", "node_id", "score")
-  }
+      slices: Int = 0): DataFrame =
+    SourceFanOut(spark, csr, sources, slices)(
+      (g, sd) => wholeGraphLocal(g, sd, conf))
 
-  /** Batched top-k FORA, tie-inclusive (T2). Returns (src, node_id, score). */
+  /** Batched top-k FORA, tie-inclusive (T2): every score below the kth
+    * largest is zeroed before the fan-out drops zeros.
+    * Returns (src, node_id, score).
+    */
   def topkBatch(
       spark: SparkSession,
       csr: Csr,
       sources: Seq[Long],
       k: Int,
       conf: Conf = Conf(),
-      slices: Int = 0): DataFrame = {
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(csr)
-    val nSlices = if (slices > 0) slices
-      else math.min(math.max(1, sources.length), spark.sparkContext.defaultParallelism)
-    spark.sparkContext.parallelize(sources, nSlices)
-      .flatMap { s =>
-        val g = bc.value
-        val sd = g.denseOf(s)
-        if (sd < 0) Iterator.empty
-        else {
-          val scores = topkLocal(g, sd, k, conf)
-          val kth = kthLargest(scores, k)
-          scores.iterator.zipWithIndex.collect {
-            case (p, v) if p > 0.0 && (kth == 0.0 || p >= kth) =>
-              (s, g.originalOf(v), p)
-          }
-        }
+      slices: Int = 0): DataFrame =
+    SourceFanOut(spark, csr, sources, slices) { (g, sd) =>
+      val scores = topkLocal(g, sd, k, conf)
+      val kth = kthLargest(scores, k)
+      var v = 0
+      while (v < scores.length) {
+        if (scores(v) < kth) scores(v) = 0.0
+        v += 1
       }
-      .toDF("src", "node_id", "score")
-  }
+      scores
+    }
 }

@@ -1,8 +1,7 @@
 package graft.ppr
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import graft.graph.{Csr, GraphOps}
+import graft.graph.Csr
 
 /** K2/K3 — Forward Push (local push), SURVEY §2.8; reference
   * `Forward_Push.java:63-142`.
@@ -23,95 +22,16 @@ import graft.graph.{Csr, GraphOps}
   * superstep count the BSP schedule is fully deterministic, which is what
   * makes the unrolled-SQL DuckDB oracle possible.
   *
-  * Scale: [[run]] shuffles once per superstep (join + groupBy) and holds
-  * only (id, r) state — at 100 TB the state stays partitioned by id and
-  * never visits the driver. [[runLocal]] is the per-task dense kernel used
-  * by the batched multi-source path ([[batch]]) when the graph CSR is
-  * broadcastable.
+  * Scale: [[batch]] broadcasts the graph CSR and runs the dense kernel
+  * ([[runLocal]]) for a slice of sources per task, zero per-superstep
+  * shuffles; FORA ([[Fora]]) reuses the same kernel for its push phase.
   */
 object ForwardPush {
-
-  /** Distributed BSP forward push. If `maxSupersteps` > 0, runs exactly that
-    * many supersteps (deterministic, oracle-checkable); otherwise runs until
-    * the frontier is empty (fixpoint: no node eligible).
-    * Returns (node_id LONG, score DOUBLE) — the reserve; zero rows omitted.
-    */
-  def run(
-      spark: SparkSession,
-      edges: DataFrame,
-      source: Long,
-      alpha: Double = 0.15,
-      rmax: Double = 1e-4,
-      maxSupersteps: Int = 0,
-      checkpointEvery: Int = 1): DataFrame = {
-    // checkpointEvery=1: the per-superstep state feeds THREE branches
-    // (eligible/retained/dangling), so an unbroken lineage grows ~3^steps
-    // subplans — eager localCheckpoint each superstep keeps the plan flat.
-    // Chained checkpoints release the previous generation as the next one
-    // materializes; only the final state stays pinned (it backs the
-    // returned DataFrame).
-    import spark.implicits._
-    val ckpt = new graft.operators.CkptChain(spark.sparkContext)
-
-    val deg = GraphOps.outDegrees(edges).persist()
-    val e = edges.persist()
-
-    // degenerate source short-circuit (fixpoint mode only; see runLocal).
-    if (maxSupersteps <= 0 &&
-        deg.where(col("id") === source).isEmpty) {
-      deg.unpersist(); e.unpersist()
-      return Seq((source, 1.0)).toDF("node_id", "score")
-    }
-
-    var residue = Seq((source, 1.0)).toDF("id", "r")
-    // reserveParts accumulates α·r over eligible rows per superstep.
-    var reserve = spark.emptyDataset[(Long, Double)].toDF("id", "p")
-
-    var it = 0
-    var frontierNonEmpty = true
-    while (frontierNonEmpty && (maxSupersteps <= 0 || it < maxSupersteps)) {
-      // left join degrees: null deg = dangling = always eligible.
-      val state = residue.join(deg, Seq("id"), "left_outer")
-      val eligible = state.where(col("deg").isNull ||
-        col("r") / col("deg") >= rmax)
-      val retained = state.where(col("deg").isNotNull &&
-        col("r") / col("deg") < rmax)
-        .select(col("id"), col("r"))
-
-      if (maxSupersteps <= 0 && eligible.isEmpty) {
-        frontierNonEmpty = false
-      } else {
-        reserve = reserve
-          .union(eligible.select(col("id"), (lit(alpha) * col("r")).as("p")))
-          .groupBy("id").agg(sum("p").as("p"))
-        val pushed = eligible.where(col("deg").isNotNull)
-          .join(e, eligible("id") === e("src"))
-          .select(col("dst").as("id"),
-            (lit(1.0 - alpha) * col("r") / col("deg")).as("r"))
-        val dangling = eligible.where(col("deg").isNull)
-          .select(lit(source).as("id"), (lit(1.0 - alpha) * col("r")).as("r"))
-        residue = pushed.union(retained).union(dangling)
-          .groupBy("id").agg(sum("r").as("r"))
-        it += 1
-        if (it % checkpointEvery == 0) {
-          // joint generation: residue and reserve both derive from the
-          // previous residue, so neither may be released until both new
-          // snapshots are materialized.
-          val Seq(r2, p2) = ckpt(Seq(residue, reserve))
-          residue = r2; reserve = p2
-        }
-      }
-    }
-    val out = reserve.select(col("id").as("node_id"), col("p").as("score"))
-      .where(col("score") =!= 0.0)
-    deg.unpersist(); e.unpersist()
-    out
-  }
 
   /** Residue vector after the same BSP schedule — for FORA's walk phase. */
   final case class PushState(reserve: Array[Double], residue: Array[Double], rsum: Double)
 
-  /** Dense per-task kernel, identical BSP schedule to [[run]].
+  /** Dense per-task kernel: the BSP schedule above over a CSR snapshot.
     * `maxSupersteps <= 0` means run to fixpoint (frontier empty).
     *
     * Degenerate source (out-degree 0) short-circuits to π(s,s)=1 in
@@ -140,7 +60,9 @@ object ForwardPush {
     * carry-over of the FORA top-k rounds (reference
     * `Forward_Push.java:144-250`: parked nodes re-checked at poll time; in
     * BSP the carried residue array IS the parked frontier, re-screened
-    * against the new rmax each superstep).
+    * against the new rmax each superstep). `rmax` must be positive: at 0
+    * a residue at the smallest subnormal stays eligible forever, because
+    * (1-α)·2⁻¹⁰⁷⁴ rounds back to 2⁻¹⁰⁷⁴.
     */
   def runLocalFrom(
       csr: Csr,
@@ -149,6 +71,7 @@ object ForwardPush {
       alpha: Double,
       rmax: Double,
       maxSupersteps: Int = 0): PushState = {
+    require(rmax > 0, s"rmax must be > 0, got $rmax")
     val n = csr.numNodes
     var residue = init.residue.clone()
     val reserve = init.reserve.clone()
@@ -188,7 +111,7 @@ object ForwardPush {
 
   /** Batched multi-source forward push over a broadcast CSR: one task per
     * slice of sources, zero per-superstep shuffle.
-    * Returns (src LONG, node_id LONG, score DOUBLE).
+    * Returns (src LONG, node_id LONG, score DOUBLE), zero scores omitted.
     */
   def batch(
       spark: SparkSession,
@@ -197,32 +120,15 @@ object ForwardPush {
       alpha: Double = 0.15,
       rmax: Double = 1e-4,
       maxSupersteps: Int = 0,
-      slices: Int = 0): DataFrame = {
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(csr)
-    val nSlices = if (slices > 0) slices
-      else math.min(math.max(1, sources.length), spark.sparkContext.defaultParallelism)
-    spark.sparkContext
-      .parallelize(sources, nSlices)
-      .flatMap { s =>
-        val g = bc.value
-        val sd = g.denseOf(s)
-        if (sd < 0) Iterator.empty
-        else {
-          val st = runLocal(g, sd, alpha, rmax, maxSupersteps)
-          st.reserve.iterator.zipWithIndex.collect {
-            case (p, v) if p != 0.0 => (s, g.originalOf(v), p)
-          }
-        }
-      }
-      .toDF("src", "node_id", "score")
-  }
+      slices: Int = 0): DataFrame =
+    SourceFanOut(spark, csr, sources, slices)(
+      (g, sd) => runLocal(g, sd, alpha, rmax, maxSupersteps).reserve)
 
   /** DuckDB oracle for the FIXED-superstep BSP schedule, multi-source.
     * `graphSql` must yield (src, dst). Output: (src, node_id, score),
     * score rounded to `roundTo`.
     *
-    * State recurrence (matching [[run]]/[[runLocal]] exactly):
+    * State recurrence (matching [[runLocal]] exactly):
     *   eligible(v)  = deg IS NULL OR r/deg >= rmax
     *   reserve     += α·r over eligible rows (accumulated, rounded at end)
     *   r'           = Σ pushes + retained ineligible r + dangling→source

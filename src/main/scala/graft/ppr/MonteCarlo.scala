@@ -75,55 +75,8 @@ object MonteCarlo {
     cur
   }
 
-  /** K5 — single-source Monte-Carlo SSPPR: π̂(v) = stops(v)/ω.
-    * Returns (node_id LONG, score DOUBLE).
-    */
-  def ssppr(
-      spark: SparkSession,
-      csr: Csr,
-      source: Long,
-      alpha: Double = 0.15,
-      epsilon: Double = 0.5,
-      pfail: Double = 0.0,
-      delta: Double = 0.0,
-      seed: Long = 42L,
-      slices: Int = 0): DataFrame = {
-    import spark.implicits._
-    val n = csr.numNodes.toDouble
-    val pf = if (pfail > 0) pfail else 1.0 / n
-    val dl = if (delta > 0) delta else 1.0 / n
-    val omega = omegaFor(epsilon, pf, dl)
-    val nSlices = if (slices > 0) slices
-      else math.max(1, spark.sparkContext.defaultParallelism)
-    val bc = spark.sparkContext.broadcast(csr)
-    val per = (omega + nSlices - 1) / nSlices
-    spark.sparkContext
-      .parallelize(0 until nSlices, nSlices)
-      .flatMap { slice =>
-        val g = bc.value
-        val sd = g.denseOf(source)
-        if (sd < 0) Iterator.empty
-        else {
-          val counts = new Array[Long](g.numNodes)
-          val lo = slice * per
-          val hi = math.min(omega, lo + per)
-          var w = lo
-          while (w < hi) {
-            val rng = new Rng.SplitMix(Rng.streamSeed(seed, source, w))
-            counts(walkEndpoint(g, sd, alpha, rng, noZeroHop = false)) += 1L
-            w += 1
-          }
-          counts.iterator.zipWithIndex.collect {
-            case (c, v) if c > 0 => (g.originalOf(v), c)
-          }
-        }
-      }
-      .toDF("node_id", "cnt")
-      .groupBy("node_id")
-      .agg((sum("cnt") / lit(omega.toDouble)).as("score"))
-  }
-
-  /** Multi-source batched variant: work fans out over (source × walk-range)
+  /** K5 — Monte-Carlo SSPPR, π̂(v) = stops(v)/ω, for a batch of sources
+    * (one source is a batch of one): work fans out over (source × walk-range)
     * slices so parallelism is cores-bound, not #sources-bound. Each walk's
     * RNG stream is keyed by (seed, src, walkIdx) only, so results are
     * IDENTICAL for any slicing; one groupBy merges per-slice dense counts

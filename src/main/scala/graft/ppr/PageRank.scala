@@ -18,7 +18,7 @@ import graft.graph.GraphOps
   * mass is a 1-row aggregate that feeds the node-base term through a
   * broadcast cross join (no driver-side collect), contributions shuffle
   * once on dst, and the state localCheckpoints per superstep exactly like
-  * [[PowerIteration.run]]. The iteration count is fixed, so the DuckDB
+  * [[PowerIteration.runSeedSet]]. The iteration count is fixed, so the DuckDB
   * oracle replays the identical schedule as unrolled CTEs
   * ([[oracleSql]]); both engines evaluate the same expression shapes in
   * the same order, and the end-state rounds to 9 dp.
@@ -62,7 +62,7 @@ object PageRank {
         .select(col("id"), col("has_out").isNull.as("dang")))
     val m = e.count()
     // scope the per-superstep shuffle width to the graph size (same
-    // rationale and try/finally discipline as [[PowerIteration.run]]):
+    // rationale and try/finally discipline as [[PowerIteration.runSeedSet]]):
     // 30 iterations × 32 near-empty reducers is pure scheduler overhead
     // on a small graph; a 1e9-edge graph keeps full width.
     val p = math.min(spark.sparkContext.defaultParallelism.toLong,
@@ -88,7 +88,7 @@ object PageRank {
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
     // p == 1 ⇒ interpreted mode for the loop: fresh expression ids per
     // iteration defeat the codegen cache, so every superstep would pay a
-    // Janino compile for a few thousand rows (see [[PowerIteration.run]]).
+    // Janino compile for a few thousand rows (see [[PowerIteration.runSeedSet]]).
     val prevCodegen = spark.conf.get("spark.sql.codegen.wholeStage")
     try {
       spark.conf.set("spark.sql.shuffle.partitions", p.toString)

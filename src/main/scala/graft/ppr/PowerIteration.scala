@@ -11,164 +11,24 @@ import graft.graph.{Csr, GraphOps}
   * returns its (1-alpha)·r mass to the SOURCE — the restart-at-source
   * convention of SURVEY §1.4.1, not teleport-to-uniform.
   *
-  * Two physical strategies:
-  *
-  *  - [[run]]: distributed DataFrame superstep loop — one shuffle per
-  *    iteration (join edges + groupBy dst). Scales to graphs that do not
-  *    fit in memory; lineage truncated by localCheckpoint.
-  *
-  *  - [[batch]]: many sources at once over a broadcast [[Csr]] — each task
-  *    runs the dense-array kernel for a slice of sources, zero shuffles
-  *    until the final union. This is the 100 TB-shaped strategy whenever
-  *    the GRAPH is broadcastable (≲1e9 edges) and the work to distribute is
-  *    sources × nodes, which is exactly the reference's batch/all-pair
-  *    usage (`Gen_Util.java:109-257` runs 50 sources per data point).
+  * One strategy per source: [[batch]] runs the dense-array kernel
+  * ([[runLocal]]) for many sources at once over a broadcast [[Csr]], one
+  * task per slice of sources and zero shuffles — the work to distribute is
+  * sources × nodes, which is exactly the reference's batch/all-pair usage
+  * (`Gen_Util.java:109-257` runs 50 sources per data point). The seed-SET
+  * variant keeps a DataFrame superstep loop ([[runSeedSet]]) as the
+  * reference the tag-batched family fit ([[PprFamily]]) is checked against.
   */
 object PowerIteration {
 
-  /** Above this node count the per-iteration frontier/degree broadcasts
-    * (each a driver-side collect of up to n rows) are replaced by shuffle
-    * joins against the pre-partitioned edge side. ~4M (id, r) rows ≈ 64 MB
-    * serialized — comfortably under typical driver/executor headroom.
+  /** Above this node count the superstep loops ([[runSeedSet]], the
+    * graph algorithms in `graft.graph`) stop broadcasting their per-iteration
+    * frontier/degree sides (each a driver-side collect of up to n rows) and
+    * shuffle-join them against the pre-partitioned edge side instead.
+    * ~4M (id, r) rows ≈ 64 MB serialized — comfortably under typical
+    * driver/executor headroom.
     */
   val BroadcastNodeLimit = 4000000L
-
-  /** Distributed single-source power iteration.
-    * Returns `(node_id LONG, score DOUBLE)`, absent row = 0.
-    *
-    * Plan shape (one superstep = ONE shuffle, ONE job): the state is a
-    * single DataFrame `(id, r, acc)` where `acc = Σ_t residue_t`; each
-    * superstep unions push contributions (rows `(id, c, c)`) with the
-    * carried accumulator (rows `(id, 0, acc)`) and folds both in a single
-    * `groupBy(id)`. The pre-weighted edge list `(src, dst, 1/outdeg)` is
-    * built once and hash-partitioned by `src`, so edges are never
-    * re-shuffled, and the state is eagerly `localCheckpoint`ed every
-    * `checkpointEvery` supersteps to bound the plan depth. Cadence 1 is
-    * deliberate: each superstep consumes the previous state TWICE (frontier
-    * + carry), and on the broadcast path the frontier side materializes via
-    * its own BroadcastExchange — not a reusable shuffle — so a lazy
-    * multi-superstep chain recomputes prior supersteps 2^cadence times
-    * (measured: cadence 4 doubled wall time on the bench graph).
-    *
-    * Join-strategy selection is SIZE-GUARDED: when the graph has at most
-    * [[BroadcastNodeLimit]] nodes the frontier (which grows toward all
-    * reachable nodes) is broadcast — one tiny driver collect per iteration
-    * buys shuffle-free probes. Above the limit no broadcast hint is
-    * emitted: the frontier shuffle-joins against the already-partitioned
-    * edge side (only the frontier side moves), so nothing O(n) ever visits
-    * the driver — the regime the distributed path exists for.
-    */
-  def run(
-      spark: SparkSession,
-      edges: DataFrame,
-      source: Long,
-      alpha: Double = 0.15,
-      iterations: Int = 100,
-      checkpointEvery: Int = 1,
-      broadcastNodeLimit: Long = BroadcastNodeLimit): DataFrame = {
-    import spark.implicits._
-
-    // The (possibly derived) edge list feeds FOUR setup consumers — count,
-    // degree agg, dangling anti-join, the weighted union — so it is
-    // persisted for the setup phase; without this each action re-runs the
-    // full upstream derivation (scan + distinct for the bench graph).
-    val e = edges.persist()
-    val deg = GraphOps.outDegrees(e)
-    // pre-weighted adjacency, built once and reused by every superstep,
-    // partitioned to ~1M edges/task: a 997-node bench graph runs 1-task
-    // stages (no 32-empty-task overhead × iterations), a 1e9-edge cluster
-    // graph still fans out to full parallelism. Hash-partitioning on src
-    // means the non-broadcast join path only ever shuffles the frontier.
-    //
-    // The dangling rule (restart-at-source, SURVEY §1.4.1) is folded into
-    // the SAME edge list as one synthetic edge (v → source, w = 1.0) per
-    // out-degree-0 node, built once — so a superstep is exactly ONE join
-    // + ONE aggregate, with no per-iteration dangling-detection anti join.
-    val m = e.count()
-    val p = math.min(spark.sparkContext.defaultParallelism.toLong,
-      m / 1000000L + 1L).toInt
-    val weighted = e.join(deg, e("src") === deg("id"))
-      .select(e("src"), e("dst"), (lit(1.0) / col("deg")).as("w"))
-    // candidates = every node that can hold residue without out-edges:
-    // edge targets plus the source itself (an isolated source appears
-    // nowhere in `edges` but still self-restarts each iteration).
-    val danglingEdges = e.select(col("dst").as("src"))
-      .union(Seq(source).toDF("src"))
-      .distinct()
-      .join(deg, col("src") === deg("id"), "left_anti")
-      .select(col("src"), lit(source).as("dst"), lit(1.0).as("w"))
-    val ew = weighted.union(danglingEdges)
-      .repartition(p, col("src"))
-      .persist()
-    ew.count()
-    e.unpersist()
-    // ew's src set is exactly (nodes with out-edges) ∪ (dangling nodes ∪
-    // isolated source) — the residue-holding node set — so n falls out of
-    // the already-persisted ew in one cheap job instead of two more
-    // derivation runs.
-    val n = ew.agg(countDistinct("src")).head.getLong(0)
-    // Size-guarded broadcast: the frontier grows toward all reachable
-    // nodes, so forcing the hint regardless of n would collect O(n) rows
-    // to the driver every iteration — the exact failure mode the
-    // distributed path exists to avoid.
-    val small = n <= broadcastNodeLimit
-    def sided(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-
-    // Scope the state shuffle width to the graph size for the duration of
-    // the loop: 25 iterations × 32 near-empty reducers is pure scheduler
-    // overhead on a small graph, while a 1e9-edge graph keeps full width.
-    // try/finally: a mid-loop task failure must not leave the session with
-    // 1-partition shuffles and AQE off for every later query.
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    // AQE re-plans at every materialized shuffle; with the width already
-    // sized above it only adds per-iteration latency here.
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    // Every iteration plans over a fresh checkpoint root with fresh
-    // expression ids, so its generated code is textually new — the codegen
-    // cache never hits and each superstep pays a Janino compile. On a
-    // small graph (p == 1) interpreted evaluation of a few thousand rows
-    // is far cheaper than 25 compiles; a big graph keeps codegen (the
-    // compile amortizes over real task work).
-    val prevCodegen = spark.conf.get("spark.sql.codegen.wholeStage")
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", p.toString)
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      if (p == 1) spark.conf.set("spark.sql.codegen.wholeStage", "false")
-
-      // acc accumulates Σ_it residue_it (incl. the initial residue); the
-      // final residue of the last push is discarded, matching [[runLocal]]:
-      // reserve = alpha · Σ_{t=0}^{iterations-1} residue_t.
-      //
-      // Chained state checkpoints ([[graft.operators.CkptChain]]): the
-      // PREVIOUS iteration's pinned snapshot is released the moment the
-      // next one materializes — otherwise a 100-iteration run leaves 100
-      // state snapshots pinned for the life of the session. The final
-      // state stays persisted (it backs the returned DataFrame).
-      val checkpoint = new graft.operators.CkptChain(spark.sparkContext)
-      var state = checkpoint(Seq((source, 1.0, 1.0)).toDF("id", "r", "acc"))
-      var it = 1
-      while (it < iterations) {
-        val frontier = state.where(col("r") =!= 0.0).select(col("id"), col("r"))
-        val contrib = ew.join(sided(frontier), ew("src") === frontier("id"))
-          .select(ew("dst").as("id"),
-            (lit(1.0 - alpha) * col("r") * col("w")).as("c"))
-          .select(col("id"), col("c"), col("c").as("a"))
-        val carry = state.select(col("id"), lit(0.0).as("c"), col("acc").as("a"))
-        state = contrib.union(carry)
-          .groupBy("id").agg(sum("c").as("r"), sum("a").as("acc"))
-        if (it % checkpointEvery == 0 || it == iterations - 1)
-          state = checkpoint(state)
-        it += 1
-      }
-      state.select(col("id").as("node_id"),
-        (lit(alpha) * col("acc")).as("score"))
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      spark.conf.set("spark.sql.codegen.wholeStage", prevCodegen)
-      ew.unpersist()
-    }
-  }
 
   /** Dense-array kernel: PPR vector for one source over a CSR snapshot.
     * Exactly the reference loop shape, O(iterations · edges-touched).
@@ -212,26 +72,9 @@ object PowerIteration {
       sources: Seq[Long],
       alpha: Double = 0.15,
       iterations: Int = 100,
-      slices: Int = 0): DataFrame = {
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(csr)
-    val nSlices = if (slices > 0) slices
-      else math.min(math.max(1, sources.length), spark.sparkContext.defaultParallelism)
-    spark.sparkContext
-      .parallelize(sources, nSlices)
-      .flatMap { s =>
-        val g = bc.value
-        val sd = g.denseOf(s)
-        if (sd < 0) Iterator.empty
-        else {
-          val scores = runLocal(g, sd, alpha, iterations)
-          scores.iterator.zipWithIndex.collect {
-            case (p, v) if p != 0.0 => (s, g.originalOf(v), p)
-          }
-        }
-      }
-      .toDF("src", "node_id", "score")
-  }
+      slices: Int = 0): DataFrame =
+    SourceFanOut(spark, csr, sources, slices)(
+      (g, sd) => runLocal(g, sd, alpha, iterations))
 
   /** DuckDB oracle: the identical computation as unrolled SQL (one CTE per
     * iteration, state keyed by (src, id)). Usable because iterations are
@@ -277,11 +120,26 @@ object PowerIteration {
     * where this operator differs from averaging |S| single-source runs
     * (each of those restarts at its OWN source; SeedSetPprSpec pins both
     * the difference on a dangling graph and the linearity-given-no-
-    * dangling equality). Semantics aside, the plan IS [[run]]'s: the
-    * dangling rule folds into the same pre-weighted edge list as |S|
-    * synthetic edges (v → s, w = 1/|S|) per out-degree-0 node, so every
-    * superstep stays ONE join + ONE aggregate, size-guarded broadcast,
-    * chained checkpoints — the single-source economics at any |S|.
+    * dangling equality).
+    *
+    * Plan shape (one superstep = ONE shuffle, ONE job): the state is a
+    * single DataFrame `(id, r, acc)` where `acc = Σ_t residue_t`; each
+    * superstep unions push contributions `(id, c, c)` with the carried
+    * accumulator `(id, 0, acc)` and folds both in one `groupBy(id)`. The
+    * dangling rule folds into the pre-weighted edge list as |S| synthetic
+    * edges (v → s, w = 1/|S|) per out-degree-0 node, built once and
+    * hash-partitioned by `src`, so edges are never re-shuffled. The
+    * frontier is broadcast up to [[BroadcastNodeLimit]] nodes and
+    * shuffle-joined above it. The state is `localCheckpoint`ed every
+    * `checkpointEvery` supersteps through a [[graft.operators.CkptChain]]
+    * (each generation released as the next materializes); cadence 1 is
+    * deliberate, because each superstep reads the previous state twice
+    * (frontier + carry) and a lazy chain would recompute it 2^cadence
+    * times. For the loop the shuffle width is scoped to the graph size,
+    * AQE is off (the width is already sized), and whole-stage codegen is
+    * off on 1-partition graphs (every superstep plans fresh expression
+    * ids, so each would pay a Janino compile); all three are restored in
+    * `finally`.
     */
   def runSeedSet(
       spark: SparkSession,
@@ -401,8 +259,7 @@ object PowerIteration {
 
   /** Batched seed-set PPR over a broadcast CSR — the got_grid treatment
     * of [[runSeedSet]]: one task per seed SET, zero per-iteration
-    * shuffles (the [[batch]] economics at the set granularity; the
-    * distributed superstep loop stays the too-big-to-broadcast path).
+    * shuffles (the [[batch]] economics at the set granularity).
     * Returns `(m INT, node_id LONG, score DOUBLE)` keyed by set SIZE
     * (the grid axis — callers pass size-distinct sets); zero scores
     * omitted; a seed absent from the snapshot fails loudly (silently

@@ -13,4 +13,6 @@ final case class PprConf(
     pfail: Double = 0.0,   // derived per-algo when 0 (1/n, Algo_Conf.java:45-53)
     delta: Double = 0.0,   // derived per-algo when 0 (1/n)
     seed: Long = 42L
-)
+) {
+  require(alpha > 0 && alpha < 1, s"alpha must be in (0, 1), got $alpha")
+}

@@ -6,7 +6,7 @@ import graft.graph.GraphOps
 
 /** The PPR superstep FAMILY, tag-batched (r18 verdict #1; widened to
   * five members in r19 per verdict #6): single-source power iteration
-  * ([[PowerIteration.run]]), seed-set PPR ([[PowerIteration.runSeedSet]]),
+  * (checked against [[PowerIteration.batch]]), seed-set PPR ([[PowerIteration.runSeedSet]]),
   * global PageRank ([[PageRank.run]]), Katz centrality
   * ([[graft.graph.Katz.run]]) and HITS ([[graft.graph.Hits.run]]) are
   * five fixed-schedule single-shuffle loops over the SAME graph that

@@ -55,11 +55,19 @@ object PprStore {
     writePartitioned(scores.select(col("src"), col("node_id"), col("score")), dir)
 
   /** Overwrites `dir` with `rows` partitioned by `src` — the one write
-    * path of every store layout — and drops the opened entry.
+    * path of every store layout — and drops the opened entry. With no
+    * rows there is no partition directory to infer a schema from, so one
+    * empty file carrying the schema is written instead: the store still
+    * opens, and every read returns 0 rows.
     */
-  private[ppr] def writePartitioned(rows: DataFrame, dir: String): Unit =
-    try rows.repartition(col("src")).write.mode("overwrite").partitionBy("src").parquet(dir)
-    finally forget(qualified(rows.sparkSession, dir)._2)
+  private[ppr] def writePartitioned(rows: DataFrame, dir: String): Unit = {
+    val (fs, path) = qualified(rows.sparkSession, dir)
+    try {
+      rows.repartition(col("src")).write.mode("overwrite").partitionBy("src").parquet(dir)
+      if (!fs.listStatus(path).exists(_.isDirectory))
+        rows.limit(0).write.mode("overwrite").parquet(dir)
+    } finally forget(path)
+  }
 
   /** The whole store as written (`src` plus the stored columns), opened
     * once per session and path and re-validated on every call (see the

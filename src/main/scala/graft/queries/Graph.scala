@@ -1945,10 +1945,10 @@ object Graph {
       SsspHops, _ => GraphOps.lineitemWeightedCsr(s, dir, Mod),
       Some(GraphOps.lineitemWeightedGraphCount(s, dir, Mod)))),
 
-    // K1 distributed: single-source PPR by DataFrame superstep loop —
-    // served from the tag-batched family fit ([[pprFamilyShared]],
-    // r18 verdict #1); the slice is expression-for-expression
-    // [[PowerIteration.run]] (PprFamilySpec pins it).
+    // K1 as a DataFrame superstep loop — served from the tag-batched
+    // family fit ([[pprFamilyShared]], r18 verdict #1); the slice equals
+    // the dense kernel [[PowerIteration.batch]] to 1e-12 (PprFamilySpec
+    // pins it).
     "g_power_ppr" -> ((s, dir) =>
       graft.ppr.PprFamily.pprScore(pprFamilyShared(s, dir),
           graft.ppr.PprFamily.FamPower, Alpha)

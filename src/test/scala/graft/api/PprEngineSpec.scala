@@ -1,17 +1,58 @@
 package graft.api
 
 import graft.SparkSpec
-import graft.ppr.{PowerIteration, PprConf}
+import graft.ppr.{BackwardSearch, PowerIteration, PprConf}
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+import org.scalatest.time.SpanSugar._
 
-class PprEngineSpec extends SparkSpec {
+class PprEngineSpec extends SparkSpec with TimeLimits {
 
-  private def engine = {
+  private def engineOf(edges: Seq[(Long, Long)], conf: PprConf = PprConf()) = {
     val s = spark
     import s.implicits._
-    val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (2L, 4L), (3L, 1L), (4L, 1L))
-      .toDF("src", "dst")
-    new PprEngine(spark, edges, PprConf())
+    new PprEngine(spark, edges.toDF("src", "dst"), conf)
+  }
+
+  private def engine = engineOf(
+    Seq((1L, 2L), (1L, 3L), (2L, 3L), (2L, 4L), (3L, 1L), (4L, 1L)))
+
+  private def toMap(df: DataFrame): Map[Long, Double] =
+    df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+
+  /** Spark jobs started while `f` runs, counted under a private job group. */
+  private def jobsDuring(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = "ppr-engine-spec"
+    val jobs = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "PprEngineSpec")
+      try f finally sc.clearJobGroup()
+      ListenerBusDrain(sc)
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** `f` throws an IllegalArgumentException naming `arg`, and no Spark
+    * job ran before it did.
+    */
+  private def rejects(arg: String)(f: => Any): Unit = {
+    var err: IllegalArgumentException = null
+    val jobs = jobsDuring { err = intercept[IllegalArgumentException](f) }
+    assert(err.getMessage.contains(arg), err.getMessage)
+    assert(jobs == 0, s"$arg: $jobs Spark jobs ran before the rejection")
   }
 
   test("power facade matches kernel; topk is tie-inclusive subset") {
@@ -77,5 +118,121 @@ class PprEngineSpec extends SparkSpec {
     val exactTop = (0 until e.csr.numNodes).maxBy(exact)
     val libTop = lib.maxBy(_._2)._1
     assert(e.csr.originalOf(exactTop) == libTop)
+  }
+
+  test("backward column equals the dense kernel exactly and the power " +
+      "oracle within rmax") {
+    val e = engine
+    val rmax = 1e-4
+    val csr = e.csr
+    val rcsr = graft.ppr.Base.reversedCsr(e.edgesDf)
+    val fwdDeg = graft.ppr.Base.forwardDegrees(csr, rcsr)
+    for (t <- csr.ids) {
+      val column = toMap(new e.backward(rmax).pprColumn(t))
+      val dense = BackwardSearch.runLocal(rcsr, fwdDeg, rcsr.denseOf(t),
+        0.15, rmax)
+      val want = (0 until rcsr.numNodes).filter(dense(_) != 0.0)
+        .map(v => rcsr.originalOf(v) -> dense(v)).toMap
+      assert(column == want, s"target $t")
+      // no dangling node in this graph: the column is π(·, t) up to rmax
+      for (s <- csr.ids) {
+        val exact = PowerIteration.runLocal(csr, csr.denseOf(s), 0.15, 500)
+        val err = math.abs(exact(csr.denseOf(t)) - column.getOrElse(s, 0.0))
+        assert(err <= rmax, s"π($s, $t) off by $err")
+      }
+    }
+  }
+
+  test("power and forward-push top-k each run exactly one Spark job") {
+    val e = engine
+    e.csr // the lazy CSR build is set-up, not part of a query
+    val fp = new e.forwardPush(1e-6)
+    for ((name, call) <- Seq[(String, () => DataFrame)](
+        "power" -> (() => e.power.topkPpr(1L, 2)),
+        "forwardPush" -> (() => fp.topkPpr(1L, 2)))) {
+      var rows = 0
+      assert(jobsDuring { rows = call().collect().length } == 1, name)
+      assert(rows >= 2, name)
+    }
+  }
+
+  test("an unknown source and an empty graph give 0 rows in every family") {
+    val cases = Seq("unknown source" -> (engine, 99L),
+      "empty graph" -> (engineOf(Seq.empty), 1L))
+    for ((what, (e, s)) <- cases) {
+      val root = Files.createTempDirectory("engine_unknown").toString
+      val (dir, topDir) = (s"$root/store", s"$root/topk")
+      val base = new e.base(1e-4, 0.0)
+      val baseTopk = new e.base(1e-4, 0.0, k = 2)
+      base.preprocess(dir)
+      baseTopk.preprocess(topDir)
+      val calls = Seq[(String, () => DataFrame)](
+        "power" -> (() => e.power.wholeGraphPpr(s)),
+        "power top-k" -> (() => e.power.topkPpr(s, 2)),
+        "forwardPush" -> (() => new e.forwardPush(1e-4).wholeGraphPpr(s)),
+        "forwardPush top-k" -> (() => new e.forwardPush(1e-4).topkPpr(s, 2)),
+        "monteCarlo" -> (() => new e.monteCarlo(0.5).wholeGraphPpr(s)),
+        "monteCarlo top-k" -> (() => new e.monteCarlo(0.5).topkPpr(s, 2)),
+        "fora" -> (() => new e.fora(0.5).wholeGraphPpr(s)),
+        "fora top-k" -> (() => new e.fora(0.5).topkPpr(s, 2)),
+        "backward" -> (() => new e.backward(1e-4).pprColumn(s)),
+        "base.readPpr" -> (() => base.readPpr(dir, s)),
+        "base.readPpr top-k store" -> (() => baseTopk.readPpr(topDir, s)))
+      for ((name, call) <- calls)
+        assert(call().collect().isEmpty, s"$what: $name")
+      base.deletePrep(dir)
+      baseTopk.deletePrep(topDir)
+    }
+  }
+
+  test("FORA top-k with k >= n returns the whole vector and terminates") {
+    implicit val signaler: Signaler = ThreadSignaler
+    // 5-node cycle
+    val e = engineOf((0L until 5L).map(i => (i, (i + 1) % 5)))
+    val f = new e.fora(0.5)
+    val whole = toMap(f.wholeGraphPpr(0L))
+    assert(whole.size == 5)
+    for (k <- Seq(4, 5, 6)) {
+      val topk = failAfter(60.seconds)(toMap(f.topkPpr(0L, k)))
+      assert(topk.size >= k.min(5), s"k=$k: ${topk.size} rows")
+      if (k >= 5) assert(topk == whole, s"k=$k")
+    }
+  }
+
+  test("a top-k call rejects k < 1") {
+    val e = engine
+    for (k <- Seq(0, -1)) {
+      rejects("k")(e.power.topkPpr(1L, k))
+      rejects("k")(new e.forwardPush(1e-4).topkPpr(1L, k))
+      rejects("k")(new e.monteCarlo(0.5).topkPpr(1L, k))
+      rejects("k")(new e.fora(0.5).topkPpr(1L, k))
+    }
+  }
+
+  test("fora and monteCarlo reject epsilon <= 0") {
+    val e = engine
+    for (eps <- Seq(0.0, -0.5, Double.NaN)) {
+      rejects("epsilon")(new e.fora(eps))
+      rejects("epsilon")(new e.monteCarlo(eps))
+    }
+  }
+
+  test("forwardPush, backward and base reject rmax <= 0") {
+    val e = engine
+    for (rmax <- Seq(0.0, -1e-4, Double.NaN)) {
+      rejects("rmax")(new e.forwardPush(rmax))
+      rejects("rmax")(new e.backward(rmax))
+      rejects("rmax")(new e.base(rmax, 0.0))
+    }
+  }
+
+  test("base rejects a negative threshold") {
+    val e = engine
+    rejects("threshold")(new e.base(1e-4, -1e-9))
+  }
+
+  test("PprConf rejects alpha outside (0, 1)") {
+    for (a <- Seq(0.0, 1.0, -0.15, 1.5, Double.NaN))
+      rejects("alpha")(PprConf(alpha = a))
   }
 }

@@ -97,17 +97,4 @@ class BackwardSearchSpec extends SparkSpec {
         assert(dense(v) == sp.getOrElse(v, 0.0), s"tree t=$t rmax=$rmax v=$v")
     }
   }
-
-  test("distributed run matches dense kernel at fixed supersteps") {
-    val (csr, rcsr, fwdDeg) = kernels(edgesDf)
-    val t = 1L
-    val steps = 8
-    val local = BackwardSearch.runLocal(rcsr, fwdDeg, rcsr.denseOf(t), alpha, 1e-4, steps)
-    val dist = BackwardSearch.run(spark, edgesDf, t, alpha, 1e-4, steps)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    for (v <- 0 until rcsr.numNodes) {
-      val id = rcsr.originalOf(v)
-      assert(math.abs(local(v) - dist.getOrElse(id, 0.0)) < 1e-12)
-    }
-  }
 }

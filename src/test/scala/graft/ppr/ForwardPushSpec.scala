@@ -33,19 +33,6 @@ class ForwardPushSpec extends SparkSpec {
     }
   }
 
-  test("distributed BSP run matches dense kernel at fixed supersteps") {
-    val csr = GraphOps.buildCsr(edgesDf)
-    val steps = 8
-    val rmax = 1e-4
-    val local = ForwardPush.runLocal(csr, csr.denseOf(1L), alpha, rmax, steps)
-    val dist = ForwardPush.run(spark, edgesDf, 1L, alpha, rmax, steps)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    for (v <- 0 until csr.numNodes) {
-      val id = csr.originalOf(v)
-      assert(math.abs(local.reserve(v) - dist.getOrElse(id, 0.0)) < 1e-12)
-    }
-  }
-
   test("batch matches single-source local kernel per source") {
     val csr = GraphOps.buildCsr(edgesDf)
     val batch = ForwardPush.batch(spark, csr, Seq(1L, 2L), alpha, 1e-4, 10)
@@ -56,6 +43,15 @@ class ForwardPushSpec extends SparkSpec {
         assert(math.abs(local.reserve(v) -
           batch.getOrElse((s, csr.originalOf(v)), 0.0)) < 1e-12)
       }
+    }
+  }
+
+  test("the push kernel refuses rmax <= 0 instead of spinning") {
+    val csr = GraphOps.buildCsr(edgesDf)
+    for (rmax <- Seq(0.0, -1e-4, Double.NaN)) {
+      val err = intercept[IllegalArgumentException](
+        ForwardPush.runLocal(csr, csr.denseOf(1L), alpha, rmax))
+      assert(err.getMessage.contains("rmax"), err.getMessage)
     }
   }
 }

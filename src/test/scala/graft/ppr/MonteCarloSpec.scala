@@ -14,16 +14,17 @@ class MonteCarloSpec extends SparkSpec {
 
   test("seeded walks are deterministic across runs") {
     val csr = GraphOps.buildCsr(edgesDf)
-    def run() = MonteCarlo.ssppr(spark, csr, 1L, 0.15, 0.5, seed = 7L, slices = 3)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    def run() = MonteCarlo.sspprBatch(spark, csr, Seq(1L), 0.15, 0.5, seed = 7L,
+        slicesPerSource = 3)
+      .collect().map(r => r.getLong(1) -> r.getDouble(2)).toMap
     assert(run() == run())
   }
 
   test("estimates converge to power-iteration ground truth") {
     val csr = GraphOps.buildCsr(edgesDf)
     // epsilon=0.2, delta=pfail=1/n → omega ≈ 3·ln(2n)/ε²·n ≈ large.
-    val est = MonteCarlo.ssppr(spark, csr, 1L, 0.15, 0.2, seed = 42L)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val est = MonteCarlo.sspprBatch(spark, csr, Seq(1L), 0.15, 0.2, seed = 42L)
+      .collect().map(r => r.getLong(1) -> r.getDouble(2)).toMap
     val exact = PowerIteration.runLocal(csr, csr.denseOf(1L), 0.15, 500)
     var maxErr = 0.0
     for (v <- 0 until csr.numNodes) {

@@ -6,7 +6,8 @@ import org.apache.spark.sql.DataFrame
 
 /** Pins the tag-batched PPR family ([[PprFamily.runFamily]], r18
   * verdict #1, widened to five members in r19 per verdict #6) against
-  * the five standalone superstep loops it replaces: every per-family
+  * the five standalone runs (the dense batch kernel for single-source
+  * power, superstep loops for the other four): every per-family
   * slice must reproduce the standalone run — on a toy graph whose
   * dangling nodes exercise all three restart rules (back-to-source vs
   * fresh-uniform(S) vs uniform-over-all) and whose asymmetric edges
@@ -18,6 +19,12 @@ class PprFamilySpec extends SparkSpec {
 
   private def toMap(df: DataFrame): Map[Long, Double] =
     df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+
+  /** The single-source power vector from the dense batch kernel. */
+  private def power(edges: DataFrame, source: Long, alpha: Double,
+      iters: Int): Map[Long, Double] =
+    toMap(PowerIteration.batch(spark, graft.graph.GraphOps.buildCsr(edges),
+      Seq(source), alpha, iters).select("node_id", "score"))
 
   private def toMap2(df: DataFrame): Map[Long, (Double, Double)] =
     df.collect()
@@ -68,7 +75,7 @@ class PprFamilySpec extends SparkSpec {
     val fam = runFam(edges, 0L, seeds, iters = 8, prIters = 7,
       katzIters = 4, hitsIters = 3)
     assertClose(toMap(PprFamily.pprScore(fam, PprFamily.FamPower, 0.15)),
-      toMap(PowerIteration.run(spark, edges, 0L, 0.15, 8)), "power")
+      power(edges, 0L, 0.15, 8), "power")
     assertClose(toMap(PprFamily.pprScore(fam, PprFamily.FamSeed, 0.15)),
       toMap(PowerIteration.runSeedSet(spark, edges, seeds, 0.15, 8)),
       "seedset")
@@ -95,12 +102,12 @@ class PprFamilySpec extends SparkSpec {
     assertClose2(toMap2(PprFamily.hitsScores(famA)),
       toMap2(graft.graph.Hits.run(spark, edges, 1)), "hits-short")
     assertClose(toMap(PprFamily.pprScore(famA, PprFamily.FamPower, 0.15)),
-      toMap(PowerIteration.run(spark, edges, 0L, 0.15, 9)), "power-long")
+      power(edges, 0L, 0.15, 9), "power-long")
     // the PPR pair ends first — Katz/HITS run past it
     val famB = runFam(edges, 0L, seeds, iters = 3, prIters = 9,
       katzIters = 7, hitsIters = 4)
     assertClose(toMap(PprFamily.pprScore(famB, PprFamily.FamPower, 0.15)),
-      toMap(PowerIteration.run(spark, edges, 0L, 0.15, 3)), "power-short")
+      power(edges, 0L, 0.15, 3), "power-short")
     assertClose(toMap(PprFamily.pprScore(famB, PprFamily.FamSeed, 0.15)),
       toMap(PowerIteration.runSeedSet(spark, edges, seeds, 0.15, 3)),
       "seedset-short")
@@ -128,8 +135,8 @@ class PprFamilySpec extends SparkSpec {
     val fam = Graph.pprFamilyShared(spark, sfDir)
     assertClose(toMap(PprFamily.pprScore(fam, PprFamily.FamPower,
         Graph.Alpha)),
-      toMap(PowerIteration.run(spark, edges, Graph.SingleSource,
-        Graph.Alpha, Graph.Iters)), "bench power")
+      power(edges, Graph.SingleSource, Graph.Alpha, Graph.Iters),
+      "bench power")
     assertClose(toMap(PprFamily.pprScore(fam, PprFamily.FamSeed,
         Graph.Alpha)),
       toMap(PowerIteration.runSeedSet(spark, edges, Graph.SeedSet,

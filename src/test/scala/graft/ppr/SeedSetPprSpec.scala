@@ -52,6 +52,16 @@ class SeedSetPprSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
   }
 
+  /** Single-source power vector from the dense batch kernel. */
+  private def single(edges: Seq[(Long, Long)], src: Long): Map[Long, Double] = {
+    val s = spark
+    import s.implicits._
+    val csr = graft.graph.GraphOps.buildCsr(edges.toDF("src", "dst"))
+    PowerIteration.batch(spark, csr, Seq(src), alpha, iters)
+      .collect().map(r => r.getLong(1) -> r.getDouble(2)).toMap
+      .withDefaultValue(0.0)
+  }
+
   // 6-node graph with a dangling node: 1→2, 1→3, 2→3, 2→4 (4 dangling),
   // 3→1, 5→1 — seeds {1, 5}.
   private val dangEdges =
@@ -79,15 +89,9 @@ class SeedSetPprSpec extends SparkSpec {
 
   test("linearity: on a DANGLING-FREE graph the seed-set run equals the " +
       "average of the single-source runs") {
-    val s = spark
-    import s.implicits._
     val clean = Seq((1L, 2L), (2L, 3L), (3L, 1L), (5L, 1L), (3L, 5L))
     val set = run(clean, seeds)
-    val singles = seeds.map { src =>
-      PowerIteration.run(spark, clean.toDF("src", "dst"), src, alpha, iters)
-        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-        .withDefaultValue(0.0)
-    }
+    val singles = seeds.map(single(clean, _))
     val nodes = set.keySet ++ singles.flatMap(_.keySet)
     nodes.foreach { v =>
       val mix = singles.map(_(v)).sum / seeds.size
@@ -98,15 +102,8 @@ class SeedSetPprSpec extends SparkSpec {
 
   test("with dangling nodes the fresh-uniform(S) restart DIFFERS from " +
       "the single-source mixture — the operator is not a shortcut") {
-    val s = spark
-    import s.implicits._
     val set = run(dangEdges, seeds)
-    val singles = seeds.map { src =>
-      PowerIteration.run(spark, dangEdges.toDF("src", "dst"), src, alpha,
-          iters)
-        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-        .withDefaultValue(0.0)
-    }
+    val singles = seeds.map(single(dangEdges, _))
     val maxGap = (set.keySet ++ singles.flatMap(_.keySet)).map { v =>
       math.abs(set.getOrElse(v, 0.0) - singles.map(_(v)).sum / seeds.size)
     }.max
