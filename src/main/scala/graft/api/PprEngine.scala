@@ -165,11 +165,15 @@ final class PprEngine(
     * meant for baseline comparison on modest graphs, not the scale path.
     */
   final class libraryPpr(iterations: Int) extends SsPpr with PrepVia {
+    require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     def wholeGraphPpr(source: Long): DataFrame =
       GraphXPpr.run(spark, edgesDf, source, conf.alpha, iterations)
-    protected def batchAll(sources: Seq[Long]): DataFrame =
+    protected def batchAll(sources: Seq[Long]): DataFrame = {
+      import spark.implicits._
       sources.map { s =>
         wholeGraphPpr(s).select(lit(s).as("src"), col("node_id"), col("score"))
-      }.reduce(_.unionAll(_))
+      }.reduceOption(_.unionAll(_)).getOrElse(
+        Seq.empty[(Long, Long, Double)].toDF("src", "node_id", "score"))
+    }
   }
 }

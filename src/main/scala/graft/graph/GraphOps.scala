@@ -251,11 +251,11 @@ object GraphOps {
     */
   def lineitemFlickrGraph(spark: SparkSession, sfDir: String,
       mod: Int = 80513, fan: Int = 10): DataFrame = {
-    val P = graft.text.TextOps.P
-    val mix = graft.text.TextOps.spark
+    val P = Hashing.P
+    val mix = Hashing.spark
     val li = graft.Tables(spark, sfDir, "lineitem")
     // kmvMix keys live in [0, P²) — normalize by the DOUBLE product
-    // (see TextOps.kmvEstSql for the same spelling rationale).
+    // (an exact LONG product would overflow).
     val u = s"(h2 / (CAST($P AS DOUBLE) * CAST($P AS DOUBLE)))"
     val half = li
       .select(col("l_orderkey").cast("long").as("ok"),
@@ -281,7 +281,7 @@ object GraphOps {
   }
 
   /** SQL text of [[lineitemFlickrGraph]] for DuckDB oracles — the same
-    * hash chain through [[graft.text.TextOps.duck.kmvMix]] (the engines'
+    * hash chain through [[Hashing.duck.kmvMix]] (the engines'
     * two kmvMix spellings are spec-pinned equal), the same DOUBLE
     * quotient, quadratic map, least() guard, self-loop filter and
     * symmetrize+dedup. This is what lets a correctness row run a PPR
@@ -289,8 +289,8 @@ object GraphOps {
     * oracle derives the identical skewed edge set inside DuckDB.
     */
   def lineitemFlickrGraphSql(mod: Int, fan: Int): String = {
-    val P = graft.text.TextOps.P
-    val duck = graft.text.TextOps.duck
+    val P = Hashing.P
+    val duck = Hashing.duck
     val u = s"(h2 / (CAST($P AS DOUBLE) * CAST($P AS DOUBLE)))"
     // nested WITH (legal in a DuckDB subquery, so callers can embed this
     // as `AS MATERIALIZED (...)` like every other graph derivation);

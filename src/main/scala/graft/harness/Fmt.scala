@@ -4,25 +4,8 @@ package graft.harness
   * interpolator formats with the JVM default locale, so a comma-decimal
   * locale would break `.toDouble` on the artifact after the whole
   * benchmark already ran. `math.rint` + `toString` always renders with a
-  * dot. One shared copy — Bench's env telemetry and ThroughputBench's
-  * measures must round identically, and a future fix (e.g. for
-  * `getSystemLoadAverage` returning -1) must reach both.
+  * dot.
   */
 object Fmt {
-  def r1(x: Double): Double = math.rint(x * 10) / 10
   def r3(x: Double): Double = math.rint(x * 1000) / 1000
-
-  /** 1-minute load average, or -1 where /proc is unavailable — emitted
-    * at artifact start and end so every committed board carries its own
-    * host-window context (r18 verdict #4: the octave artifact embedded
-    * no load context, so a +46 % loaded-host nsw_build reading was
-    * indistinguishable from a regression to a reader of the JSON alone).
-    * One shared copy for ThroughputBench AND OctaveBench.
-    */
-  def loadAvg(): Double =
-    scala.util.Try {
-      val src = scala.io.Source.fromFile("/proc/loadavg")
-      try src.getLines().next().split(" ")(0).toDouble
-      finally src.close()
-    }.getOrElse(-1.0)
 }

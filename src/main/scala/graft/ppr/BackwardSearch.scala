@@ -208,6 +208,7 @@ object BackwardSearch {
       rmax: Double = 1e-4,
       maxSupersteps: Int = 0,
       slices: Int = 0): DataFrame = {
+    require(rmax > 0, s"rmax must be > 0, got $rmax")
     import spark.implicits._
     val bcG = spark.sparkContext.broadcast(rcsr)
     val bcD = spark.sparkContext.broadcast(fwdDeg)

@@ -37,6 +37,7 @@ object Base {
       rmax: Double = 1e-4,
       maxSupersteps: Int = 0,
       scoreThreshold: Double = 0.0): DataFrame = {
+    requireArgs(rmax, scoreThreshold)
     val csr = GraphOps.buildCsr(edges)
     val rcsr = reversedCsr(edges)
     allPairs(spark, csr, rcsr, forwardDegrees(csr, rcsr), alpha, rmax,
@@ -56,11 +57,18 @@ object Base {
       rmax: Double,
       maxSupersteps: Int,
       scoreThreshold: Double): DataFrame = {
+    requireArgs(rmax, scoreThreshold)
     val inverted = BackwardSearch
       .batch(spark, rcsr, fwdDeg, csr.ids.toSeq, alpha, rmax, maxSupersteps)
       .select(col("node_id").as("src"), col("dst"), col("score"))
     if (scoreThreshold > 0.0) inverted.where(col("score") >= scoreThreshold)
     else inverted
+  }
+
+  private def requireArgs(rmax: Double, scoreThreshold: Double): Unit = {
+    require(rmax > 0, s"rmax must be > 0, got $rmax")
+    require(scoreThreshold >= 0,
+      s"threshold must be >= 0, got $scoreThreshold")
   }
 
   /** CSR of the reversed edges — backward search walks in-edges. */

@@ -267,6 +267,7 @@ object Fora {
       walks: Array[(Long, Long)])
 
   def topkTrace(csr: Csr, srcDense: Int, k: Int, conf: Conf): TopkTrace = {
+    require(k >= 1, s"k must be >= 1, got $k")
     val rec = new WalkRec
     val (carried, numWalks, _) = topkRun(csr, srcDense, k, conf, rec)
     TopkTrace(carried.reserve.clone(), carried.residue.clone(), numWalks,

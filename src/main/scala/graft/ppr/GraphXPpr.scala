@@ -24,7 +24,10 @@ import org.apache.spark.sql.functions._
 object GraphXPpr {
 
   /** Personalized PageRank via GraphX; returns (node_id, score) normalized
-    * to Σ=1, zero rows omitted.
+    * to Σ=1, zero rows omitted. A source that is not a vertex (or an empty
+    * graph) gives 0 rows: GraphX normalizes by a zero Σπ there and yields
+    * NaN ranks, which `score > 0` alone would keep (NaN sorts above every
+    * number in Spark SQL).
     */
   def run(
       spark: SparkSession,
@@ -42,10 +45,13 @@ object GraphXPpr {
     // scoped to this call — the small normalized result is materialized
     // (localCheckpoint) and the rank cache released before returning, so
     // repeated calls don't accrete executor storage.
-    val df = ranks.toDF("node_id", "score").where(col("score") > 0.0).cache()
+    val df = ranks.toDF("node_id", "score")
+      .where(col("score") > 0.0 && !isnan(col("score"))).cache()
     try {
-      val total = df.agg(sum("score")).head.getDouble(0)
-      df.select(col("node_id"), (col("score") / lit(total)).as("score"))
+      // no positive rank ⇒ sum is NULL and the select below is empty
+      val total = df.agg(sum("score")).head
+      val norm = if (total.isNullAt(0)) lit(1.0) else lit(total.getDouble(0))
+      df.select(col("node_id"), (col("score") / norm).as("score"))
         .localCheckpoint(true)
     } finally df.unpersist()
   }

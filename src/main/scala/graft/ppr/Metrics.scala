@@ -93,7 +93,7 @@ object Metrics {
   // Tag-batched variants (r20, guide §2.4): a grid row used to run one
   // full metric chain PER grid point — ~15 tiny exchanges each, ×5
   // points, all over a 107-node fixture where the exchange floor IS the
-  // cost (GotProbe attribution: kernels ≈ 0.01 s, metric folds ≈ 3-4 s
+  // cost (per-row attribution: kernels ≈ 0.01 s, metric folds ≈ 3-4 s
   // per row). These fold every point in ONE chain keyed on (i, src):
   // per-i slices are expression-for-expression the untagged functions
   // (windows partition by (i, src) instead of (src); the gnd-side

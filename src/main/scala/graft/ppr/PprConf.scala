@@ -15,4 +15,8 @@ final case class PprConf(
     seed: Long = 42L
 ) {
   require(alpha > 0 && alpha < 1, s"alpha must be in (0, 1), got $alpha")
+  require(pfail == 0 || (pfail > 0 && pfail < 1),
+    s"pfail must be 0 (derive 1/n) or in (0, 1), got $pfail")
+  require(delta == 0 || (delta > 0 && delta < 1),
+    s"delta must be 0 (derive 1/n) or in (0, 1), got $delta")
 }

@@ -263,7 +263,7 @@ object GotQueries {
       val gnd = gridGroundTruth(s)
       // r20: per-point kernels (the est pushes) unchanged; the metric
       // folds run ONCE tagged by grid index instead of once per point
-      // (guide §2.4 — GotProbe attribution: the per-point chains of
+      // (guide §2.4 — per-row attribution: the per-point chains of
       // tiny exchanges were the row's cost, the kernels microseconds).
       val est = GridRmaxes.zipWithIndex.map { case (rmax, i) =>
         ForwardPush.batch(s, csr, GridSources, Got.Alpha, rmax,
@@ -379,7 +379,7 @@ object GotQueries {
       // r20 (guide §2.4): ONE tagged recomposition pass over the whole
       // axis (foraWholeBodyTagged — the per-point body with i as an
       // equi-key everywhere, GotSpec pins slice ≡ per-point), ONE
-      // tagged metric fold — GotProbe attribution put the row's cost in
+      // tagged metric fold — per-row attribution put the row's cost in
       // the five per-point recompositions + folds, not the kernels.
       st.createOrReplaceTempView("gg_fora_st_all")
       sc.createOrReplaceTempView("gg_fora_sc_all")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{Scratch, VerifyArtifacts}
-import graft.graph.{Betweenness, Bfs, ConnectedComponents, GraphOps, LabelProp, MinSpanningForest, Scc, Sssp}
+import graft.graph.{Betweenness, Bfs, ConnectedComponents, GraphOps, Hashing, LabelProp, MinSpanningForest, Scc, Sssp}
 import graft.ppr.{Base, BackwardSearch, ForwardPush, Fora, Metrics, MonteCarlo, PageRank, PowerIteration, PprStore}
 
 /** Graph/PPR operator coverage over the deterministic lineitem-derived
@@ -109,8 +109,8 @@ object Graph {
     * `% outdeg` is then a true index in [0, outdeg) in both engines.
     */
   private[graft] def walkHashExpr(step: Int): String = {
-    val p = graft.text.TextOps.P
-    val m = graft.text.TextOps.TokMul
+    val p = Hashing.P
+    val m = Hashing.TokMul
     s"(((((((source % $p) * $m) + walk) % $p) * $m + $step) % $p) " +
       s"* $m + node) % $p"
   }
@@ -159,7 +159,7 @@ object Graph {
       state.select(col("source"), col("walk"),
         lit(0L).as("step"), col("node")))
     for (t <- 1 to len) {
-      val idx = s"(${graft.text.TextOps.spark.kmvMix(walkHashExpr(t))})" +
+      val idx = s"(${Hashing.spark.kmvMix(walkHashExpr(t))})" +
         s" % outdeg"
       val st = if (broadcastState) broadcast(state) else state
       state = st
@@ -281,7 +281,7 @@ object Graph {
   /** Shared CTE chain of the `g_hyperball` / `g_harmonic` oracles: the
     * two HyperBall register rounds, folded per node into `hb(node_id,
     * v_zero1, s_scaled1, est1, v_zero2, s_scaled2, est2)`. Estimates
-    * round to 4 dp inside [[Events.hllEstSqlAs]], so every downstream
+    * round to 4 dp inside [[Hashing.hllEstSqlAs]], so every downstream
     * arithmetic reads identical inputs on both engines.
     */
   /** `g_closeness` projection over the HyperBall estimates — ONE
@@ -318,30 +318,27 @@ object Graph {
   }
 
   private def hllFoldSql(reg: String, sfx: String): String = {
-    val E = graft.queries.Events
-    val pw = 1L << (E.HllW + 1)
-    s"""SELECT id, CAST(${E.HllM} - count(*) AS BIGINT) AS v_zero$sfx,
-       |  CAST(sum(CAST(1 AS BIGINT) << (${E.HllW + 1} - mj)) AS BIGINT)
-       |    + (${E.HllM} - count(*)) * CAST($pw AS BIGINT) AS s_scaled$sfx
+    val pw = 1L << (Hashing.HllW + 1)
+    s"""SELECT id, CAST(${Hashing.HllM} - count(*) AS BIGINT) AS v_zero$sfx,
+       |  CAST(sum(CAST(1 AS BIGINT) << (${Hashing.HllW + 1} - mj)) AS BIGINT)
+       |    + (${Hashing.HllM} - count(*)) * CAST($pw AS BIGINT) AS s_scaled$sfx
        |  FROM $reg GROUP BY id""".stripMargin
   }
 
   private def hllPreambleSql: String = {
-    val P = graft.text.TextOps.P
-    val E = graft.queries.Events
+    val P = Hashing.P
     s"""e AS MATERIALIZED ($graphSql),
        |nodes AS MATERIALIZED (SELECT src AS id FROM e UNION SELECT dst FROM e),
        |hm AS MATERIALIZED (SELECT id,
-       |  ${graft.text.TextOps.duck.kmvMix("h")} AS hm FROM (
+       |  ${Hashing.duck.kmvMix("h")} AS hm FROM (
        |  SELECT id, id % $P AS h FROM nodes)),
-       |r0 AS MATERIALIZED (SELECT id, hm % ${E.HllM} AS b,
-       |  CASE WHEN hm // ${E.HllM} = 0 THEN ${E.HllW + 1}
-       |       ELSE ${E.HllW + 1} - length(bin(hm // ${E.HllM})) END AS mj
+       |r0 AS MATERIALIZED (SELECT id, hm % ${Hashing.HllM} AS b,
+       |  CASE WHEN hm // ${Hashing.HllM} = 0 THEN ${Hashing.HllW + 1}
+       |       ELSE ${Hashing.HllW + 1} - length(bin(hm // ${Hashing.HllM})) END AS mj
        |  FROM hm)""".stripMargin
   }
 
   private def hyperballOracleChain: String = {
-    val E = graft.queries.Events
     s"""WITH $hllPreambleSql,
        |r1 AS MATERIALIZED (${hllStepSql("r0")}),
        |r2 AS MATERIALIZED (${hllStepSql("r1")}),
@@ -349,9 +346,9 @@ object Graph {
        |f2 AS MATERIALIZED (${hllFoldSql("r2", "2")}),
        |hb AS MATERIALIZED (
        |  SELECT f1.id AS node_id, v_zero1, s_scaled1,
-       |    ${E.hllEstSqlAs("s_scaled1", "v_zero1", "est1")},
+       |    ${Hashing.hllEstSqlAs("s_scaled1", "v_zero1", "est1")},
        |    v_zero2, s_scaled2,
-       |    ${E.hllEstSqlAs("s_scaled2", "v_zero2", "est2")}
+       |    ${Hashing.hllEstSqlAs("s_scaled2", "v_zero2", "est2")}
        |  FROM f1 JOIN f2 ON f2.id = f1.id)""".stripMargin
   }
 
@@ -459,8 +456,7 @@ object Graph {
   }
 
   /** The shared link-prediction frames fitted ONCE per (session, source
-    * dir) — the [[graft.queries.Embeddings]] nswCache serving discipline
-    * applied to wedges (r17 verdict #3): `g_adamic_adar` and
+    * dir) — a fit-once serving cache applied to wedges (r17 verdict #3): `g_adamic_adar` and
     * `g_linkpred_cn` both finish from the same non-adjacent wedge-pair
     * aggregate over the same TriMod graph, so whichever row runs first
     * pays the Σdeg² fold and the other reads the pinned checkpoint.
@@ -472,17 +468,15 @@ object Graph {
     .empty[(SparkSession, String), (DataFrame, DataFrame)]
 
   /** RDD ids backing each cached lpShared fit — what [[invalidateModels]]
-    * must unpin when a (session, dir) entry is dropped (the
-    * Embeddings.modelPins discipline).
+    * must unpin when a (session, dir) entry is dropped.
     */
   private val lpPins = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String), Set[Int]]
 
   /** Drop the cached link-prediction AND PPR-family frames for
     * (session, dir) and release their pinned checkpoint blocks — the
-    * re-ingest hook, same contract as
-    * [[graft.queries.Embeddings.invalidateModels]] (which calls through
-    * here so one re-ingest call clears every session-fit family).
+    * re-ingest hook: one call clears every session-fit family, so
+    * `Bench` and `Verify` start each pass from the parquet inputs.
     */
   def invalidateModels(s: SparkSession, dir: String): Unit = {
     lpCache.remove((s, dir))
@@ -509,10 +503,7 @@ object Graph {
     lpaCache.remove((s, dir))
     lpaPins.remove((s, dir)).foreach(ids =>
       graft.operators.SessionPins.unpin(s.sparkContext, ids))
-    graft.queries.Relational.invalidateBuckets(s, dir)
-    graft.queries.Media.invalidateShared(s, dir)
     GraphOps.invalidateGraphs(s, dir)
-    graft.queries.Text.invalidateShared(s, dir)
   }
 
   /** The tag-batched PPR superstep family fitted ONCE per (session,
@@ -577,9 +568,9 @@ object Graph {
       val pairs = pairsLazy
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // NOTE (r20 second pass): a 2×-parallelism "two task waves" scope
-      // briefly lived here on a sequential WedgeWalkProbe reading of
-      // −20 % on the fold; an interleaved same-JVM A/B (WedgeAbProbe,
-      // 7 reps × {32, 64} partitions) could not replicate it — the warm
+      // briefly lived here on a sequential reading of −20 % on the fold;
+      // an interleaved same-JVM A/B (7 reps × {32, 64} partitions)
+      // could not replicate it — the warm
       // spread exceeded any delta (warm_compare's own refusal rule), so
       // the simpler session-default width ships. The fold is job-floor/
       // GC-bound at sf0.1, not wave-bound; at cluster scale AQE sizes
@@ -987,24 +978,23 @@ object Graph {
 
   /** `g_hyperball` body over a directed `(src, dst)` edge DataFrame
     * (pre-checkpointed by the caller — it feeds node derivation and both
-    * rounds), reusable on any graph (OctaveBench runs it on the
-    * Flickr-scale octave). See the row comment for the recurrence.
+    * rounds), reusable on any graph. See the row comment for the
+    * recurrence.
     */
   /** Hop-0 HyperBall registers: each node's HLL sketch of {itself}.
     * The `Plan` variant is LAZY (no materializing job) — used where the
     * caller batches all hops into one action ([[effDiameterRun]]).
     */
   private def hllReg0Plan(edges: DataFrame): DataFrame = {
-    val P = graft.text.TextOps.P
-    val E = graft.queries.Events
+    val P = Hashing.P
     edges.select(col("src").as("id"))
       .union(edges.select(col("dst").as("id"))).distinct()
       .selectExpr("id", s"id % $P AS h")
-      .selectExpr("id", s"${graft.text.TextOps.spark.kmvMix("h")} AS hm")
-      .selectExpr("id", s"hm % ${E.HllM} AS b", s"hm div ${E.HllM} AS w")
+      .selectExpr("id", s"${Hashing.spark.kmvMix("h")} AS hm")
+      .selectExpr("id", s"hm % ${Hashing.HllM} AS b", s"hm div ${Hashing.HllM} AS w")
       .selectExpr("id", "b",
-        s"CASE WHEN w = 0 THEN ${E.HllW + 1} " +
-          s"ELSE ${E.HllW + 1} - length(bin(w)) END AS mj")
+        s"CASE WHEN w = 0 THEN ${Hashing.HllW + 1} " +
+          s"ELSE ${Hashing.HllW + 1} - length(bin(w)) END AS mj")
   }
 
   private def hllReg0(edges: DataFrame): DataFrame =
@@ -1026,15 +1016,14 @@ object Graph {
     * `(v_zero, s_scaled)` the estimate expression reads.
     */
   private def hllFold(reg: DataFrame, sfx: String): DataFrame = {
-    val E = graft.queries.Events
-    val pw = 1L << (E.HllW + 1)
+    val pw = 1L << (Hashing.HllW + 1)
     reg.groupBy(col("id"))
       .agg(count(lit(1)).as("n_present"),
-        sum(expr(s"shiftleft(CAST(1 AS BIGINT), ${E.HllW + 1} - mj)"))
+        sum(expr(s"shiftleft(CAST(1 AS BIGINT), ${Hashing.HllW + 1} - mj)"))
           .as("s_reg"))
       .selectExpr("id",
-        s"CAST(${E.HllM} - n_present AS BIGINT) AS v_zero$sfx",
-        s"s_reg + (${E.HllM} - n_present) * CAST($pw AS BIGINT) " +
+        s"CAST(${Hashing.HllM} - n_present AS BIGINT) AS v_zero$sfx",
+        s"s_reg + (${Hashing.HllM} - n_present) * CAST($pw AS BIGINT) " +
           s"AS s_scaled$sfx")
   }
 
@@ -1043,12 +1032,11 @@ object Graph {
     * drift on the estimate spelling.
     */
   private def hllFoldEst(r1: DataFrame, r2: DataFrame): DataFrame = {
-    val E = graft.queries.Events
     hllFold(r1, "1").join(hllFold(r2, "2"), Seq("id"))
       .selectExpr("id AS node_id", "v_zero1", "s_scaled1",
-        E.hllEstSqlAs("s_scaled1", "v_zero1", "est1"),
+        Hashing.hllEstSqlAs("s_scaled1", "v_zero1", "est1"),
         "v_zero2", "s_scaled2",
-        E.hllEstSqlAs("s_scaled2", "v_zero2", "est2"))
+        Hashing.hllEstSqlAs("s_scaled2", "v_zero2", "est2"))
   }
 
   private[graft] def hyperBallRun(edges: DataFrame): DataFrame = {
@@ -1100,9 +1088,8 @@ object Graph {
     * the value.
     */
   private def effDiamNfAt(reg: DataFrame, h: Int): DataFrame = {
-    val E = graft.queries.Events
     hllFold(reg, "")
-      .selectExpr("id", E.hllEstSql)
+      .selectExpr("id", Hashing.hllEstSql)
       .selectExpr(
         "CAST(round(est * CAST(10000 AS DOUBLE)) AS BIGINT) AS e4")
       .agg(sum(col("e4")).as("s4"))
@@ -1152,18 +1139,17 @@ object Graph {
     * the nf column is expression-for-expression [[effDiamNfAt]]'s.
     */
   private def effDiamNfChkAt(reg: DataFrame, h: Int): DataFrame = {
-    val E = graft.queries.Events
-    val pw = 1L << (E.HllW + 1)
+    val pw = 1L << (Hashing.HllW + 1)
     reg.groupBy(col("id"))
       .agg(count(lit(1)).as("n_present"),
-        sum(expr(s"shiftleft(CAST(1 AS BIGINT), ${E.HllW + 1} - mj)"))
+        sum(expr(s"shiftleft(CAST(1 AS BIGINT), ${Hashing.HllW + 1} - mj)"))
           .as("s_reg"),
         sum(col("mj")).as("smj"))
       .selectExpr("id", "smj",
-        s"CAST(${E.HllM} - n_present AS BIGINT) AS v_zero",
-        s"s_reg + (${E.HllM} - n_present) * CAST($pw AS BIGINT) " +
+        s"CAST(${Hashing.HllM} - n_present AS BIGINT) AS v_zero",
+        s"s_reg + (${Hashing.HllM} - n_present) * CAST($pw AS BIGINT) " +
           "AS s_scaled")
-      .selectExpr("smj", E.hllEstSql)
+      .selectExpr("smj", Hashing.hllEstSql)
       .selectExpr(
         "CAST(round(est * CAST(10000 AS DOUBLE)) AS BIGINT) AS e4", "smj")
       .agg(sum(col("e4")).as("s4"), sum(col("smj")).as("chk"))
@@ -1306,8 +1292,8 @@ object Graph {
     })
 
   /** `g_kcore` body over an undirected distinct edge set `und` (`a < b`
-    * orientation), reusable on any graph (OctaveBench runs it on the
-    * Flickr-scale octave). See the row comment for the peel semantics.
+    * orientation), reusable on any graph. See the row comment for the
+    * peel semantics.
     */
   private[graft] def kcoreRun(und0: DataFrame, kMin: Int,
       rounds: Int): DataFrame = {
@@ -1567,9 +1553,7 @@ object Graph {
     // verbatim inside [[localCcRun]] (the two rows may not drift —
     // TrianglesSpec brute-pins both) plus one degree aggregate and a
     // left join so triangle-free and degree-1 nodes report 0 — integer
-    // inputs, one float division per node. OctaveBench runs the same
-    // body at the 11.9M-edge hub-skew octave with the oriented wedge
-    // volume disclosed.
+    // inputs, one float division per node.
     "g_local_cc" -> ((s, dir) => {
       // r19: finish from the shared triangle fold — localCcFinish is
       // localCcRun's exact projection (spec-pinned).
@@ -1866,8 +1850,8 @@ object Graph {
       val e = GraphOps.lineitemSubgraph(s, dir, CcMod, CcQtyMax)
       val und = e.select(least(col("src"), col("dst")).as("a"),
           greatest(col("src"), col("dst")).as("b")).distinct()
-        .withColumn("w", expr(graft.text.TextOps.spark.kmvMix(
-          s"(a * 1000003 + b) % ${graft.text.TextOps.P}") + " % 100000"))
+        .withColumn("w", expr(Hashing.spark.kmvMix(
+          s"(a * 1000003 + b) % ${Hashing.P}") + " % 100000"))
       MinSpanningForest.run(s, und, MsfRounds)
         .orderBy(col("a"), col("b"))
     }),
@@ -2004,7 +1988,7 @@ object Graph {
     // of its ≤ r-hop OUT-ball, grown by the register-merge recurrence
     // reg_r(v) = max(reg_{r-1}(v), max over v→u of reg_{r-1}(u)) — the
     // web-scale neighborhood-function/centrality primitive (Boldi &
-    // Vigna 2013) that the integer HLL machinery of ev_daily_hll makes
+    // Vigna 2013) that the integer HLL machinery of graph/Hashing makes
     // exactly cross-engine-checkable: registers are max-merged INTEGERS
     // (no float order anywhere), so the whole recurrence hash-compares,
     // and the two estimates run the shared hllEstSqlAs spelling. Scale
@@ -2258,13 +2242,12 @@ object Graph {
     (gnd, est)
   }
 
-  /** Shared body of `g_modularity` (also measured by OctaveBench at the
-    * 11.9M-edge hub-skew octave): LPA labels + the three Newman-Q integer
-    * moments. See the `g_modularity` entry's scaladoc for the math and
+  /** Shared body of `g_modularity`: LPA labels + the three Newman-Q
+    * integer moments. See the `g_modularity` entry's scaladoc for the math and
     * the range-honesty bound.
     */
   def modularityRun(s: SparkSession, edges: DataFrame, rounds: Int): DataFrame =
-    // standalone arity (OctaveBench + specs): run the LPA loop here;
+    // standalone arity (specs): run the LPA loop here;
     // the board row passes the session-shared label frame instead
     // (r19 second pass — [[lpaShared]]).
     modularityFrom(edges, LabelProp.run(s, edges, rounds).localCheckpoint(true))
@@ -2434,8 +2417,8 @@ object Graph {
       // MsfRounds horizon
       "g_msf" -> graft.graph.MinSpanningForest.oracleSql(
         GraphOps.lineitemSubgraphSql(CcMod, CcQtyMax),
-        graft.text.TextOps.duck.kmvMix(
-          s"(a * 1000003 + b) % ${graft.text.TextOps.P}") + " % 100000",
+        Hashing.duck.kmvMix(
+          s"(a * 1000003 + b) % ${Hashing.P}") + " % 100000",
         MsfRounds, 10),
       "g_label_prop" -> LabelProp.oracleSql(
         GraphOps.lineitemSubgraphSql(CcMod, CcQtyMax), LpRounds),
@@ -2500,7 +2483,6 @@ object Graph {
         // hs = first flat-chk hop (register fixpoint — registers are
         // monotone) capped at the horizon, rows emitted only to hs,
         // sat/hops disclosed exactly like the Spark side.
-        val E2 = graft.queries.Events
         val hops = (1 to EffDiamHops)
           .map(h => s"r$h AS MATERIALIZED (${hllStepSql(s"r${h - 1}")})")
           .mkString(",\n")
@@ -2509,7 +2491,7 @@ object Graph {
              |  CAST(sum(CAST(round(est * CAST(10000 AS DOUBLE)) AS BIGINT))
              |    AS DOUBLE) / CAST(10000 AS DOUBLE) AS nf,
              |  (SELECT sum(mj) FROM r$h) AS chk
-             |  FROM (SELECT id, ${E2.hllEstSql}
+             |  FROM (SELECT id, ${Hashing.hllEstSql}
              |    FROM (${hllFoldSql(s"r$h", "")}) f$h))""".stripMargin
         }.mkString(",\n")
         val union = (0 to EffDiamHops)
@@ -2784,7 +2766,7 @@ object Graph {
         val seed = (0 until WalksPerSrc).map(w => s"($w)").mkString(", ")
         val steps = (1 to WalkLen).map { t =>
           val idx =
-            s"(${graft.text.TextOps.duck.kmvMix(walkHashExpr(t))}) % outdeg"
+            s"(${Hashing.duck.kmvMix(walkHashExpr(t))}) % outdeg"
           s"""p$t AS MATERIALIZED (SELECT source, walk, a.dst AS node
              |  FROM p${t - 1} s JOIN deg d ON d.src = s.node
              |  JOIN adj a ON a.src = s.node AND a.rn = 1 + ($idx))""".stripMargin

@@ -162,10 +162,13 @@ class PprEngineSpec extends SparkSpec with TimeLimits {
     for ((what, (e, s)) <- cases) {
       val root = Files.createTempDirectory("engine_unknown").toString
       val (dir, topDir) = (s"$root/store", s"$root/topk")
+      val libDir = s"$root/library"
       val base = new e.base(1e-4, 0.0)
       val baseTopk = new e.base(1e-4, 0.0, k = 2)
+      val library = new e.libraryPpr(20)
       base.preprocess(dir)
       baseTopk.preprocess(topDir)
+      library.preprocess(libDir)
       val calls = Seq[(String, () => DataFrame)](
         "power" -> (() => e.power.wholeGraphPpr(s)),
         "power top-k" -> (() => e.power.topkPpr(s, 2)),
@@ -177,11 +180,14 @@ class PprEngineSpec extends SparkSpec with TimeLimits {
         "fora top-k" -> (() => new e.fora(0.5).topkPpr(s, 2)),
         "backward" -> (() => new e.backward(1e-4).pprColumn(s)),
         "base.readPpr" -> (() => base.readPpr(dir, s)),
-        "base.readPpr top-k store" -> (() => baseTopk.readPpr(topDir, s)))
+        "base.readPpr top-k store" -> (() => baseTopk.readPpr(topDir, s)),
+        "library" -> (() => library.wholeGraphPpr(s)),
+        "library.readPpr" -> (() => library.readPpr(libDir, s)))
       for ((name, call) <- calls)
         assert(call().collect().isEmpty, s"$what: $name")
       base.deletePrep(dir)
       baseTopk.deletePrep(topDir)
+      library.deletePrep(libDir)
     }
   }
 
@@ -226,6 +232,11 @@ class PprEngineSpec extends SparkSpec with TimeLimits {
     }
   }
 
+  test("libraryPpr rejects iterations < 1") {
+    val e = engine
+    for (it <- Seq(0, -1)) rejects("iterations")(new e.libraryPpr(it))
+  }
+
   test("base rejects a negative threshold") {
     val e = engine
     rejects("threshold")(new e.base(1e-4, -1e-9))
@@ -234,5 +245,10 @@ class PprEngineSpec extends SparkSpec with TimeLimits {
   test("PprConf rejects alpha outside (0, 1)") {
     for (a <- Seq(0.0, 1.0, -0.15, 1.5, Double.NaN))
       rejects("alpha")(PprConf(alpha = a))
+    // pfail and delta: 0 derives 1/n, anything else must lie in (0, 1)
+    for (v <- Seq(1.0, 2.0, -1.0, Double.NaN)) {
+      rejects("pfail")(PprConf(pfail = v))
+      rejects("delta")(PprConf(delta = v))
+    }
   }
 }

@@ -1,14 +1,13 @@
 package graft.graph
 
 import graft.SparkSpec
-import graft.queries.{Events, Graph}
-import graft.text.TextOps
+import graft.queries.Graph
 
 class HyperBallSpec extends SparkSpec {
 
   private def rho(w: Long): Int =
-    if (w == 0L) Events.HllW + 1
-    else Events.HllW + 1 - java.lang.Long.toBinaryString(w).length
+    if (w == 0L) Hashing.HllW + 1
+    else Hashing.HllW + 1 - java.lang.Long.toBinaryString(w).length
 
   test("g_hyperball registers equal the exact in-memory replay (integer " +
       "end-to-end), grow monotonically, and the r=2 estimate tracks the " +
@@ -34,13 +33,13 @@ class HyperBallSpec extends SparkSpec {
       ball
     }
 
-    val m = Events.HllM
-    val pw = 1L << (Events.HllW + 1)
+    val m = Hashing.HllM
+    val pw = 1L << (Hashing.HllW + 1)
     def foldRegs(b: Set[Long]): (Long, Long) = {
-      val regs = b.groupMapReduce(w => TextOps.kmvMix(w % TextOps.P) % m)(
-        w => rho(TextOps.kmvMix(w % TextOps.P) / m))(math.max)
+      val regs = b.groupMapReduce(w => Hashing.kmvMix(w % Hashing.P) % m)(
+        w => rho(Hashing.kmvMix(w % Hashing.P) / m))(math.max)
       val vZero = (m - regs.size).toLong
-      val sScaled = regs.values.map(mj => 1L << (Events.HllW + 1 - mj)).sum +
+      val sScaled = regs.values.map(mj => 1L << (Hashing.HllW + 1 - mj)).sum +
         (m - regs.size) * pw
       (vZero, sScaled)
     }
@@ -78,7 +77,7 @@ class HyperBallSpec extends SparkSpec {
     got.foreach { case (id, e1, e2, h) =>
       val (b1, b2) = hb(id)
       assert(e1 == b1 && e2 == b2, s"estimates drifted for $id")
-      assert(h == graft.text.TextOps.round6((e1 - 1.0) + (e2 - e1) / 2.0))
+      assert(h == Hashing.round6((e1 - 1.0) + (e2 - e1) / 2.0))
     }
   }
 
@@ -92,7 +91,7 @@ class HyperBallSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2),
         r.getDouble(3), r.getDouble(4), r.getDouble(5)))
     assert(got.nonEmpty && got.length == hb.size)
-    val r6 = graft.text.TextOps.round6 _
+    val r6 = Hashing.round6 _
     got.foreach { case (id, e1, e2, sd, cl, lin) =>
       val (b1, b2) = hb(id)
       assert(e1 == b1 && e2 == b2, s"estimates drifted for $id")
@@ -130,17 +129,17 @@ class HyperBallSpec extends SparkSpec {
     val out = edges.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
       .withDefaultValue(Set.empty[Long])
     val nodes = edges.flatMap { case (a, b) => Seq(a, b) }.distinct
-    val m = Events.HllM
-    val pw = 1L << (Events.HllW + 1)
+    val m = Hashing.HllM
+    val pw = 1L << (Hashing.HllW + 1)
     def round(x: Double, s: Int): Double =
       BigDecimal(x).setScale(s, BigDecimal.RoundingMode.HALF_UP).toDouble
     def regsOf(b: Set[Long]): Map[Long, Int] =
-      b.groupMapReduce(w => TextOps.kmvMix(w % TextOps.P) % m)(
-        w => rho(TextOps.kmvMix(w % TextOps.P) / m))(math.max)
+      b.groupMapReduce(w => Hashing.kmvMix(w % Hashing.P) % m)(
+        w => rho(Hashing.kmvMix(w % Hashing.P) / m))(math.max)
     def estOf(b: Set[Long]): Double = {
       val regs = regsOf(b)
       val vz = (m - regs.size).toLong
-      val ss = regs.values.map(mj => 1L << (Events.HllW + 1 - mj)).sum +
+      val ss = regs.values.map(mj => 1L << (Hashing.HllW + 1 - mj)).sum +
         (m - regs.size) * pw
       val raw = (0.673 * m * m) / (ss.toDouble / pw)
       round(if (raw <= 2.5 * m && vz > 0) m * math.log(m.toDouble / vz)
@@ -211,21 +210,21 @@ class HyperBallSpec extends SparkSpec {
     // stop rule reads the sketch curve, like the original paper's)
     val out = es.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
       .withDefaultValue(Set.empty[Long])
-    val m = Events.HllM
-    val pw = 1L << (Events.HllW + 1)
+    val m = Hashing.HllM
+    val pw = 1L << (Hashing.HllW + 1)
     def estOf(b: Set[Long]): Double = {
-      val regs = b.groupMapReduce(w => TextOps.kmvMix(w % TextOps.P) % m)(
-        w => rho(TextOps.kmvMix(w % TextOps.P) / m))(math.max)
+      val regs = b.groupMapReduce(w => Hashing.kmvMix(w % Hashing.P) % m)(
+        w => rho(Hashing.kmvMix(w % Hashing.P) / m))(math.max)
       val vz = (m - regs.size).toLong
-      val ss = regs.values.map(mj => 1L << (Events.HllW + 1 - mj)).sum +
+      val ss = regs.values.map(mj => 1L << (Hashing.HllW + 1 - mj)).sum +
         (m - regs.size) * pw
       val raw = (0.673 * m * m) / (ss.toDouble / pw)
       round(if (raw <= 2.5 * m && vz > 0) m * math.log(m.toDouble / vz)
         else raw, 4)
     }
     def regsOf(b: Set[Long]): Map[Long, Int] =
-      b.groupMapReduce(w => TextOps.kmvMix(w % TextOps.P) % m)(
-        w => rho(TextOps.kmvMix(w % TextOps.P) / m))(math.max)
+      b.groupMapReduce(w => Hashing.kmvMix(w % Hashing.P) % m)(
+        w => rho(Hashing.kmvMix(w % Hashing.P) / m))(math.max)
     var ball = (0L until n).map(v => v -> Set(v)).toMap
     def nfOf(b: Map[Long, Set[Long]]): Double =
       b.valuesIterator.map(x => math.round(estOf(x) * 10000.0)).sum / 10000.0

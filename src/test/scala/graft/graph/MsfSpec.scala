@@ -2,7 +2,6 @@ package graft.graph
 
 import graft.SparkSpec
 import graft.queries.Graph
-import graft.text.TextOps
 
 class MsfSpec extends SparkSpec {
 
@@ -14,7 +13,7 @@ class MsfSpec extends SparkSpec {
         math.max(r.getLong(0), r.getLong(1))))
       .distinct
       .map { case (a, b) =>
-        (a, b, TextOps.kmvMix((a * 1000003L + b) % TextOps.P) % 100000L)
+        (a, b, Hashing.kmvMix((a * 1000003L + b) % Hashing.P) % 100000L)
       }
   }
 

@@ -97,4 +97,13 @@ class BackwardSearchSpec extends SparkSpec {
         assert(dense(v) == sp.getOrElse(v, 0.0), s"tree t=$t rmax=$rmax v=$v")
     }
   }
+
+  test("batch rejects rmax <= 0") {
+    val (_, rcsr, fwdDeg) = kernels(edgesDf)
+    for (rmax <- Seq(0.0, -1e-4, Double.NaN)) {
+      val err = intercept[IllegalArgumentException](
+        BackwardSearch.batch(spark, rcsr, fwdDeg, Seq(1L), alpha, rmax))
+      assert(err.getMessage.contains("rmax"), err.getMessage)
+    }
+  }
 }

@@ -115,4 +115,24 @@ class BaseSpec extends SparkSpec {
     assert(Base.storeSize(spark, dir) > 0)
     assert(Base.deleteStore(spark, dir))
   }
+
+  private def rejectsBoth(arg: String, rmax: Double, threshold: Double): Unit = {
+    val csr = graft.graph.GraphOps.buildCsr(edgesDf)
+    val rcsr = Base.reversedCsr(edgesDf)
+    val fwdDeg = Base.forwardDegrees(csr, rcsr)
+    for (call <- Seq(
+        () => Base.allPairs(spark, edgesDf, 0.15, rmax, 0, threshold),
+        () => Base.allPairs(spark, csr, rcsr, fwdDeg, 0.15, rmax, 0, threshold))) {
+      val err = intercept[IllegalArgumentException](call())
+      assert(err.getMessage.contains(arg), err.getMessage)
+    }
+  }
+
+  test("both allPairs overloads reject rmax <= 0") {
+    for (rmax <- Seq(0.0, -1e-4, Double.NaN)) rejectsBoth("rmax", rmax, 0.0)
+  }
+
+  test("both allPairs overloads reject a negative threshold") {
+    for (t <- Seq(-1e-9, Double.NaN)) rejectsBoth("threshold", 1e-4, t)
+  }
 }

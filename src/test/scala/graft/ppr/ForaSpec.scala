@@ -99,4 +99,14 @@ class ForaSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(perSrc.values.forall(_ >= 2)) // tie-inclusive ≥ k when ≥k nonzero
   }
+
+  test("topkTrace rejects k < 1") {
+    val csr = GraphOps.buildCsr(edgesDf)
+    val conf = Fora.Conf(alpha = 0.15, epsilon = 0.5, seed = 42L)
+    for (k <- Seq(0, -1)) {
+      val err = intercept[IllegalArgumentException](
+        Fora.topkTrace(csr, csr.denseOf(1L), k, conf))
+      assert(err.getMessage.contains("k must be >= 1"), err.getMessage)
+    }
+  }
 }

@@ -52,7 +52,7 @@ class AssortativitySpec extends SparkSpec {
     want.foreach { case (k, (n, s)) =>
       val (gn, gs, gknn) = got(k)
       assert((gn, gs) == ((n, s)), s"class $k")
-      assert(gknn == graft.text.TextOps.round6(s.toDouble / n))
+      assert(gknn == graft.graph.Hashing.round6(s.toDouble / n))
     }
     // classes partition the stub scan: Σ n_stubs = 2m, Σ s_dv = Σ du
     assert(got.values.map(_._1).sum == pairs.length.toLong)

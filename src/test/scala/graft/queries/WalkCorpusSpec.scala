@@ -1,8 +1,7 @@
 package graft.queries
 
 import graft.SparkSpec
-import graft.graph.GraphOps
-import graft.text.TextOps
+import graft.graph.{GraphOps, Hashing}
 
 class WalkCorpusSpec extends SparkSpec {
 
@@ -15,8 +14,8 @@ class WalkCorpusSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val adj = edges.groupBy(_._1).view
       .mapValues(_.map(_._2).sorted.toIndexedSeq).toMap
-    val p = TextOps.P
-    val m = TextOps.TokMul
+    val p = Hashing.P
+    val m = Hashing.TokMul
     val out = Set.newBuilder[(Long, Long, Long, Long)]
     for {
       source <- adj.keys.toSeq.sorted if source % Graph.WalkSrcMod == 0
@@ -31,7 +30,7 @@ class WalkCorpusSpec extends SparkSpec {
           case Some(ns) =>
             val h = ((((source % p) * m + walk) % p * m + t) % p * m +
               node) % p
-            val idx = (TextOps.kmvMix(h) % ns.length).toInt
+            val idx = (Hashing.kmvMix(h) % ns.length).toInt
             node = ns(idx)
             out += ((source, walk, t.toLong, node))
             t += 1
