@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.KthScore
+import graft.functions.{KthScore, VecDot}
 import graft.plans.TopKRewrite
 
 /** One-stop session wiring for the library's custom Catalyst surface:
@@ -14,14 +14,19 @@ import graft.plans.TopKRewrite
   *   .getOrCreate()
   * }}}
   *
-  * registers the `kth_score` aggregate for SQL/`selectExpr` use and
-  * installs the [[graft.plans.TopKRewrite]] window-top-k optimizer rule.
-  * Equivalent per-session, post-hoc setup: `TopKFunctions.register` plus
+  * registers the `vec_dot` expression and `kth_score` aggregate for
+  * SQL/`selectExpr` use and installs the [[graft.plans.TopKRewrite]]
+  * window-top-k optimizer rule. Equivalent per-session, post-hoc setup:
+  * `VectorFunctions.register` / `TopKFunctions.register` plus
   * `spark.experimental.extraOptimizations :+= TopKRewrite`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    ext.injectFunction((
+      FunctionIdentifier("vec_dot"),
+      new ExpressionInfo(classOf[VecDot].getName, "vec_dot"),
+      (children: Seq[Expression]) => VecDot(children.head, children(1))))
     ext.injectFunction((
       FunctionIdentifier("kth_score"),
       new ExpressionInfo(classOf[KthScore].getName, "kth_score"),

@@ -20,7 +20,7 @@ object Verify {
     // Self-contained dump, symmetric with Bench.runBoard (r19 verdict
     // #1): drop any session fit a previous in-JVM caller left behind so
     // every verify pass recomputes from the parquet inputs.
-    graft.queries.Graph.invalidateModels(spark, sfDir)
+    graft.queries.Embeddings.invalidateModels(spark, sfDir)
     selected.foreach { case (name, fn) =>
       val pinnedBefore = sc.getPersistentRDDs.keySet
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -30,7 +30,7 @@ object Verify {
       }
       // result written — release anything this query pinned (same
       // session-hygiene rationale as Bench), sparing session-scoped
-      // model caches (SessionPins: the fitted-once graph frames).
+      // model caches (SessionPins: the fitted-once PQ codebooks).
       val now = sc.getPersistentRDDs
       (now.keySet -- pinnedBefore -- graft.operators.SessionPins.pinned(sc))
         .foreach(id => now.get(id).foreach(_.unpersist(false)))

@@ -35,7 +35,7 @@ import graft.ppr.PowerIteration
   *
   *   δ(v) = Σ_{v→w, dist(w)=dist(v)+1} σ(v)/σ(w) · (1 + δ(w))
   *
-  * FLOAT DISCIPLINE: every δ is a sum of
+  * FLOAT DISCIPLINE (the ev_markov_entropy fold): every δ is a sum of
   * IEEE addends folded in ASCENDING VALUE order — the task sorts its
   * addend array (the superstep regime sorts per group:
   * `sort_array(collect_list(a))`), the DuckDB oracle folds

@@ -6,7 +6,7 @@ import graft.ppr.PowerIteration
 
 /** Distributed connected components — the per-node component labeling every
   * corpus-scale dedup pipeline ends with (duplicate-pair edges → duplicate
-  * CLUSTERS). The
+  * CLUSTERS; see `d_dup_clusters` for the in-query twin on LSH pairs). The
   * reference engine has no CC kernel, but its whole-graph snapshot model
   * (SURVEY §1.4.5 — undirected = both directed arcs) fixes the semantics:
   * components of the symmetrized edge set.

@@ -60,6 +60,12 @@ final class CkptChain(sc: SparkContext, resetStats: Boolean = false) {
     out
   }
 
+  /** RDD ids backing the current (final) generation — for callers that
+    * hand the final snapshot to a session-scoped cache and must register
+    * it with [[SessionPins]].
+    */
+  def liveIds: Set[Int] = live
+
   /** Release the current (final) generation too — only after the caller
     * has fully materialized everything derived from it.
     */

@@ -7,7 +7,7 @@ import org.apache.spark.SparkContext
   *
   * Those harnesses unpersist everything a query pinned once its row
   * completes — correct for per-row lineage truncation, but fatal for
-  * session-scoped MODEL caches (the fitted-once graph frames, the CSR
+  * session-scoped MODEL caches (the fitted-once PQ codebooks, the CSR
   * snapshot discipline's DataFrame analog): the second consumer row
   * would read released checkpoint blocks
   * (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND). A model cache registers its
@@ -18,9 +18,9 @@ import org.apache.spark.SparkContext
   *
   * LIFECYCLE (the round-14 advice): pins are not immortal —
   * [[unpin]] releases a model's blocks when its cache entry is
-  * invalidated (see `Graph.invalidateModels`, the re-ingest path:
+  * invalidated (see `Embeddings.invalidateModels`, the re-ingest path:
   * a source dir rewritten mid-session must refit, not serve the stale
-  * frame), and the first pin for a context registers a listener that
+  * codebook), and the first pin for a context registers a listener that
   * [[drop]]s the context's entries on application end, so stopped
   * sessions do not leak map references.
   */

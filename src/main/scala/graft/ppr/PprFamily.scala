@@ -12,9 +12,9 @@ import graft.graph.GraphOps
   * five fixed-schedule single-shuffle loops over the SAME graph that
   * differ only in restart vector, edge weighting and post-sum transform
   * — run separately they pay the per-superstep job floor five times.
-  * This object runs all five in ONE family-tagged state frame: every
-  * join and groupBy is keyed on `(fam, id)`, the per-family
-  * pre-weighted edge lists (each
+  * This object runs all five in ONE family-tagged state frame (the
+  * `Embeddings.nswBeamBatch` discipline): every join and groupBy is
+  * keyed on `(fam, id)`, the per-family pre-weighted edge lists (each
   * with its own dangling rule folded in as synthetic edges, or none)
   * union into one hash-partitioned adjacency, and one superstep is
   * exactly ONE union-carrier shuffle for the whole family.

@@ -156,10 +156,9 @@ object Embeddings {
     * [[pqModelCache]] serving discipline: a real NSW index builds once
     * and answers many queries, so `e_nsw_search` / `e_nsw_recall` time
     * the MARGINAL routing cost given a warm graph (the descent build
-    * is priced separately: ScaleBench times [[nswGraphBuild]] under
-    * the 4× blowup). Checkpoint blocks are pinned via SessionPins and
-    * released by [[invalidateModels]] on re-ingest, like every other
-    * model cache.
+    * is priced separately by [[nswGraphBuild]]). Checkpoint blocks are
+    * pinned via SessionPins and released by [[invalidateModels]] on
+    * re-ingest, like every other model cache.
     */
   private val nswCache = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String), DataFrame]
@@ -1649,8 +1648,8 @@ object Embeddings {
       val w = Window.partitionBy(col("cell"))
         .orderBy(col("skey").asc, col("vec_id").asc)
       asg.selectExpr("vec_id", "cell",
-          s"${graft.text.TextOps.spark.kmvMix(
-            s"(vec_id % ${graft.text.TextOps.P})")} AS skey")
+          s"${graft.graph.Hashing.spark.kmvMix(
+            s"(vec_id % ${graft.graph.Hashing.P})")} AS skey")
         .withColumn("rk", row_number().over(w))
         .where(col("rk") <= CbPerCell)
     }),
@@ -2349,8 +2348,8 @@ object Embeddings {
          |ORDER BY round(d2, 6) DESC, vec_id ASC LIMIT $OodTopN""".stripMargin,
     "e_cluster_balance" ->
       s"""WITH $kmeansAssignCtes,
-         |sk AS (SELECT vec_id, cell, ${graft.text.TextOps.duck.kmvMix(
-             s"(vec_id % ${graft.text.TextOps.P})")} AS skey FROM asg),
+         |sk AS (SELECT vec_id, cell, ${graft.graph.Hashing.duck.kmvMix(
+             s"(vec_id % ${graft.graph.Hashing.P})")} AS skey FROM asg),
          |r AS (SELECT *, row_number() OVER (
          |  PARTITION BY cell ORDER BY skey ASC, vec_id ASC) AS rk FROM sk)
          |SELECT vec_id, cell, skey, rk FROM r WHERE rk <= $CbPerCell""".stripMargin,

@@ -18,6 +18,7 @@ import graft.Tables
   * precision-independent.
   */
 object Events {
+  import graft.graph.Hashing.{HllM, HllW, hllEstSql}
 
   val GapSeconds = 1800 // 30-min session gap
   /** Attribution window for `ev_interval` (seconds). */
@@ -140,8 +141,8 @@ object Events {
     * bucket math lands in every caller or none.
     */
   private[graft] def cmsBucketSql(jExpr: String): String = {
-    val P = graft.text.TextOps.P
-    s"${graft.text.TextOps.spark.kmvMix(
+    val P = graft.graph.Hashing.P
+    s"${graft.graph.Hashing.spark.kmvMix(
       s"((user_id + ($jExpr) * CAST($CmsSalt AS BIGINT)) % $P)")} % $CmsW"
   }
 
@@ -161,20 +162,6 @@ object Events {
       .groupBy(col("day"), col("j"), col("b"))
       .agg(count(lit(1)).as("c"))
 
-  /** `ev_daily_hll` geometry: m = [[HllM]] registers addressed by the low
-    * bits of the full-range mixed hash, with the rank-of-leftmost-1-bit
-    * (ρ) taken over the remaining [[HllW]] bits. The mixed key lives in
-    * [0, P²) ⊂ [0, 2⁶⁰), so hm / m < 2⁵⁶ — hence W = 56 and
-    * ρ ∈ [1, W + 1]. m = 16 (α₁₆ = 0.673, Flajolet et al. 2007 Fig. 3 —
-    * the smallest standard geometry) keeps the small-range
-    * linear-counting branch REAL at sf0.001 (a dozen users/day leave
-    * empty registers) while sf0.01's ~130 users/day fill all 16 and take
-    * the raw-estimate branch — both correction branches are exercised by
-    * the dual-scale verify, not vacuous.
-    */
-  val HllM = 16
-  val HllW = 56
-
   /** Per-(day, bucket) HLL register table of a `(day, hm)` event stream:
     * max-ρ per bucket — ONE long of state per register under map-side
     * combine, m rows per day total, the bounded-state property. ρ is
@@ -191,38 +178,6 @@ object Events {
           s"ELSE ${HllW + 1} - length(bin(w)) END AS rho")
       .groupBy(col("day"), col("b"))
       .agg(max(col("rho")).as("mj"))
-
-  /** HLL estimate over prepared `(n_exact, v_zero, s_scaled)` columns —
-    * ONE SQL text shared by the batch row and the DuckDB oracle (both
-    * engines run the identical IEEE chain). The register sum
-    * Σ 2^−M_j is carried as the INTEGER Σ 2^(W+1−M_j) (`s_scaled`,
-    * ≤ m·2⁵⁷ < 2⁶³): long addition is exact and order-free, where a
-    * float Σ 2^−M_j could round differently under Spark's
-    * partition-dependent add order vs DuckDB's scan order. The single
-    * trailing CAST to DOUBLE of the exact integer is deterministic.
-    * Small-range correction per the paper: raw E = α·m²/S ≤ 2.5m with
-    * empty registers → linear counting m·ln(m/V).
-    */
-  private[graft] def hllEstSql: String =
-    hllEstSqlAs("s_scaled", "v_zero", "est")
-
-  /** Column-parameterized form of the estimate — `g_hyperball` reads TWO
-    * register folds (radius 1 and 2) per row, so the shared spelling
-    * takes its input/output names; the default instance above is
-    * byte-identical to the pre-refactor text (ev_daily_hll's oracle hash
-    * is unchanged).
-    */
-  private[graft] def hllEstSqlAs(sCol: String, vCol: String,
-      alias: String): String = {
-    val alphaMM = 0.673 * HllM * HllM // exact ×2⁸ scaling: prints 172.288
-    val pw = 1L << (HllW + 1)
-    val raw = s"(CAST($alphaMM AS DOUBLE) / " +
-      s"(CAST($sCol AS DOUBLE) / CAST($pw AS DOUBLE)))"
-    s"round(CASE WHEN $raw <= CAST(${2.5 * HllM} AS DOUBLE) AND $vCol > 0 " +
-      s"THEN CAST($HllM AS DOUBLE) * " +
-      s"ln(CAST($HllM AS DOUBLE) / CAST($vCol AS DOUBLE)) " +
-      s"ELSE $raw END, 4) AS $alias"
-  }
 
   /** `ev_heavy_hitters` geometry. `HhK` Misra-Gries counters per task;
     * a key qualifies when `cnt · HhRatio ≥ n` (share ≥ 1/HhRatio = 5%).
@@ -349,7 +304,7 @@ object Events {
             }
           }
           val naive = train.last._3
-          val r6 = graft.text.TextOps.round6 _
+          val r6 = graft.graph.Hashing.round6 _
           hold.iterator.zipWithIndex.map { case ((_, d, x), i0) =>
             val h = i0 + 1
             val fhw = l + h * b + seas(i0) // h ≤ P: ring index h−1
@@ -638,7 +593,7 @@ object Events {
     // the three digits. Integer end-to-end: the cross-engine hash never
     // sees a float.
     "ev_rfm" -> ((s, dir) => {
-      val P = graft.text.TextOps.P
+      val P = graft.graph.Hashing.P
       val purch = Tables(s, dir, "events")
         .where(col("event_type") === "purchase")
         .select(col("user_id"), unix_micros(col("ts")).as("us"),
@@ -651,7 +606,7 @@ object Events {
         .selectExpr("user_id", s"(gmax - u_max) div $DayUs AS r_days",
           "f", "m_cents")
         .selectExpr("user_id", "r_days", "f", "m_cents",
-          s"${graft.text.TextOps.spark.kmvMix(s"(user_id % $P)")} AS hm")
+          s"${graft.graph.Hashing.spark.kmvMix(s"(user_id % $P)")} AS hm")
         .localCheckpoint(true) // feeds the sample + the labeling pass
       // ONE bottom-k-by-hash sample pass (TakeOrderedAndProject),
       // checkpointed, feeds all three threshold windows — not one
@@ -740,7 +695,7 @@ object Events {
           xs.iterator.map { case (_, d, x) =>
             e = if (first) { first = false; x }
             else EwmaAlpha * x + EwmaOneMinusAlpha * e
-            (typ, d, x, graft.text.TextOps.round6(e))
+            (typ, d, x, graft.graph.Hashing.round6(e))
           }
         }
         .toDF("event_type", "day", "daily", "ewma")
@@ -780,8 +735,8 @@ object Events {
               l = HoltAlpha * x + HoltOneMinusAlpha * (lp + b)
               b = HoltBeta * (l - lp) + HoltOneMinusBeta * b
             }
-            (typ, d, x, graft.text.TextOps.round6(l),
-              graft.text.TextOps.round6(b), graft.text.TextOps.round6(l + b))
+            (typ, d, x, graft.graph.Hashing.round6(l),
+              graft.graph.Hashing.round6(b), graft.graph.Hashing.round6(l + b))
           }
         }
         .toDF("event_type", "day", "daily", "level", "trend", "forecast")
@@ -828,10 +783,10 @@ object Events {
               b = HwBeta * (l - lp) + HwOneMinusBeta * b
               val sNew = HwGamma * (x - l) + HwOneMinusGamma * sP
               seas = seas.tail :+ sNew
-              (typ, d, x, graft.text.TextOps.round6(l),
-                graft.text.TextOps.round6(b),
-                graft.text.TextOps.round6(sNew),
-                graft.text.TextOps.round6(l + b + seas.head))
+              (typ, d, x, graft.graph.Hashing.round6(l),
+                graft.graph.Hashing.round6(b),
+                graft.graph.Hashing.round6(sNew),
+                graft.graph.Hashing.round6(l + b + seas.head))
             }
           }
         }
@@ -901,8 +856,8 @@ object Events {
             val x = c.toDouble / 100
             sp = math.max(0.0, sp + (x - mu - k))
             sn = math.max(0.0, sn + (mu - x - k))
-            (typ, d, x, graft.text.TextOps.round6(sp),
-              graft.text.TextOps.round6(sn),
+            (typ, d, x, graft.graph.Hashing.round6(sp),
+              graft.graph.Hashing.round6(sn),
               if (sp > h || sn > h) 1L else 0L)
           }
         }
@@ -1214,12 +1169,12 @@ object Events {
     // (WindowGroupLimit-eligible); the single float division per column
     // is spelled identically in the oracle.
     "ev_kmv_overlap" -> ((s, dir) => {
-      val P = graft.text.TextOps.P
+      val P = graft.graph.Hashing.P
       val du = Tables(s, dir, "events")
         .selectExpr("date_format(date_trunc('day', ts), 'yyyy-MM-dd') AS day",
           "user_id", s"user_id % $P AS h")
         .selectExpr("day", "user_id",
-          s"${graft.text.TextOps.spark.kmvMix("h")} AS hm")
+          s"${graft.graph.Hashing.spark.kmvMix("h")} AS hm")
         .select("day", "user_id", "hm").distinct()
         .localCheckpoint(true) // feeds sketches and the exact columns
       val w = Window.partitionBy(col("day")).orderBy(col("hm"))
@@ -1270,12 +1225,12 @@ object Events {
 
     "ev_daily_kmv" -> ((s, dir) => {
       graft.functions.KmvFunctions.register(s)
-      val P = graft.text.TextOps.P
+      val P = graft.graph.Hashing.P
       Tables(s, dir, "events")
         .selectExpr("date_format(date_trunc('day', ts), 'yyyy-MM-dd') AS day",
           "user_id", s"user_id % $P AS h")
         .selectExpr("day", "user_id",
-          s"${graft.text.TextOps.spark.kmvMix("h")} AS hm")
+          s"${graft.graph.Hashing.spark.kmvMix("h")} AS hm")
         .groupBy(col("day"))
         .agg(countDistinct(col("user_id")).as("n_exact"),
           graft.functions.KmvFunctions.kmvKth(col("hm"), EvKmvK).as("kth_h"))
@@ -1329,13 +1284,13 @@ object Events {
     // hllEstSql's order-free-sum argument); both correction branches are
     // real across the dual-scale verify.
     "ev_daily_hll" -> ((s, dir) => {
-      val P = graft.text.TextOps.P
+      val P = graft.graph.Hashing.P
       val pw = 1L << (HllW + 1)
       val ev = Tables(s, dir, "events")
         .selectExpr("date_format(date_trunc('day', ts), 'yyyy-MM-dd') AS day",
           "user_id", s"user_id % $P AS h")
         .selectExpr("day", "user_id",
-          s"${graft.text.TextOps.spark.kmvMix("h")} AS hm")
+          s"${graft.graph.Hashing.spark.kmvMix("h")} AS hm")
         .localCheckpoint(true) // feeds the registers and the exact count
       val agg = hllRegisters(ev)
         .groupBy(col("day"))
@@ -1373,12 +1328,12 @@ object Events {
     * against the streaming twin on a synthetic frame.
     */
   private[graft] def evValueQuantiles(events: DataFrame): DataFrame = {
-    val P = graft.text.TextOps.P
+    val P = graft.graph.Hashing.P
     val ev = events
       .selectExpr("date_format(date_trunc('day', ts), 'yyyy-MM-dd') AS day",
         "event_id", "value", s"event_id % $P AS h")
       .selectExpr("day", "event_id", "value",
-        s"${graft.text.TextOps.spark.kmvMix("h")} AS hm")
+        s"${graft.graph.Hashing.spark.kmvMix("h")} AS hm")
       .localCheckpoint(true) // feeds the exact and the sampled path
     val exact = quantileSelect(
       ev, Window.partitionBy(col("day")).orderBy(col("value"), col("event_id")),
@@ -1522,7 +1477,7 @@ object Events {
          |   RANGE BETWEEN 2 PRECEDING AND CURRENT ROW), 6) AS ma3
          |FROM daily""".stripMargin,
     "ev_rfm" -> {
-      val P = graft.text.TextOps.P
+      val P = graft.graph.Hashing.P
       def thrCte(metric: String, alias: String): String =
         s"""rk_$alias AS (SELECT $metric AS v, row_number() OVER (
            |  ORDER BY $metric, user_id) AS rn FROM smp),
@@ -1540,7 +1495,7 @@ object Events {
          |  CAST(sum(cents) AS BIGINT) AS m_cents FROM p GROUP BY user_id),
          |rfm AS MATERIALIZED (SELECT user_id,
          |  (g.gmax - u_max) // $DayUs AS r_days, f, m_cents,
-         |  ${graft.text.TextOps.duck.kmvMix(s"(user_id % $P)")} AS hm
+         |  ${graft.graph.Hashing.duck.kmvMix(s"(user_id % $P)")} AS hm
          |  FROM agg CROSS JOIN g),
          |smp AS MATERIALIZED (SELECT * FROM (
          |  SELECT *, row_number() OVER (ORDER BY hm, user_id) AS rs
@@ -1993,11 +1948,11 @@ object Events {
          | round(max(epoch(ts)) - min(epoch(ts)), 6) AS duration_sec
          |FROM sess GROUP BY user_id, session_id""".stripMargin,
     "ev_kmv_overlap" -> {
-      val P = graft.text.TextOps.P
+      val P = graft.graph.Hashing.P
       s"""WITH h AS (SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
          |  user_id, user_id % $P AS h FROM events),
          |du AS MATERIALIZED (SELECT DISTINCT day, user_id,
-         |  ${graft.text.TextOps.duck.kmvMix("h")} AS hm FROM h),
+         |  ${graft.graph.Hashing.duck.kmvMix("h")} AS hm FROM h),
          |sk AS MATERIALIZED (SELECT day, hm FROM (
          |  SELECT day, hm, row_number() OVER (
          |    PARTITION BY day ORDER BY hm) AS rn
@@ -2038,11 +1993,11 @@ object Events {
          |FROM est e JOIN ex ON ex.day = e.day""".stripMargin
     },
     "ev_daily_kmv" -> {
-      val P = graft.text.TextOps.P
+      val P = graft.graph.Hashing.P
       s"""WITH h AS (SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
          |  user_id, user_id % $P AS h FROM events),
          |d AS MATERIALIZED (SELECT DISTINCT day, user_id, h FROM h),
-         |dm AS (SELECT DISTINCT day, ${graft.text.TextOps.duck.kmvMix("h")} AS hm
+         |dm AS (SELECT DISTINCT day, ${graft.graph.Hashing.duck.kmvMix("h")} AS hm
          |  FROM d),
          |kth AS (SELECT day, hm AS kth_h FROM (
          |  SELECT day, hm, row_number() OVER (
@@ -2054,9 +2009,9 @@ object Events {
          |FROM ex JOIN kth k ON k.day = ex.day""".stripMargin
     },
     "ev_cms_freq" -> {
-      val P = graft.text.TextOps.P
+      val P = graft.graph.Hashing.P
       def bucket(j: Int): String =
-        s"${graft.text.TextOps.duck.kmvMix(
+        s"${graft.graph.Hashing.duck.kmvMix(
           s"((user_id + ${j * CmsSalt}) % $P)")} % $CmsW"
       val rows = (0 until CmsD)
         .map(j => s"SELECT day, $j AS j, ${bucket(j)} AS b FROM ev")
@@ -2083,12 +2038,12 @@ object Events {
          |FROM ex e JOIN est s ON s.day = e.day AND s.user_id = e.user_id""".stripMargin
     },
     "ev_daily_hll" -> {
-      val P = graft.text.TextOps.P
+      val P = graft.graph.Hashing.P
       val pw = 1L << (HllW + 1)
       s"""WITH h AS (SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
          |  user_id, user_id % $P AS h FROM events),
          |hm AS MATERIALIZED (SELECT day, user_id,
-         |  ${graft.text.TextOps.duck.kmvMix("h")} AS hm FROM h),
+         |  ${graft.graph.Hashing.duck.kmvMix("h")} AS hm FROM h),
          |reg AS (SELECT day, hm % $HllM AS b,
          |  CASE WHEN hm // $HllM = 0 THEN ${HllW + 1}
          |       ELSE ${HllW + 1} - length(bin(hm // $HllM)) END AS rho FROM hm),
@@ -2103,7 +2058,7 @@ object Events {
          |FROM ex JOIN agg a ON a.day = ex.day""".stripMargin
     },
     "ev_value_quantiles" -> {
-      val P = graft.text.TextOps.P
+      val P = graft.graph.Hashing.P
       // same rank rule as the Spark quantileSelect: all-DOUBLE floor math
       // (a bare 0.5 literal would run DECIMAL arithmetic in DuckDB and
       // could floor differently from Spark's double product).
@@ -2114,7 +2069,7 @@ object Events {
       }.mkString(",\n  ")
       s"""WITH e AS MATERIALIZED (SELECT
          |  strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-         |  event_id, value, ${graft.text.TextOps.duck.kmvMix(
+         |  event_id, value, ${graft.graph.Hashing.duck.kmvMix(
               s"(event_id % $P)")} AS hm FROM events),
          |exr AS (SELECT day, value,
          |  row_number() OVER (PARTITION BY day ORDER BY value, event_id) AS rn,

@@ -456,7 +456,8 @@ object Graph {
   }
 
   /** The shared link-prediction frames fitted ONCE per (session, source
-    * dir) — a fit-once serving cache applied to wedges (r17 verdict #3): `g_adamic_adar` and
+    * dir) — the [[graft.queries.Embeddings]] nswCache serving discipline
+    * applied to wedges (r17 verdict #3): `g_adamic_adar` and
     * `g_linkpred_cn` both finish from the same non-adjacent wedge-pair
     * aggregate over the same TriMod graph, so whichever row runs first
     * pays the Σdeg² fold and the other reads the pinned checkpoint.
@@ -468,15 +469,17 @@ object Graph {
     .empty[(SparkSession, String), (DataFrame, DataFrame)]
 
   /** RDD ids backing each cached lpShared fit — what [[invalidateModels]]
-    * must unpin when a (session, dir) entry is dropped.
+    * must unpin when a (session, dir) entry is dropped (the
+    * Embeddings.modelPins discipline).
     */
   private val lpPins = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String), Set[Int]]
 
   /** Drop the cached link-prediction AND PPR-family frames for
     * (session, dir) and release their pinned checkpoint blocks — the
-    * re-ingest hook: one call clears every session-fit family, so
-    * `Bench` and `Verify` start each pass from the parquet inputs.
+    * re-ingest hook, same contract as
+    * [[graft.queries.Embeddings.invalidateModels]] (which calls through
+    * here so one re-ingest call clears every session-fit family).
     */
   def invalidateModels(s: SparkSession, dir: String): Unit = {
     lpCache.remove((s, dir))
@@ -503,7 +506,9 @@ object Graph {
     lpaCache.remove((s, dir))
     lpaPins.remove((s, dir)).foreach(ids =>
       graft.operators.SessionPins.unpin(s.sparkContext, ids))
+    graft.queries.Relational.invalidateBuckets(s, dir)
     GraphOps.invalidateGraphs(s, dir)
+    graft.queries.Text.invalidateShared(s, dir)
   }
 
   /** The tag-batched PPR superstep family fitted ONCE per (session,

@@ -4,8 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{Scratch, Tables}
+import graft.graph.Hashing
+import graft.graph.Hashing.{P, TokMul}
 import graft.text.TextOps
-import graft.text.TextOps.{P, TokMul, K, Bands, RowsPerBand}
+import graft.text.TextOps.{K, Bands, RowsPerBand}
 
 /** Training-data pipeline operators over the `documents` table (beyond-
   * reference roadmap, SURVEY §7.5): token counting, fingerprinting,
@@ -801,7 +803,7 @@ object Text {
       Tables(s, dir, "documents")
         .selectExpr("doc_id", "lang",
           "greatest(n_chars, 1) AS wt",
-          s"round(pow((${TextOps.spark.fingerprint("text")} + 1.0) / ${TextOps.P + 1}.0, " +
+          s"round(pow((${TextOps.spark.fingerprint("text")} + 1.0) / ${Hashing.P + 1}.0, " +
             "1.0 / greatest(n_chars, 1)), 9) AS skey")
         .withColumn("rk", row_number().over(w))
         .where(col("rk") <= WeightedSampleK)
@@ -821,7 +823,7 @@ object Text {
     // Hash choice: raw tokenHash under-wraps P on short tokens (hashes
     // cluster near 0 → the r7 row visibly overshot n_exact, documented
     // then as by-design-visible), so the sketch key is tokenHash mapped
-    // through [[TextOps.kmvMix]] — a dual-rendered full-range
+    // through [[Hashing.kmvMix]] — a dual-rendered full-range
     // (xor-whitened multiply-mod-P, range P² ≈ 2⁶⁰) mixer; with it the
     // estimate tracks n_exact inside the KMV error band (KmvAggSpec pins
     // both the mixed-accuracy band and the raw-hash bias it repairs).
@@ -830,7 +832,7 @@ object Text {
       Tables(s, dir, "documents")
         .selectExpr("lang", s"explode(${TextOps.spark.tokens("text")}) AS t")
         .selectExpr("lang", s"${TextOps.spark.tokenHash("t")} AS h")
-        .selectExpr("lang", "h", s"${TextOps.spark.kmvMix("h")} AS hm")
+        .selectExpr("lang", "h", s"${Hashing.spark.kmvMix("h")} AS hm")
         .groupBy(col("lang"))
         .agg(countDistinct(col("h")).as("n_exact"),
           graft.functions.KmvFunctions.kmvKth(col("hm"), KmvK).as("kth_h"))
@@ -1105,7 +1107,7 @@ object Text {
     "d_ccnet_buckets" -> ((s, dir) => {
       val scored = bigramScore(s, dir)
         .selectExpr("doc_id", "avg_logp",
-          s"${TextOps.spark.kmvMix(s"(doc_id % $P)")} AS hm")
+          s"${Hashing.spark.kmvMix(s"(doc_id % $P)")} AS hm")
         .localCheckpoint(true) // feeds the sample and the labeling pass
       val sample = scored.orderBy(col("hm"), col("doc_id"))
         .limit(CcnetSampleK)
@@ -1190,12 +1192,12 @@ object Text {
           val toks = t.toLowerCase(java.util.Locale.ROOT).split("\\s+", -1)
           val hs = toks.map(TextOps.tokenHash)
           var fp = 0L
-          hs.foreach(h => fp = (fp * TextOps.TokMul + h) % TextOps.P)
+          hs.foreach(h => fp = (fp * Hashing.TokMul + h) % Hashing.P)
           val bs =
             if (hs.length < 2) Array.empty[Long]
             else Array.tabulate(hs.length - 1) { i =>
-              TextOps.kmvMix(
-                (hs(i) * TextOps.TokMul + hs(i + 1)) % TextOps.P) % DsirBuckets
+              Hashing.kmvMix(
+                (hs(i) * Hashing.TokMul + hs(i + 1)) % Hashing.P) % DsirBuckets
             }
           (id, src, lang, fp, bs)
         })
@@ -1223,8 +1225,8 @@ object Text {
         .selectExpr("doc_id", "source", "lang",
           // P² as a DOUBLE product of CASTs — same spelling as the
           // DuckDB twin (a `P.0` literal is DECIMAL there and overflows).
-          s"round(-ln(-ln((${TextOps.spark.kmvMix("fp")} + 1.0) / " +
-            s"(CAST(${TextOps.P} AS DOUBLE) * CAST(${TextOps.P} AS DOUBLE)))), 9) AS g")
+          s"round(-ln(-ln((${Hashing.spark.kmvMix("fp")} + 1.0) / " +
+            s"(CAST(${Hashing.P} AS DOUBLE) * CAST(${Hashing.P} AS DOUBLE)))), 9) AS g")
       val w = Window.orderBy(col("gkey").desc, col("doc_id").asc)
       scored.join(gum, Seq("doc_id"))
         .select(col("doc_id"), col("source"), col("lang"), col("n_big"),
@@ -1254,7 +1256,7 @@ object Text {
             var x = 0L
             var j = i
             while (j < i + SpanW) {
-              x = (x * TextOps.TokMul + hs(j)) % TextOps.P; j += 1
+              x = (x * Hashing.TokMul + hs(j)) % Hashing.P; j += 1
             }
             (id, x)
           }
@@ -1920,13 +1922,13 @@ object Text {
     * `d_winnow_pairs` oracles so the fingerprint spelling cannot drift.
     */
   private def duckWinnowCte: String = {
-    val M = TextOps.TokMul
+    val M = Hashing.TokMul
     val W = TextOps.WinnowW
     s"""tk AS (SELECT doc_id, ${TextOps.duck.tokenHashes("text")} AS hs
        |  FROM documents),
        |kg AS MATERIALIZED (SELECT doc_id, u.i AS pos,
        |  ((hs[CAST(u.i AS INT) + 1] * $M + hs[CAST(u.i AS INT) + 2]) * $M
-       |    + hs[CAST(u.i AS INT) + 3]) % ${TextOps.P} AS h
+       |    + hs[CAST(u.i AS INT) + 3]) % ${Hashing.P} AS h
        |  FROM tk, UNNEST(range(0, len(hs) - ${TextOps.ShingleW - 1}))
        |    AS u(i)
        |  WHERE len(hs) >= ${TextOps.ShingleW}),
@@ -1967,7 +1969,7 @@ object Text {
        |cch AS MATERIALIZED (SELECT doc_id, chunk_idx,
        |  min(pos) AS start_tok, count(*) AS n_toks,
        |  list_reduce(list_prepend(CAST(0 AS BIGINT), list(h ORDER BY pos)),
-       |    (a, v) -> (a * ${TextOps.TokMul} + v) % ${TextOps.P}) AS chash
+       |    (a, v) -> (a * ${Hashing.TokMul} + v) % ${Hashing.P}) AS chash
        |  FROM casg GROUP BY 1, 2)""".stripMargin
 
   private def duckShingleCte: String =
@@ -2355,7 +2357,7 @@ object Text {
          |  SELECT doc_id, lang, wt, skey, row_number() OVER (
          |    PARTITION BY lang ORDER BY skey DESC, doc_id ASC) AS rk
          |  FROM (SELECT doc_id, lang, greatest(n_chars, 1) AS wt,
-         |    round(pow((${TextOps.duck.fingerprint("text")} + 1.0) / ${TextOps.P + 1}.0,
+         |    round(pow((${TextOps.duck.fingerprint("text")} + 1.0) / ${Hashing.P + 1}.0,
          |      1.0 / greatest(n_chars, 1)), 9) AS skey
          |    FROM documents))
          |WHERE rk <= $WeightedSampleK""".stripMargin,
@@ -2364,7 +2366,7 @@ object Text {
          |  FROM documents),
          |hh AS (SELECT lang, ${TextOps.duck.tokenHash("t")} AS h FROM t),
          |d AS MATERIALIZED (SELECT DISTINCT lang, h FROM hh),
-         |dm AS (SELECT DISTINCT lang, ${TextOps.duck.kmvMix("h")} AS hm
+         |dm AS (SELECT DISTINCT lang, ${Hashing.duck.kmvMix("h")} AS hm
          |  FROM d),
          |kth AS (SELECT lang, hm AS kth_h FROM (
          |  SELECT lang, hm, row_number() OVER (
@@ -2529,7 +2531,7 @@ object Text {
     "d_ccnet_buckets" ->
       s"""$bigramScoredCte,
          |sc AS MATERIALIZED (SELECT doc_id, avg_logp,
-         |  ${TextOps.duck.kmvMix(s"(doc_id % $P)")} AS hm FROM scored),
+         |  ${Hashing.duck.kmvMix(s"(doc_id % $P)")} AS hm FROM scored),
          |smp AS (SELECT doc_id, avg_logp FROM (
          |  SELECT doc_id, avg_logp, row_number() OVER (
          |    ORDER BY hm, doc_id) AS rs FROM sc)
@@ -2575,9 +2577,9 @@ object Text {
          |  ${TextOps.duck.tokenHashes("text")} AS hs,
          |  ${TextOps.duck.fingerprint("text")} AS fp FROM documents),
          |bg AS MATERIALIZED (SELECT doc_id, source,
-         |  ${TextOps.duck.kmvMix(
-               s"(hs[CAST(u.i AS INT) + 1] * ${TextOps.TokMul} + " +
-                 s"hs[CAST(u.i AS INT) + 2]) % ${TextOps.P}")} % $DsirBuckets AS b
+         |  ${Hashing.duck.kmvMix(
+               s"(hs[CAST(u.i AS INT) + 1] * ${Hashing.TokMul} + " +
+                 s"hs[CAST(u.i AS INT) + 2]) % ${Hashing.P}")} % $DsirBuckets AS b
          |  FROM tk, UNNEST(range(0, len(hs) - 1)) AS u(i)),
          |tm AS MATERIALIZED (SELECT b, count(*) AS tc FROM bg
          |  WHERE source = '$DsirTarget' GROUP BY 1),
@@ -2593,8 +2595,8 @@ object Text {
          |  FROM bg LEFT JOIN tm USING (b) JOIN rm USING (b) CROSS JOIN tot
          |  WHERE source <> '$DsirTarget' GROUP BY doc_id),
          |gu AS (SELECT doc_id, source, lang,
-         |  round(-ln(-ln((${TextOps.duck.kmvMix("fp")} + 1.0) /
-         |    (CAST(${TextOps.P} AS DOUBLE) * CAST(${TextOps.P} AS DOUBLE)))), 9) AS g
+         |  round(-ln(-ln((${Hashing.duck.kmvMix("fp")} + 1.0) /
+         |    (CAST(${Hashing.P} AS DOUBLE) * CAST(${Hashing.P} AS DOUBLE)))), 9) AS g
          |  FROM tk WHERE source <> '$DsirTarget'),
          |j AS (SELECT s.doc_id, g.source, g.lang, s.n_big, s.logw,
          |  round(s.logw + g.g, 6) AS gkey FROM sc s JOIN gu g USING (doc_id)),

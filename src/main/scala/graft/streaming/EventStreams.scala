@@ -66,12 +66,12 @@ object EventStreams {
     */
   def dailyDistinctKmv(events: DataFrame): DataFrame = {
     graft.functions.KmvFunctions.register(events.sparkSession)
-    val P = graft.text.TextOps.P
+    val P = graft.graph.Hashing.P
     val k = graft.queries.Events.EvKmvK
     events
       .withWatermark("ts", "2 days")
       .selectExpr("ts", s"user_id % $P AS h")
-      .selectExpr("ts", s"${graft.text.TextOps.spark.kmvMix("h")} AS hm")
+      .selectExpr("ts", s"${graft.graph.Hashing.spark.kmvMix("h")} AS hm")
       .groupBy(window(col("ts"), "1 day"))
       .agg(graft.functions.KmvFunctions.kmvKth(col("hm"), k).as("kth_h"))
       .where(col("kth_h").isNotNull)
@@ -108,7 +108,7 @@ object EventStreams {
   /** HyperLogLog register matrix per daily window — streaming twin of the
     * batch `ev_daily_hll` row's SKETCH STATE (the m max-ρ registers):
     * same bounded-state argument as [[dailyCmsMatrix]], here
-    * [[graft.queries.Events.HllM]] longs per window regardless of user
+    * [[graft.graph.Hashing.HllM]] longs per window regardless of user
     * count, and max is the idempotent merge a watermarked groupBy
     * maintains incrementally. The α-corrected estimate is the
     * query-time READ path over this matrix (a per-window m-row fold),
@@ -117,16 +117,15 @@ object EventStreams {
     * EventStreamsSpec asserts full-replay stream ≡ batch registers.
     */
   def dailyHllRegisters(events: DataFrame): DataFrame = {
-    val P = graft.text.TextOps.P
-    val E = graft.queries.Events
+    val H = graft.graph.Hashing
     events
       .withWatermark("ts", "2 days")
-      .selectExpr("ts", s"user_id % $P AS h")
-      .selectExpr("ts", s"${graft.text.TextOps.spark.kmvMix("h")} AS hm")
-      .selectExpr("ts", s"hm % ${E.HllM} AS b", s"hm div ${E.HllM} AS w")
+      .selectExpr("ts", s"user_id % ${H.P} AS h")
+      .selectExpr("ts", s"${H.spark.kmvMix("h")} AS hm")
+      .selectExpr("ts", s"hm % ${H.HllM} AS b", s"hm div ${H.HllM} AS w")
       .selectExpr("ts", "b",
-        s"CASE WHEN w = 0 THEN ${E.HllW + 1} " +
-          s"ELSE ${E.HllW + 1} - length(bin(w)) END AS rho")
+        s"CASE WHEN w = 0 THEN ${H.HllW + 1} " +
+          s"ELSE ${H.HllW + 1} - length(bin(w)) END AS rho")
       .groupBy(window(col("ts"), "1 day"), col("b"))
       .agg(max(col("rho")).as("mj"))
       .select(date_format(col("window.start"), "yyyy-MM-dd").as("day"),
@@ -147,7 +146,7 @@ object EventStreams {
     */
   def dailyValueQuantiles(events: DataFrame): DataFrame = {
     graft.functions.SampleFunctions.register(events.sparkSession)
-    val P = graft.text.TextOps.P
+    val P = graft.graph.Hashing.P
     val E = graft.queries.Events
     // the empty-sample guard matters: a window whose events all carry a
     // null value yields an empty array, and element_at's 1-based index
@@ -160,7 +159,7 @@ object EventStreams {
       .withWatermark("ts", "2 days")
       .selectExpr("ts", "event_id", "value", s"event_id % $P AS h")
       .selectExpr("ts", "event_id", "value",
-        s"${graft.text.TextOps.spark.kmvMix("h")} AS hm")
+        s"${graft.graph.Hashing.spark.kmvMix("h")} AS hm")
       .groupBy(window(col("ts"), "1 day"))
       .agg(graft.functions.SampleFunctions.bottomKSample(
         col("hm"), col("event_id"), col("value"), E.EvQK).as("vals"))
@@ -219,11 +218,11 @@ object EventStreams {
   def dailySketchSet(events: DataFrame,
       k: Int = graft.queries.Events.EvOvK): DataFrame = {
     graft.functions.LongSetFunctions.register(events.sparkSession)
-    val P = graft.text.TextOps.P
+    val P = graft.graph.Hashing.P
     events
       .withWatermark("ts", "2 days")
       .selectExpr("ts", s"user_id % $P AS h")
-      .selectExpr("ts", s"${graft.text.TextOps.spark.kmvMix("h")} AS hm")
+      .selectExpr("ts", s"${graft.graph.Hashing.spark.kmvMix("h")} AS hm")
       .groupBy(window(col("ts"), "1 day"))
       .agg(graft.functions.LongSetFunctions.bottomKLongs(col("hm"), k)
         .as("vals"))
@@ -371,7 +370,7 @@ object EventStreams {
                 val e = if (st.hasPrev) alpha * daily + oneMinus * st.ewma
                   else daily
                 out += EwmaOut(typ, st.day, daily,
-                  graft.text.TextOps.round6(e))
+                  graft.graph.Hashing.round6(e))
                 st = EwmaState(d, c, e, hasPrev = true)
               } // d < st.day: late row for a closed day — absorbed
             }
@@ -436,9 +435,9 @@ object EventStreams {
                   (l2, beta * (l2 - lp) + oneMinusB * st.trd)
                 } else (daily, 0.0)
                 out += HoltOut(typ, st.day, daily,
-                  graft.text.TextOps.round6(l),
-                  graft.text.TextOps.round6(b),
-                  graft.text.TextOps.round6(l + b))
+                  graft.graph.Hashing.round6(l),
+                  graft.graph.Hashing.round6(b),
+                  graft.graph.Hashing.round6(l + b))
                 st = HoltState(d, c, l, b, hasPrev = true)
               } // d < st.day: late row for a closed day — absorbed
             }
@@ -515,10 +514,10 @@ object EventStreams {
                 val sNew = ga * (x - l) + ga1 * sP
                 val seas = st.seas.tail :+ sNew
                 out += HwOut(typ, st.day, x,
-                  graft.text.TextOps.round6(l),
-                  graft.text.TextOps.round6(b),
-                  graft.text.TextOps.round6(sNew),
-                  graft.text.TextOps.round6(l + b + seas.head))
+                  graft.graph.Hashing.round6(l),
+                  graft.graph.Hashing.round6(b),
+                  graft.graph.Hashing.round6(sNew),
+                  graft.graph.Hashing.round6(l + b + seas.head))
                 st = HwState(nextDay, nextCents, st.warm, l, b, seas)
               }
             }
@@ -588,8 +587,8 @@ object EventStreams {
                     val sp = math.max(0.0, st.sp + (x - mu - k))
                     val sn = math.max(0.0, st.sn + (mu - x - k))
                     out += CusumOut(typ, st.day, x,
-                      graft.text.TextOps.round6(sp),
-                      graft.text.TextOps.round6(sn),
+                      graft.graph.Hashing.round6(sp),
+                      graft.graph.Hashing.round6(sn),
                       if (sp > h || sn > h) 1L else 0L)
                     st = CusumState(d, c, sp, sn)
                   } // d < st.day: late row for a closed day — absorbed

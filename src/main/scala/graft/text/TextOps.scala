@@ -8,8 +8,9 @@ package graft.text
   * Every operator is defined ONCE as constants here and rendered TWICE —
   * a Spark SQL expression ([[spark]]) and a DuckDB oracle ([[duck]]) —
   * so the driver's hash-compare sees bit-identical integer results. All
-  * hashes are polynomial rolling hashes mod [[P]] (exact in 64-bit
-  * integer arithmetic in both engines; no engine-specific hash()).
+  * hashes are polynomial rolling hashes mod [[graft.graph.Hashing.P]]
+  * (exact in 64-bit integer arithmetic in both engines; no
+  * engine-specific hash()).
   *
   * Scale notes: everything here is a per-row projection (no shuffle) until
   * the LSH band join; the band join shuffles on (band, hash) — bounded by
@@ -18,12 +19,12 @@ package graft.text
   * because band-bucket sizes are capped by near-dup cluster sizes.
   */
 object TextOps {
+  import graft.graph.Hashing.{P, TokMul, kmvMix, round6}
 
-  /** Modulus for all polynomial hashes: fits products in 64-bit ints. */
-  val P = 1000000007L
-  /** Char multiplier (token hash) and token multiplier (doc fingerprint). */
+  /** Char multiplier of the token hash (the token multiplier of the doc
+    * fingerprint is [[graft.graph.Hashing.TokMul]]).
+    */
   val CharMul = 31L
-  val TokMul = 131L
 
   /** MinHash config: K permutations h_j(x) = (a_j·x + b_j) mod P, banded
     * into Bands groups of RowsPerBand.
@@ -48,17 +49,6 @@ object TextOps {
   /** Deterministic permutation constants (odd, < P). */
   val As: Seq[Long] = (0 until K).map(j => 2L * j * j + 3L * j + 7L)
   val Bs: Seq[Long] = (0 until K).map(j => 5L * j * j + j + 11L)
-
-  /** KMV full-range mixer constants: two independent multiply-mod-P
-    * universal hashes with LARGE multipliers (arbitrary fixed values in
-    * [1, P); P prime makes each a permutation of Z_P). [[kmvMix]]
-    * combines them into one value in [0, P²) ≈ [0, 2⁶⁰) — see there for
-    * why the raw [[tokenHash]] cannot feed a KMV estimate directly.
-    */
-  val KmvA1 = 768614337L
-  val KmvB1 = 404720439L
-  val KmvA2 = 523123711L
-  val KmvB2 = 987654323L
 
   /** Shingle width for near-dup (token 3-grams). */
   val ShingleW = 3
@@ -92,7 +82,7 @@ object TextOps {
 
   /** SimHash (32-bit) of one document — the typed-kernel twin of the
     * `d_simhash` DuckDB oracle: tokens = split(lower(text), '\s+') keeping
-    * empties (hash 0), per-token rolling hash (a·31 + codepoint) mod [[P]],
+    * empties (hash 0), per-token rolling hash (a·31 + codepoint) mod `P`,
     * bit-majority over ALL token hashes including duplicates.
     *
     * This runs inside `mapPartitions` as a single narrow pass — the
@@ -136,31 +126,9 @@ object TextOps {
     h
   }
 
-  /** KMV mixer — the typed twin of [[spark.kmvMix]] / [[duck.kmvMix]].
-    *
-    * [[tokenHash]] values are NOT uniform on [0, P): a short token's
-    * polynomial never wraps P, so short-token corpora cluster near 0 and
-    * the order-statistic estimate (k−1)/(h_k/P) overshoots by orders of
-    * magnitude (the r7 `d_vocab_kmv` bias). This maps each hash through
-    * two independent multiply-mod-P universal hashes of an xor-shift
-    * whitening of h — pairwise-independent spreading, the assumption the
-    * KMV bound (Bar-Yossef et al. 2002) actually needs — and packs them
-    * as z₁·P + z₂ ∈ [0, P²), a full-range key both engines can compute
-    * exactly: every intermediate stays below 2⁶³ (no 64-bit wrap, which
-    * ANSI Spark and DuckDB would both reject), using only *, %, xor and
-    * right-shift — all dual-renderable. Injective up to the ~2⁻³⁰
-    * per-pair chance that the whitened values differ by exactly P; both
-    * engines dedup AFTER mixing, so even a collision cannot diverge them.
-    */
-  def kmvMix(h: Long): Long = {
-    val z1 = (KmvA1 * (h ^ (h >>> 16)) + KmvB1) % P
-    val z2 = (KmvA2 * (h ^ (h >>> 8)) + KmvB2) % P
-    z1 * P + z2
-  }
-
-  /** KMV estimate from the kth-smallest distinct MIXED hash: [[kmvMix]]
-    * keys live in [0, P²), so h_k maps to the unit interval as
-    * u = (h_k+1)/P² (the +1 guards the measure-zero h_k = 0 corner) and
+  /** KMV estimate from the kth-smallest distinct MIXED hash:
+    * [[graft.graph.Hashing.kmvMix]] keys live in [0, P²), so h_k maps to
+    * the unit interval as u = (h_k+1)/P² (the +1 guards the measure-zero h_k = 0 corner) and
     * the estimate is (k−1)/u. ONE SQL text shared by every sketch row's
     * batch query, DuckDB oracle and streaming twin — both engines
     * evaluate the identical IEEE expression chain over the identical
@@ -228,13 +196,6 @@ object TextOps {
     out.toArray
   }
 
-  /** Half-away-from-zero 6-dp rounding — the same pin Spark's
-    * `functions.round` and DuckDB's `round(x, 6)` apply, for typed
-    * kernels that round driver-free.
-    */
-  def round6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   /** Per-document token-distribution Shannon entropy (`d_tok_entropy`):
     * H = log2(n) − (1/n)·Σ c·ln(c)/ln(2) over token counts c, plus the
     * vocab-normalized efficiency H / log2(vocab). The count fold runs in
@@ -262,7 +223,7 @@ object TextOps {
 
   /** Non-overlapping passage fingerprints — the sub-document dedup
     * feature space (`d_passage_dedup`): the token-hash stream cut into
-    * consecutive `w`-token windows, each window rolled with [[TokMul]]
+    * consecutive `w`-token windows, each window rolled with `TokMul`
     * exactly like [[fingerprint]] rolls the whole document. Trailing
     * tokens short of a full window contribute nothing (mirrored by the
     * `len // w` bound in [[duck.passagesFromHashes]]). Typed twin of
@@ -346,7 +307,7 @@ object TextOps {
     * multiple of `stride` below the token count, each window spans
     * `min(width, nTok - start)` tokens (the LAST window may be shorter
     * than the overlap; always ≥ 1 token) and rolls its token hashes with
-    * [[TokMul]] exactly like [[passageHashes]]. Typed twin of
+    * `TokMul` exactly like [[passageHashes]]. Typed twin of
     * [[duck.chunksFromHashes]]; identical integer math.
     */
   def chunkFps(text: String, width: Int, stride: Int): Array[(Int, Int, Long)] = {
@@ -427,7 +388,7 @@ object TextOps {
   /** Distinct token-3-gram shingle hashes of one document — the typed twin
     * of [[spark.shinglesFromHashes]]∘[[spark.tokenHashes]] (and of the
     * DuckDB `sh_t` CTE): tokens = `split(lower(text), '\s+')` keeping
-    * empties, per-token rolling hash, 3-gram rolling combine mod [[P]],
+    * empties, per-token rolling hash, 3-gram rolling combine mod `P`,
     * first-occurrence-distinct. Runs inside `mapPartitions` as one narrow
     * pass; the interpreted HOF expression chain it replaces was the
     * dominant cost of `d_minhash`/`d_lsh_pairs` (same ~100× CPU gap the
@@ -471,7 +432,7 @@ object TextOps {
     * ≥ WinnowW + ShingleW − 1 consecutive tokens shares at least one
     * fingerprint — which is what makes it the standard span-plagiarism /
     * overlap-localization signature. Pure integer math ([[tokenHash]] /
-    * [[TokMul]] / [[P]]); re-selection of a position is always
+    * `TokMul` / `P`); re-selection of a position is always
     * consecutive (a position never re-enters a later window), so the
     * emit-on-change rule equals a distinct over (pos, hash). Documents
     * with fewer than WinnowW grams have no full window and emit nothing.
@@ -538,7 +499,7 @@ object TextOps {
   /** Distinct character-[[NgramW]]-gram rolling hashes of one document —
     * the n-gram-Jaccard dedup signal (typed twin of the DuckDB `ng_t`
     * CTE): codepoints of lower(text) INCLUDING whitespace (both engines
-    * split on '' keeping every glyph), W-gram rolling combine mod [[P]],
+    * split on '' keeping every glyph), W-gram rolling combine mod `P`,
     * first-occurrence-distinct. One narrow pass per row.
     */
   def charNgrams(text: String): Array[Long] = {
@@ -654,14 +615,6 @@ object TextOps {
         s"+ element_at($hs, i + 3)) % $P) " +
         s"ELSE slice(transform(sequence(0, 0), i -> CAST(0 AS BIGINT)), 1, 0) END)"
 
-    /** KMV full-range mixer over a token-hash expression `h` — see the
-      * typed [[TextOps.kmvMix]] for the semantics and range argument.
-      */
-    def kmvMix(h: String): String =
-      // outer parens for the same append-safety as the DuckDB twin.
-      s"((($KmvA1 * (($h) ^ shiftright($h, 16)) + $KmvB1) % $P) * $P + " +
-        s"(($KmvA2 * (($h) ^ shiftright($h, 8)) + $KmvB2) % $P))"
-
     /** MinHash signature entry j over a shingle-array expression `sh`. */
     def minhash(sh: String, j: Int): String =
       s"array_min(transform($sh, x -> (${As(j)} * x + ${Bs(j)}) % $P))"
@@ -702,25 +655,12 @@ object TextOps {
         s"(($hs[i + 1] * $TokMul + $hs[i + 2]) * $TokMul + $hs[i + 3]) % $P) " +
         s"ELSE [] END)"
 
-    /** KMV full-range mixer — mirrors [[spark.kmvMix]] exactly (DuckDB
-      * spells bitwise xor as `xor()`; `>>` matches `shiftright` on
-      * non-negative inputs).
-      */
-    def kmvMix(h: String): String =
-      // `h` and the whole expression are defensively parenthesized: a
-      // composite argument must not re-associate under `>>`'s lower
-      // precedence, and a caller appending e.g. `% B` must modulate the
-      // full mixed value, not the last addend.
-      s"(((CAST($KmvA1 AS BIGINT) * xor(($h), ($h) >> 16) + $KmvB1) % $P) * " +
-        s"CAST($P AS BIGINT) + " +
-        s"((CAST($KmvA2 AS BIGINT) * xor(($h), ($h) >> 8) + $KmvB2) % $P))"
-
     def minhash(sh: String, j: Int): String =
       s"list_min(list_transform($sh, x -> (${As(j)} * x + ${Bs(j)}) % $P))"
 
     /** Passage fingerprints from a token-hash-array column `hs` — the
       * oracle twin of [[TextOps.passageHashes]]: `len // w` consecutive
-      * `w`-wide windows, each rolled with [[TokMul]].
+      * `w`-wide windows, each rolled with `TokMul`.
       */
     def passagesFromHashes(hs: String, w: Int): String =
       s"list_transform(range(0, len($hs) // $w), i -> " +
@@ -731,7 +671,7 @@ object TextOps {
     /** Overlapping chunk structs from a token-hash-array column `hs` —
       * the oracle twin of [[TextOps.chunkFps]]: one struct
       * `(start, ln, fp)` per stride-multiple start below `len(hs)`, the
-      * window capped at the token count, rolled with [[TokMul]].
+      * window capped at the token count, rolled with `TokMul`.
       */
     def chunksFromHashes(hs: String, width: Int, stride: Int): String =
       s"list_transform(range(0, (len($hs) - 1) // $stride + 1), i -> {" +

@@ -1,7 +1,7 @@
 package graft
 
 /** Pins the board fit policy (r19 verdict #1): `Bench.runBoard` calls
-  * `Graph.invalidateModels(spark, sfDir)` before its first row, so
+  * `Embeddings.invalidateModels(spark, sfDir)` before its first row, so
   * every attempt starts with EMPTY session-fit caches and each fit is
   * paid exactly once inside a timed row per attempt. The testable core
   * is the fan-out itself: after one invalidation call, no session pin
@@ -15,15 +15,17 @@ class BenchFitPolicySpec extends SparkSpec {
       "pins, and the refit reproduces the same rows") {
     val sc = spark.sparkContext
     // Touch one fit-bearing row per family: PPR family loop (Graph),
-    // graph snapshot (GraphOps).
-    val rows = Seq("g_pagerank", "g_degree")
+    // LSH pair table (Text), bucketed tables (Relational), graph
+    // snapshot (GraphOps), served GT (Embeddings).
+    val rows = Seq("g_pagerank", "d_lsh_pairs",
+      "q12_bucket_join", "g_degree", "e_cosine_topk")
     val before = rows.map { n =>
       n -> SparkEntry.queries(n)(spark, sfDir).collect().toSeq
     }.toMap
     assert(graft.operators.SessionPins.pinned(sc).nonEmpty,
       "fit-bearing rows should have pinned session blocks")
     // the exact call Bench.runBoard makes at the top of every attempt
-    graft.queries.Graph.invalidateModels(spark, sfDir)
+    graft.queries.Embeddings.invalidateModels(spark, sfDir)
     assert(graft.operators.SessionPins.pinned(sc).isEmpty,
       "an attempt must start with NO session fits — some family's pins " +
         "survived the central invalidation chain")

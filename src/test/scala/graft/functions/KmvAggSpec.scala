@@ -50,7 +50,7 @@ class KmvAggSpec extends SparkSpec {
     val k = 256
     val kth = rows.toDF("h").agg(KmvFunctions.kmvKth(col("h"), k)).head.getLong(0)
     // TextOps.tokenHash lives in [0, P) — map to the unit interval by P.
-    val u = kth.toDouble / graft.text.TextOps.P.toDouble
+    val u = kth.toDouble / graft.graph.Hashing.P.toDouble
     val est = (k - 1) / u
     assert(est > rows.length / 3.0 && est < rows.length * 3.0,
       s"est=$est for n=${rows.length}")
@@ -58,6 +58,7 @@ class KmvAggSpec extends SparkSpec {
 
   test("kmvMix repairs the short-token bias (the d_vocab_kmv mapping)") {
     val ops = graft.text.TextOps
+    val H = graft.graph.Hashing
     // SHORT tokens: the rolling polynomial never wraps P, hashes cluster
     // near 0, and the raw order-statistic estimate overshoots wildly —
     // the r7 d_vocab_kmv defect this mixer exists to fix.
@@ -68,14 +69,14 @@ class KmvAggSpec extends SparkSpec {
       val kth = keys.distinct.sorted.apply(k - 1)
       (k - 1) / ((kth.toDouble + 1.0) / range)
     }
-    val rawEst = estimate(hashes, ops.P.toDouble)
-    val mixEst = estimate(hashes.map(ops.kmvMix), ops.P.toDouble * ops.P.toDouble)
+    val rawEst = estimate(hashes, H.P.toDouble)
+    val mixEst = estimate(hashes.map(H.kmvMix), H.P.toDouble * H.P.toDouble)
     assert(rawEst > hashes.length * 10.0,
       s"raw short-token estimate should be badly biased, got $rawEst")
     assert(mixEst > hashes.length / 1.5 && mixEst < hashes.length * 1.5,
       s"mixed estimate outside the KMV band: $mixEst for n=${hashes.length}")
     // range sanity: every mixed key fits [0, P²) — the SQL renderings
     // depend on no intermediate exceeding 2⁶³.
-    assert(hashes.map(ops.kmvMix).forall(z => z >= 0 && z < ops.P * ops.P))
+    assert(hashes.map(H.kmvMix).forall(z => z >= 0 && z < H.P * H.P))
   }
 }

@@ -174,7 +174,7 @@ class EmbeddingsSpec extends SparkSpec {
     }
     def cos(a: Long, b: Long): Double = {
       val (va, vb) = (emb(a), emb(b))
-      graft.text.TextOps.round6(
+      graft.graph.Hashing.round6(
         dot(va, vb) / (math.sqrt(dot(va, va)) * math.sqrt(dot(vb, vb))))
     }
     val adj = Embeddings.nswGraph(spark, sfDir).collect()
@@ -331,7 +331,7 @@ class EmbeddingsSpec extends SparkSpec {
 
   test("e_ivf_recall is exactly the overlap of e_ann_ivf with the exact " +
       "top-k, per query") {
-    import graft.text.TextOps.round6
+    import graft.graph.Hashing.round6
     val exact = brute.where(col("rk") <= Embeddings.IvfTopK)
       .select("q_id", "vec_id").collect()
       .map(r => (r.getLong(0), r.getLong(1)))
@@ -351,7 +351,7 @@ class EmbeddingsSpec extends SparkSpec {
   }
 
   test("e_prefix_recall replays a brute-force Matryoshka curve exactly") {
-    import graft.text.TextOps.round6
+    import graft.graph.Hashing.round6
     val vecs = graft.Tables(spark, sfDir, "embeddings")
       .selectExpr("vec_id", "transform(embedding, x -> CAST(x AS DOUBLE))")
       .collect()
@@ -444,7 +444,7 @@ class EmbeddingsSpec extends SparkSpec {
         val nHit = ex.count(hits.contains).toLong
         val (gn, gh, gr) = got(q)
         assert(gn == ex.length.toLong && gh == nHit, s"$recallName q=$q")
-        assert(gr == graft.text.TextOps.round6(nHit.toDouble / ex.length))
+        assert(gr == graft.graph.Hashing.round6(nHit.toDouble / ex.length))
       }
     }
     check("e_pq_search", "e_pq_recall")
@@ -465,7 +465,7 @@ class EmbeddingsSpec extends SparkSpec {
     // the cut really is the global top-N of the full fit, cells match
     val fit = Embeddings.kmFit(spark, sfDir).collect()
       .map(r => (r.getLong(0), r.getInt(1),
-        graft.text.TextOps.round6(r.getDouble(2))))
+        graft.graph.Hashing.round6(r.getDouble(2))))
     val want = fit.sortBy(t => (-t._3, t._1)).take(Embeddings.OodTopN)
     assert(got.toSeq == want.toSeq)
     val cells = Embeddings.queries("e_kmeans")(spark, sfDir).collect()

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.SparkSpec
+import graft.graph.Hashing
 
 class EventsSpec extends SparkSpec {
 
@@ -70,7 +71,6 @@ class EventsSpec extends SparkSpec {
   }
 
   test("ev_rfm replays a brute-force sampled-tercile scorer exactly") {
-    import graft.text.TextOps
     val got = Events.queries("ev_rfm")(spark, sfDir).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3),
         r.getInt(4), r.getInt(5), r.getInt(6), r.getInt(7)))).toMap
@@ -86,7 +86,7 @@ class EventsSpec extends SparkSpec {
         es.map(_._3).sum)
     }.toArray
     assert(got.keySet == rfm.map(_._1).toSet)
-    val sample = rfm.map(t => (TextOps.kmvMix(t._1 % TextOps.P), t))
+    val sample = rfm.map(t => (Hashing.kmvMix(t._1 % Hashing.P), t))
       .sortBy(p => (p._1, p._2._1)).take(Events.RfmSampleK).map(_._2)
     val k = sample.length
     def thr(metric: ((Long, Long, Long, Long)) => Long): (Long, Long) = {
@@ -137,7 +137,7 @@ class EventsSpec extends SparkSpec {
       sorted.zipWithIndex.foreach { case ((_, _, x, gotE), i) =>
         e = if (i == 0) x
         else Events.EwmaAlpha * x + Events.EwmaOneMinusAlpha * e
-        assert(gotE == graft.text.TextOps.round6(e))
+        assert(gotE == graft.graph.Hashing.round6(e))
         // smoothing stays inside the running min/max envelope
         val hist = sorted.take(i + 1).map(_._3)
         assert(e >= hist.min - 1e-9 && e <= hist.max + 1e-9)
@@ -163,9 +163,9 @@ class EventsSpec extends SparkSpec {
             l = Events.HoltAlpha * x + Events.HoltOneMinusAlpha * (lp + b)
             b = Events.HoltBeta * (l - lp) + Events.HoltOneMinusBeta * b
           }
-          assert(gl == graft.text.TextOps.round6(l))
-          assert(gb == graft.text.TextOps.round6(b))
-          assert(gf == graft.text.TextOps.round6(l + b))
+          assert(gl == graft.graph.Hashing.round6(l))
+          assert(gb == graft.graph.Hashing.round6(b))
+          assert(gf == graft.graph.Hashing.round6(l + b))
       }
     }
     // the property EWMA lacks: on a pure linear ramp the trend term
@@ -216,10 +216,10 @@ class EventsSpec extends SparkSpec {
             Events.HwOneMinusGamma * sP
           seas = seas.tail :+ sNew
           assert(gd == x)
-          assert(gl == graft.text.TextOps.round6(l))
-          assert(gb == graft.text.TextOps.round6(b))
-          assert(gs == graft.text.TextOps.round6(sNew))
-          assert(gf == graft.text.TextOps.round6(l + b + seas.head))
+          assert(gl == graft.graph.Hashing.round6(l))
+          assert(gb == graft.graph.Hashing.round6(b))
+          assert(gs == graft.graph.Hashing.round6(sNew))
+          assert(gf == graft.graph.Hashing.round6(l + b + seas.head))
       }
     }
     // the property neither ewma nor holt has: on trend + weekly season,
@@ -296,8 +296,8 @@ class EventsSpec extends SparkSpec {
         sp = math.max(0.0, sp + (x - mu - k))
         sn = math.max(0.0, sn + (mu - x - k))
         assert(gd == x)
-        assert(gp == graft.text.TextOps.round6(sp))
-        assert(gn == graft.text.TextOps.round6(sn))
+        assert(gp == graft.graph.Hashing.round6(sp))
+        assert(gn == graft.graph.Hashing.round6(sn))
         assert(ga == (if (sp > h || sn > h) 1L else 0L))
         assert(gp >= 0.0 && gn >= 0.0)
       }
@@ -340,7 +340,7 @@ class EventsSpec extends SparkSpec {
       val h = (math.log(n.toDouble) - s / n) / math.log(2.0)
       val (gn, gk, gh) = got(f)
       assert((gn, gk) == ((n, ts.length.toLong)), s"state $f")
-      assert(gh == graft.text.TextOps.round6(h))
+      assert(gh == graft.graph.Hashing.round6(h))
       assert(gh >= 0.0 &&
         gh <= math.log(ts.length.toDouble) / math.log(2.0) + 1e-9)
     }
@@ -362,7 +362,7 @@ class EventsSpec extends SparkSpec {
         .map(_._1).distinct.length.toLong
       val (gd, gw, gs) = got(d)
       assert((gd, gw) == ((dau, wau)))
-      assert(gs == graft.text.TextOps.round6(dau.toDouble / wau))
+      assert(gs == graft.graph.Hashing.round6(dau.toDouble / wau))
       assert(dau <= wau && wau <= 7 * dau)
     }
   }
@@ -399,7 +399,7 @@ class EventsSpec extends SparkSpec {
       val t = (ma - mb) / math.sqrt(se2)
       val dof = se2 * se2 / (sea * sea / (na - 1) + seb * seb / (nb - 1))
       val got = rows((ta, tb))
-      val r6 = graft.text.TextOps.round6 _
+      val r6 = graft.graph.Hashing.round6 _
       assert(got == ((na, nb, r6(ma), r6(mb), r6(t), r6(dof))))
       assert((got._5 > 0) == (ma > mb) || got._5 == 0.0)
       // Welch dof sits between min(n)-1 and n_a+n_b-2

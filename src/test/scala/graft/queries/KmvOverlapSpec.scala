@@ -1,8 +1,8 @@
 package graft.queries
 
 import graft.{SparkSpec, Tables}
-import graft.text.TextOps
 import org.apache.spark.sql.functions._
+import graft.graph.Hashing
 
 class KmvOverlapSpec extends SparkSpec {
 
@@ -22,7 +22,7 @@ class KmvOverlapSpec extends SparkSpec {
     val days = byDay.keys.toSeq.sorted
 
     def sketch(users: Set[Long]): Set[Long] =
-      users.map(u => TextOps.kmvMix(u % TextOps.P)).toSeq.sorted
+      users.map(u => Hashing.kmvMix(u % Hashing.P)).toSeq.sorted
         .take(Events.EvOvK).toSet
 
     val fmt = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd")

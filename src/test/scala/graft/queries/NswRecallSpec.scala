@@ -73,7 +73,7 @@ class NswRecallSpec extends SparkSpec {
       .selectExpr("vec_id", "transform(embedding, x -> CAST(x AS DOUBLE)) AS v")
       .collect()
       .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
-    def r6(x: Double): Double = graft.text.TextOps.round6(x)
+    def r6(x: Double): Double = graft.graph.Hashing.round6(x)
     val nrm = emb.map { case (id, v) =>
       id -> math.sqrt(v.map(x => x * x).sum) }
     val ids = emb.keys.toSeq.sorted
@@ -157,7 +157,7 @@ class NswRecallSpec extends SparkSpec {
       val (nEx, nHit) = (r.getLong(1), r.getLong(2))
       assert(nHit >= 0 && nHit <= nEx)
       assert(r.getDouble(3) ==
-        graft.text.TextOps.round6(nHit.toDouble / nEx))
+        graft.graph.Hashing.round6(nHit.toDouble / nEx))
       assert(r.getLong(4) > 0, "n_visited discloses the cost axis")
     }
   }

@@ -222,8 +222,8 @@ class PipelineQueriesSpec extends SparkSpec {
       val sorted = part.sortBy(t => (t._3, t._2))
       sorted.zipWithIndex.foreach { case ((_, _, _, pr, cd, _), i) =>
         val wantPr = if (n == 1) 0.0 else i.toDouble / (n - 1)
-        assert(pr == graft.text.TextOps.round6(wantPr))
-        assert(cd == graft.text.TextOps.round6((i + 1).toDouble / n))
+        assert(pr == graft.graph.Hashing.round6(wantPr))
+        assert(cd == graft.graph.Hashing.round6((i + 1).toDouble / n))
       }
       val tiles = sorted.map(_._6)
       assert(tiles.sameElements(tiles.sorted), "tiles follow the order")
@@ -362,7 +362,7 @@ class PipelineQueriesSpec extends SparkSpec {
       val (text, w) = docs(id)
       assert(w == wt)
       val u = (graft.text.TextOps.fingerprint(text) + 1.0) /
-        (graft.text.TextOps.P + 1.0)
+        (graft.graph.Hashing.P + 1.0)
       val expect = BigDecimal(math.pow(u, 1.0 / w))
         .setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
       assert(skey == expect, s"doc $id key $skey vs $expect")
@@ -669,34 +669,35 @@ class PipelineQueriesSpec extends SparkSpec {
   test("ev_daily_hll equals an independent in-memory HLL replay of the " +
       "raw events") {
     val E = graft.queries.Events
+    val H = graft.graph.Hashing
     val rows = E.queries("ev_daily_hll")(spark, sfDir).collect()
       .map(r => r.getString(0) ->
         ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
     assert(rows.nonEmpty)
     // replay: same mixer, registers and correction computed straight in
     // Scala (numberOfLeadingZeros instead of the SQL bin-length spelling)
-    val P = graft.text.TextOps.P
+    val P = graft.graph.Hashing.P
     val raw = graft.Tables(spark, sfDir, "events")
       .selectExpr("date_format(date_trunc('day', ts), 'yyyy-MM-dd') AS day",
         "user_id").collect()
       .map(r => (r.getString(0), r.getLong(1)))
     val want = raw.groupBy(_._1).map { case (day, evs) =>
-      val regs = new Array[Int](E.HllM)
+      val regs = new Array[Int](H.HllM)
       evs.foreach { case (_, uid) =>
-        val hm = graft.text.TextOps.kmvMix(uid % P)
-        val b = (hm % E.HllM).toInt
-        val w = hm / E.HllM
+        val hm = graft.graph.Hashing.kmvMix(uid % P)
+        val b = (hm % H.HllM).toInt
+        val w = hm / H.HllM
         val rho =
-          if (w == 0) E.HllW + 1
-          else E.HllW + 1 - (64 - java.lang.Long.numberOfLeadingZeros(w))
+          if (w == 0) H.HllW + 1
+          else H.HllW + 1 - (64 - java.lang.Long.numberOfLeadingZeros(w))
         if (rho > regs(b)) regs(b) = rho
       }
       val v = regs.count(_ == 0)
-      val sScaled = regs.map(m => 1L << (E.HllW + 1 - m)).sum
-      val rawEst = (0.673 * E.HllM * E.HllM) /
-        (sScaled.toDouble / (1L << (E.HllW + 1)).toDouble)
+      val sScaled = regs.map(m => 1L << (H.HllW + 1 - m)).sum
+      val rawEst = (0.673 * H.HllM * H.HllM) /
+        (sScaled.toDouble / (1L << (H.HllW + 1)).toDouble)
       val est =
-        if (rawEst <= 2.5 * E.HllM && v > 0) E.HllM * math.log(E.HllM.toDouble / v)
+        if (rawEst <= 2.5 * H.HllM && v > 0) H.HllM * math.log(H.HllM.toDouble / v)
         else rawEst
       val est4 = BigDecimal(est)
         .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
@@ -810,7 +811,7 @@ class PipelineQueriesSpec extends SparkSpec {
         for (i <- 0 to hs.length - Text.SpanW) {
           var x = 0L
           for (j <- i until i + Text.SpanW)
-            x = (x * graft.text.TextOps.TokMul + hs(j)) % graft.text.TextOps.P
+            x = (x * graft.graph.Hashing.TokMul + hs(j)) % graft.graph.Hashing.P
           val (ds, c) = spans.getOrElse(x, (Set.empty[Long], 0L))
           spans(x) = (ds + id, c + 1)
         }

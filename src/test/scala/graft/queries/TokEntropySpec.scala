@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.SparkSpec
-import graft.text.TextOps
+import graft.graph.Hashing
 
 class TokEntropySpec extends SparkSpec {
 
@@ -22,7 +22,7 @@ class TokEntropySpec extends SparkSpec {
         ((r.getLong(1), r.getLong(2), r.getDouble(3), r.getDouble(4))))
       .toMap
     val hSkew =
-      TextOps.round6(2.0 - 3.0 * math.log(3.0) / (4.0 * math.log(2.0)))
+      Hashing.round6(2.0 - 3.0 * math.log(3.0) / (4.0 * math.log(2.0)))
     assert(got(0L) == ((4L, 1L, 0.0, 0.0)), "degenerate doc: zero entropy")
     assert(got(1L) == ((4L, 4L, 2.0, 1.0)), "uniform: log2(4), efficiency 1")
     // vocab is {a, b} so log2(vocab) = 1: efficiency equals H itself

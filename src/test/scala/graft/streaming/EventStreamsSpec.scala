@@ -118,20 +118,20 @@ class EventStreamsSpec extends SparkSpec {
       input.addData(b.toSeq); q.processAllAvailable()
       val got = spark.table("dhll").collect()
         .map(r => (r.getString(0), r.getLong(1), r.getInt(2))).toSet
-      val P = graft.text.TextOps.P
+      val P = graft.graph.Hashing.P
       val want = graft.queries.Events.hllRegisters(
           Tables(spark, sfDir, "events")
             .selectExpr(
               "date_format(date_trunc('day', ts), 'yyyy-MM-dd') AS day",
               s"user_id % $P AS h")
             .selectExpr("day",
-              s"${graft.text.TextOps.spark.kmvMix("h")} AS hm"))
+              s"${graft.graph.Hashing.spark.kmvMix("h")} AS hm"))
         .collect()
         .map(r => (r.getString(0), r.getLong(1), r.getInt(2))).toSet
       assert(got == want)
       // bounded state: never more than m registers per day.
       got.groupBy(_._1).foreach { case (day, g) =>
-        assert(g.size <= graft.queries.Events.HllM,
+        assert(g.size <= graft.graph.Hashing.HllM,
           s"day $day has ${g.size} registers")
       }
     } finally q.stop()
@@ -177,7 +177,7 @@ class EventStreamsSpec extends SparkSpec {
     implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
 
     val E = graft.queries.Events
-    val T = graft.text.TextOps
+    val H = graft.graph.Hashing
     val ts = java.sql.Timestamp.valueOf("2024-03-05 10:00:00")
     // 100 events on one day, ids 0..99: ids ≡ 0,1,2 (mod 10) carry a NULL
     // value, the rest value = id. Fixture sanity below proves at least one
@@ -188,7 +188,7 @@ class EventStreamsSpec extends SparkSpec {
       (id, ts, if (id % 10 < 3) None else Some(id.toDouble))
     }
     val nullIds = rows.filter(_._3.isEmpty).map(_._1).toSet
-    val bottomK = rows.map(_._1).sortBy(id => T.kmvMix(id % T.P))
+    val bottomK = rows.map(_._1).sortBy(id => H.kmvMix(id % H.P))
       .take(E.EvQK).toSet
     assert((bottomK & nullIds).nonEmpty, "fixture lost its point")
 
@@ -536,12 +536,12 @@ class EventStreamsSpec extends SparkSpec {
       val got = spark.table("dsk").collect()
         .map(r => (r.getString(0), r.getLong(1))).toSet
 
-      val P = graft.text.TextOps.P
+      val P = graft.graph.Hashing.P
       val want = Tables(spark, sfDir, "events")
         .selectExpr(
           "date_format(date_trunc('day', ts), 'yyyy-MM-dd') AS day",
           s"user_id % $P AS h")
-        .selectExpr("day", s"${graft.text.TextOps.spark.kmvMix("h")} AS hm")
+        .selectExpr("day", s"${graft.graph.Hashing.spark.kmvMix("h")} AS hm")
         .distinct()
         .withColumn("rn", org.apache.spark.sql.functions.row_number().over(
           org.apache.spark.sql.expressions.Window.partitionBy(col("day"))

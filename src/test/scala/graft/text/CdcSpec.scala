@@ -2,6 +2,7 @@ package graft.text
 
 import graft.SparkSpec
 import graft.queries.Text
+import graft.graph.Hashing
 
 class CdcSpec extends SparkSpec {
 
@@ -35,7 +36,7 @@ class CdcSpec extends SparkSpec {
         if (!last) assert(hs.last % TextOps.CdcMod == 0L)
         // ordered fold replay
         val want = hs.foldLeft(0L)((a, h) =>
-          (a * TextOps.TokMul + h) % TextOps.P)
+          (a * Hashing.TokMul + h) % Hashing.P)
         assert(chash == want)
       }
       if (ch.length > 1) multi += 1

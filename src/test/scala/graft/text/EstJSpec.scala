@@ -21,7 +21,7 @@ class EstJSpec extends SparkSpec {
     val sigs = scala.collection.mutable.Map.empty[Long, Array[Long]]
     def sigOf(id: Long): Array[Long] = sigs.getOrElseUpdate(id,
       TextOps.minhashSig(TextOps.shingles(texts(id))))
-    val r6 = graft.text.TextOps.round6 _
+    val r6 = graft.graph.Hashing.round6 _
     rows.foreach { case (a, b, jac, nEq, est, err) =>
       val want = sigOf(a).zip(sigOf(b)).count { case (x, y) => x == y }
       assert(nEq == want, s"pair ($a,$b)")

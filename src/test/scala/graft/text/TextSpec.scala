@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.functions._
 import graft.{SparkSpec, Tables}
+import graft.graph.Hashing
 
 /** Text-operator kernels vs their expression-plan twins.
   *
@@ -46,7 +47,7 @@ class TextSpec extends SparkSpec {
       if (cps.length < TextOps.NgramW) Seq.empty
       else cps.sliding(TextOps.NgramW)
         .map(_.foldLeft(BigInt(0))((a, c) =>
-          (a * TextOps.CharMul + c) mod BigInt(TextOps.P)).toLong)
+          (a * TextOps.CharMul + c) mod BigInt(Hashing.P)).toLong)
         .toSeq.distinct
     }
     val samples = Seq("", "abcd", "abcde", "the cat sat on the mat",
@@ -159,7 +160,7 @@ class TextSpec extends SparkSpec {
     // all hashes 0 -> simhash 0 either way.
     assert(TextOps.simhash32("  ") == 0L)
     // single token: simhash = low 32 bits of its rolling hash.
-    val h = "abc".foldLeft(0L)((a, c) => (a * TextOps.CharMul + c.toInt) % TextOps.P)
+    val h = "abc".foldLeft(0L)((a, c) => (a * TextOps.CharMul + c.toInt) % Hashing.P)
     assert(TextOps.simhash32("abc") == (h & 0xFFFFFFFFL))
   }
 }

@@ -2,6 +2,7 @@ package graft.text
 
 import graft.SparkSpec
 import graft.queries.Text
+import graft.graph.Hashing
 
 class WinnowSpec extends SparkSpec {
 
@@ -15,8 +16,8 @@ class WinnowSpec extends SparkSpec {
     val hs = toks.map(TextOps.tokenHash)
     val m = hs.length - TextOps.ShingleW + 1
     if (m < TextOps.WinnowW) return Set.empty
-    val kg = (0 until m).map(i => ((hs(i) * TextOps.TokMul + hs(i + 1))
-      % TextOps.P * TextOps.TokMul + hs(i + 2)) % TextOps.P)
+    val kg = (0 until m).map(i => ((hs(i) * Hashing.TokMul + hs(i + 1))
+      % Hashing.P * Hashing.TokMul + hs(i + 2)) % Hashing.P)
     (0 to m - TextOps.WinnowW).map { w =>
       val win = (w until w + TextOps.WinnowW)
       val minv = win.map(kg).min
@@ -102,7 +103,7 @@ class WinnowSpec extends SparkSpec {
     } yield {
       val n = (sets(a) intersect sets(b)).size.toLong
       val j = n.toDouble / (sets(a).size + sets(b).size - n).toDouble
-      (a, b) -> ((n, graft.text.TextOps.round6(j)))
+      (a, b) -> ((n, graft.graph.Hashing.round6(j)))
     }).toMap
   }
 
