@@ -1,7 +1,9 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import graft.graph.{Csr, GraphOps}
 import graft.ppr._
 
@@ -31,22 +33,67 @@ trait PrecomputedPpr {
 }
 
 /** Facade over all algorithm families (the reference's `newAlgoObj`
-  * factory, `Gen_Util.java:66-97`). Holds the graph once (edges DF +
-  * broadcastable CSR snapshot) like the reference holds its HeavyGraph.
+  * factory, `Gen_Util.java:66-97`). Holds the graph once, like the
+  * reference holds its HeavyGraph: the edges DF, the CSR snapshot, and
+  * one broadcast of it (plus one of the reversed CSR for [[backward]]),
+  * made on first use and reused by every call. [[close]] destroys the
+  * broadcasts and unpersists the edges; a call after it fails.
   */
 final class PprEngine(
     val spark: SparkSession,
     edges: DataFrame,
-    val conf: PprConf = PprConf()) {
+    val conf: PprConf = PprConf()) extends AutoCloseable {
 
   val edgesDf: DataFrame = edges.persist()
   lazy val csr: Csr = GraphOps.buildCsr(edgesDf)
   private lazy val rcsr: Csr = Base.reversedCsr(edgesDf)
   private lazy val fwdDeg: Array[Int] = Base.forwardDegrees(csr, rcsr)
 
+  @volatile private var closed = false
+  private var csrBc: Broadcast[Csr] = null
+  private var rcsrBc: Broadcast[Csr] = null
+  private var fwdDegBc: Broadcast[Array[Int]] = null
+
+  private def requireOpen(): Unit =
+    if (closed) throw new IllegalStateException("PprEngine is closed")
+
+  /** The engine's broadcast of [[csr]]. */
+  private def sharedCsr: Broadcast[Csr] = synchronized {
+    requireOpen()
+    if (csrBc == null) csrBc = spark.sparkContext.broadcast(csr)
+    csrBc
+  }
+
+  /** The engine's broadcasts of the reversed CSR and its forward degrees. */
+  private def sharedReversed: (Broadcast[Csr], Broadcast[Array[Int]]) = synchronized {
+    requireOpen()
+    if (rcsrBc == null) {
+      rcsrBc = spark.sparkContext.broadcast(rcsr)
+      fwdDegBc = spark.sparkContext.broadcast(fwdDeg)
+    }
+    (rcsrBc, fwdDegBc)
+  }
+
+  /** Destroys the broadcasts and unpersists [[edgesDf]]; later calls fail
+    * with an `IllegalStateException`. A second close does nothing.
+    */
+  def close(): Unit = synchronized {
+    if (!closed) {
+      closed = true
+      Seq(csrBc, rcsrBc, fwdDegBc).filter(_ != null).foreach(_.destroy())
+      edgesDf.unpersist()
+    }
+  }
+
   /** `(node_id, score)` of a one-source batch result. */
   private def vectorOf(batch: DataFrame): DataFrame =
     batch.select(col("node_id"), col("score"))
+
+  /** A local `(node_id, score)` DataFrame: an action on it runs no job. */
+  private def localVector(rows: Seq[(Long, Double)]): DataFrame =
+    spark.createDataFrame(
+      java.util.Arrays.asList(rows.map { case (v, p) => Row(v, p) }: _*),
+      PprEngine.VectorSchema)
 
   /** Tie-inclusive top-k (T2) of `vector`, evaluated once: `k` is checked
     * first, then the vector is collected, cut at [[Fora.kthLargest]] (the
@@ -55,12 +102,9 @@ final class PprEngine(
     */
   private def topkOf(vector: => DataFrame, k: Int): DataFrame = {
     requireK(k)
-    val v = vector
-    val rows = v.collect()
-    val kth = Fora.kthLargest(rows.map(_.getDouble(1)), k)
-    spark.createDataFrame(
-      java.util.Arrays.asList(rows.filter(_.getDouble(1) >= kth): _*),
-      v.schema)
+    val rows = vector.collect().map(r => (r.getLong(0), r.getDouble(1)))
+    val kth = Fora.kthLargest(rows.map(_._2), k)
+    localVector(rows.filter(_._2 >= kth))
   }
 
   private def requireK(k: Int): Unit =
@@ -76,7 +120,7 @@ final class PprEngine(
       topkOf(wholeGraphPpr(source), k)
     /** Multi-source variant: `(src, node_id, score)`. */
     def batch(sources: Seq[Long]): DataFrame =
-      PowerIteration.batch(spark, csr, sources, conf.alpha, 100)
+      PowerIteration.batch(spark, sharedCsr, sources, conf.alpha, 100, 0)
   }
 
   /** Preprocessing lifecycle shared by the non-BASE algo families
@@ -91,9 +135,9 @@ final class PprEngine(
     def preprocess(dir: String): Unit =
       PprStore.write(batchAll(csr.ids.toSeq), dir)
     def readPpr(dir: String, source: Long): DataFrame =
-      PprStore.read(spark, dir, source)
-    def prepSize(dir: String): Long = PprStore.size(spark, dir)
-    def deletePrep(dir: String): Boolean = PprStore.delete(spark, dir)
+      { requireOpen(); PprStore.read(spark, dir, source) }
+    def prepSize(dir: String): Long = { requireOpen(); PprStore.size(spark, dir) }
+    def deletePrep(dir: String): Boolean = { requireOpen(); PprStore.delete(spark, dir) }
   }
 
   /** K2 — forward push at rmax. */
@@ -103,7 +147,7 @@ final class PprEngine(
     def topkPpr(source: Long, k: Int): DataFrame =
       topkOf(wholeGraphPpr(source), k)
     protected def batchAll(sources: Seq[Long]): DataFrame =
-      ForwardPush.batch(spark, csr, sources, conf.alpha, rmax)
+      ForwardPush.batch(spark, sharedCsr, sources, conf.alpha, rmax, 0, 0)
   }
 
   /** K5 — Monte-Carlo at epsilon. */
@@ -113,29 +157,35 @@ final class PprEngine(
     def topkPpr(source: Long, k: Int): DataFrame =
       topkOf(wholeGraphPpr(source), k)
     protected def batchAll(sources: Seq[Long]): DataFrame =
-      MonteCarlo.sspprBatch(spark, csr, sources, conf.alpha, epsilon,
-        seed = conf.seed)
+      MonteCarlo.sspprBatch(spark, sharedCsr, sources, conf.alpha, epsilon,
+        0.0, 0.0, conf.seed, 0)
   }
 
-  /** K6/K7 — FORA. A top-k call with `k >= n` returns the whole vector. */
+  /** K6/K7 — FORA. A top-k call with `k >= n` returns the whole vector.
+    * A top-k call runs its one Spark job before it returns and answers
+    * with local rows.
+    */
   final class fora(epsilon: Double) extends SsPpr with TopkPpr {
     requirePositive("epsilon", epsilon)
     private def fconf =
       Fora.Conf(conf.alpha, epsilon, conf.pfail, conf.delta, conf.seed)
     def wholeGraphPpr(source: Long): DataFrame =
-      vectorOf(Fora.batch(spark, csr, Seq(source), fconf))
+      vectorOf(Fora.batch(spark, sharedCsr, Seq(source), fconf, 0))
     def topkPpr(source: Long, k: Int): DataFrame = {
       requireK(k)
-      vectorOf(Fora.topkBatch(spark, csr, Seq(source), k, fconf))
+      localVector(Fora.topkRows(spark, sharedCsr, Seq(source), k, fconf)
+        .map { case (_, v, p) => (v, p) }.collect())
     }
   }
 
   /** K8 — backward search: the PPR COLUMN π(·, target). */
   final class backward(rmax: Double) {
     requirePositive("rmax", rmax)
-    def pprColumn(target: Long): DataFrame =
-      vectorOf(BackwardSearch.batch(spark, rcsr, fwdDeg, Seq(target),
-        conf.alpha, rmax))
+    def pprColumn(target: Long): DataFrame = {
+      val (g, deg) = sharedReversed
+      vectorOf(BackwardSearch.batch(spark, g, deg, Seq(target), conf.alpha,
+        rmax, 0, 0))
+    }
   }
 
   /** K9 — BASE all-pair store (S7-S9 lifecycle). `k > 0` selects the T5
@@ -148,15 +198,18 @@ final class PprEngine(
     requirePositive("rmax", rmax)
     require(threshold >= 0, s"threshold must be >= 0, got $threshold")
     def preprocess(dir: String): Unit = {
+      requireOpen()
       val ap = Base.allPairs(spark, csr, rcsr, fwdDeg, conf.alpha, rmax, 0, threshold)
       if (k > 0) Base.writeTopkStore(ap, dir, k)
       else Base.writeStore(ap, dir)
     }
-    def readPpr(dir: String, source: Long): DataFrame =
+    def readPpr(dir: String, source: Long): DataFrame = {
+      requireOpen()
       if (k > 0) Base.readTopkSource(spark, dir, source)
       else Base.readSource(spark, dir, source)
-    def prepSize(dir: String): Long = Base.storeSize(spark, dir)
-    def deletePrep(dir: String): Boolean = Base.deleteStore(spark, dir)
+    }
+    def prepSize(dir: String): Long = { requireOpen(); Base.storeSize(spark, dir) }
+    def deletePrep(dir: String): Boolean = { requireOpen(); Base.deleteStore(spark, dir) }
   }
 
   /** K10 — GraphX library baseline. Preprocessing runs the library once
@@ -167,7 +220,7 @@ final class PprEngine(
   final class libraryPpr(iterations: Int) extends SsPpr with PrepVia {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     def wholeGraphPpr(source: Long): DataFrame =
-      GraphXPpr.run(spark, edgesDf, source, conf.alpha, iterations)
+      { requireOpen(); GraphXPpr.run(spark, edgesDf, source, conf.alpha, iterations) }
     protected def batchAll(sources: Seq[Long]): DataFrame = {
       import spark.implicits._
       sources.map { s =>
@@ -176,4 +229,11 @@ final class PprEngine(
         Seq.empty[(Long, Long, Double)].toDF("src", "node_id", "score"))
     }
   }
+}
+
+object PprEngine {
+  /** Schema of a one-source answer. */
+  private val VectorSchema = StructType(Seq(
+    StructField("node_id", LongType, nullable = false),
+    StructField("score", DoubleType, nullable = false)))
 }

@@ -33,12 +33,6 @@ object GraphOps {
   def inDegrees(edges: DataFrame): DataFrame =
     edges.groupBy(col("dst").as("id")).agg(count(lit(1)).as("deg"))
 
-  /** All node ids appearing on either side of an edge: `(id LONG)`. */
-  def nodeIds(edges: DataFrame): DataFrame =
-    edges.select(col("src").as("id"))
-      .union(edges.select(col("dst").as("id")))
-      .distinct()
-
   /** Undirected graphs are modeled as two directed edges
     * (SURVEY §1.4.5; the reference's GOT CSV stores each relation once and
     * Neo4j traverses both directions). Union + distinct = one shuffle.

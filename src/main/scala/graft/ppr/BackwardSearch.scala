@@ -1,5 +1,6 @@
 package graft.ppr
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.graph.Csr
 
@@ -207,18 +208,30 @@ object BackwardSearch {
       alpha: Double = 0.15,
       rmax: Double = 1e-4,
       maxSupersteps: Int = 0,
-      slices: Int = 0): DataFrame = {
+      slices: Int = 0): DataFrame =
+    batch(spark, spark.sparkContext.broadcast(rcsr),
+      spark.sparkContext.broadcast(fwdDeg), targets, alpha, rmax, maxSupersteps,
+      slices)
+
+  /** [[batch]] over an already broadcast reversed CSR and degree array. */
+  def batch(
+      spark: SparkSession,
+      rcsr: Broadcast[Csr],
+      fwdDeg: Broadcast[Array[Int]],
+      targets: Seq[Long],
+      alpha: Double,
+      rmax: Double,
+      maxSupersteps: Int,
+      slices: Int): DataFrame = {
     require(rmax > 0, s"rmax must be > 0, got $rmax")
     import spark.implicits._
-    val bcG = spark.sparkContext.broadcast(rcsr)
-    val bcD = spark.sparkContext.broadcast(fwdDeg)
     val nSlices = if (slices > 0) slices
       else math.min(math.max(1, targets.length), spark.sparkContext.defaultParallelism)
     spark.sparkContext
       .parallelize(targets, nSlices)
       .mapPartitions { ts =>
-        val g = bcG.value
-        val d = bcD.value
+        val g = rcsr.value
+        val d = fwdDeg.value
         val ws = new Workspace(g.numNodes)
         ts.flatMap { t =>
           val td = g.denseOf(t)

@@ -1,5 +1,7 @@
 package graft.ppr
 
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.graph.Csr
 
@@ -17,7 +19,15 @@ import graft.graph.Csr
   * Top-k: round loop δ: 1/k → ÷4 → 1/n; per round continue the carried
   * push state at the round's rmax, run residual walks onto a COPY of the
   * push reserve, stop when the kth score ≥ (1+ε′)·δ
-  * (`Fora_Topk.java:122-180`; ε′ = ε/2 at `:110`).
+  * (`Fora_Topk.java:122-180`; ε′ = ε/2 at `:110`). The estimate sums to
+  * 1, so a round with k·(1+ε′)·δ > 1 (the first, δ = 1/k) cannot stop by
+  * mass alone: its push runs, but its walks are skipped and its estimate,
+  * which could only be thrown away, is never built.
+  *
+  * Walks: each residual node's walks run [[MonteCarlo.Lanes]] at a time
+  * in lock-step ([[MonteCarlo.walkEndpoints]]), one RNG stream per
+  * (round key, node, walk index), and are credited in walk order — the
+  * answers equal a walk-at-a-time loop's bit for bit (ForaSpec).
   *
   * Scale shape: the batch API fans sources out over tasks (one dense
   * kernel per source over the broadcast CSR) — walks for a source never
@@ -71,6 +81,7 @@ object Fora {
       onWalk: (Int, Int, Double) => Unit): Unit = {
     val alpha = conf.alpha
     val srcKey = Rng.mix(conf.seed ^ (srcDense * 0x9E3779B97F4A7C15L))
+    val ends = new Array[Int](MonteCarlo.WalkBlock)
     var v = 0
     while (v < csr.numNodes) {
       val r = residue(v)
@@ -81,12 +92,14 @@ object Fora {
         if (omegaI > 0) {
           val aI = rc / rsumLocal * numWalks / omegaI
           val incr = aI / numWalks * rsumLocal
+          val key = Rng.streamKey(srcKey, v)
           var j = 0L
           while (j < omegaI) {
-            val rng = new Rng.SplitMix(Rng.streamSeed(srcKey, v, j))
-            val dest = MonteCarlo.walkEndpoint(csr, v, alpha, rng, noZeroHop = true)
-            onWalk(v, dest, incr)
-            j += 1
+            val b = math.min(MonteCarlo.WalkBlock.toLong, omegaI - j).toInt
+            MonteCarlo.walkEndpoints(csr, v, alpha, noZeroHop = true, key, j, b, ends)
+            var i = 0
+            while (i < b) { onWalk(v, ends(i), incr); i += 1 }
+            j += b
           }
         }
       }
@@ -158,6 +171,7 @@ object Fora {
       init(srcDense) = 1.0
       ForwardPush.PushState(new Array[Double](csr.numNodes), init, 1.0)
     }
+    val ends = new Array[Int](MonteCarlo.WalkBlock)
     var round = 0
     var result: (ForwardPush.PushState, Long, Array[Double]) = null
     while (result == null) {
@@ -167,40 +181,59 @@ object Fora {
       rmax *= math.sqrt(m * rmax) * 3.0 // Fora_Topk.java:133
 
       carried = ForwardPush.runLocalFrom(csr, carried, srcDense, alpha, rmax)
-      val rsumRw = carried.residue.sum * (1.0 - alpha)
-      val numWalks = (omega * rsumRw).toLong
-
-      val est = carried.reserve.clone()
-      if (numWalks > 0) {
-        var v = 0
-        while (v < csr.numNodes) {
-          val r = carried.residue(v)
-          if (r != 0.0) {
-            val omegaI = math.ceil(r * numWalks).toLong // Fora_Topk.java:158
-            if (omegaI > 0) {
-              val incr = r / omegaI
-              var j = 0L
-              while (j < omegaI) {
-                val rng = new Rng.SplitMix(Rng.streamSeed(srcKey + round, v, j))
-                val dest = MonteCarlo.walkEndpoint(csr, v, alpha, rng, noZeroHop = false)
-                est(dest) += incr
-                if (rec != null) rec.walks += ((v, dest))
-                j += 1
-              }
-            }
-          }
-          v += 1
-        }
+      // The estimate sums to 1, so while k·(1+ε′)·δ > 1 no k scores can
+      // reach (1+ε′)·δ: such a round (always the first, δ = 1/k) cannot
+      // end, and its walks are skipped. The last round (δ = 1/n) always
+      // ends. The 1e-6 margin covers the rounding of the sums.
+      val canEnd = k * (1.0 + eps) * deltaLocal <= 1.0 + 1e-6 || deltaLocal <= minDelta
+      if (canEnd) {
+        val rsumRw = carried.residue.sum * (1.0 - alpha)
+        val numWalks = (omega * rsumRw).toLong
+        val est = carried.reserve.clone()
+        if (numWalks > 0)
+          topkWalks(csr, carried.residue, numWalks, alpha, srcKey + round, est, rec, ends)
+        val kth = kthLargest(est, k)
+        if (kth >= (1.0 + eps) * deltaLocal || deltaLocal <= minDelta)
+          result = (carried, numWalks, est)
       }
-
-      val kth = kthLargest(est, k)
-      if (kth >= (1.0 + eps) * deltaLocal || deltaLocal <= minDelta)
-        result = (carried, numWalks, est)
-      else
+      if (result == null)
         deltaLocal = math.max(minDelta, deltaLocal / 4.0) // Fora_Topk.java:179
       round += 1
     }
     result
+  }
+
+  /** One top-k round's residual walks: ω_v = ⌈r_v·numWalks⌉ walks from
+    * every residual node v, each crediting r_v/ω_v to its endpoint in
+    * `est`, in walk order; `ends` is the endpoint buffer.
+    */
+  private def topkWalks(
+      csr: Csr, residue: Array[Double], numWalks: Long, alpha: Double,
+      roundKey: Long, est: Array[Double], rec: WalkRec, ends: Array[Int]): Unit = {
+    var v = 0
+    while (v < csr.numNodes) {
+      val r = residue(v)
+      if (r != 0.0) {
+        val omegaI = math.ceil(r * numWalks).toLong // Fora_Topk.java:158
+        if (omegaI > 0) {
+          val incr = r / omegaI
+          val key = Rng.streamKey(roundKey, v)
+          var j = 0L
+          while (j < omegaI) {
+            val b = math.min(MonteCarlo.WalkBlock.toLong, omegaI - j).toInt
+            MonteCarlo.walkEndpoints(csr, v, alpha, noZeroHop = false, key, j, b, ends)
+            var i = 0
+            while (i < b) {
+              est(ends(i)) += incr
+              if (rec != null) rec.walks += ((v, ends(i)))
+              i += 1
+            }
+            j += b
+          }
+        }
+      }
+      v += 1
+    }
   }
 
   /** K7 — top-k FORA for one source; returns the full estimate vector of
@@ -283,8 +316,31 @@ object Fora {
       sources: Seq[Long],
       conf: Conf = Conf(),
       slices: Int = 0): DataFrame =
+    batch(spark, spark.sparkContext.broadcast(csr), sources, conf, slices)
+
+  /** [[batch]] over an already broadcast CSR. */
+  def batch(
+      spark: SparkSession,
+      csr: Broadcast[Csr],
+      sources: Seq[Long],
+      conf: Conf,
+      slices: Int): DataFrame =
     SourceFanOut(spark, csr, sources, slices)(
       (g, sd) => wholeGraphLocal(g, sd, conf))
+
+  /** [[topkLocal]] with every score below the kth largest zeroed: the
+    * tie-inclusive top-k (T2) as a dense vector.
+    */
+  def topkCut(csr: Csr, srcDense: Int, k: Int, conf: Conf): Array[Double] = {
+    val scores = topkLocal(csr, srcDense, k, conf)
+    val kth = kthLargest(scores, k)
+    var v = 0
+    while (v < scores.length) {
+      if (scores(v) < kth) scores(v) = 0.0
+      v += 1
+    }
+    scores
+  }
 
   /** Batched top-k FORA, tie-inclusive (T2): every score below the kth
     * largest is zeroed before the fan-out drops zeros.
@@ -297,14 +353,17 @@ object Fora {
       k: Int,
       conf: Conf = Conf(),
       slices: Int = 0): DataFrame =
-    SourceFanOut(spark, csr, sources, slices) { (g, sd) =>
-      val scores = topkLocal(g, sd, k, conf)
-      val kth = kthLargest(scores, k)
-      var v = 0
-      while (v < scores.length) {
-        if (scores(v) < kth) scores(v) = 0.0
-        v += 1
-      }
-      scores
-    }
+    SourceFanOut(spark, spark.sparkContext.broadcast(csr), sources, slices)(
+      topkCut(_, _, k, conf))
+
+  /** [[topkBatch]]'s rows over an already broadcast CSR, as an RDD for a
+    * caller that collects them at once.
+    */
+  def topkRows(
+      spark: SparkSession,
+      csr: Broadcast[Csr],
+      sources: Seq[Long],
+      k: Int,
+      conf: Conf): RDD[(Long, Long, Double)] =
+    SourceFanOut.rows(spark, csr, sources, 0)(topkCut(_, _, k, conf))
 }

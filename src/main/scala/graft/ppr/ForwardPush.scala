@@ -1,5 +1,6 @@
 package graft.ppr
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.graph.Csr
 
@@ -121,6 +122,18 @@ object ForwardPush {
       rmax: Double = 1e-4,
       maxSupersteps: Int = 0,
       slices: Int = 0): DataFrame =
+    batch(spark, spark.sparkContext.broadcast(csr), sources, alpha, rmax,
+      maxSupersteps, slices)
+
+  /** [[batch]] over an already broadcast CSR. */
+  def batch(
+      spark: SparkSession,
+      csr: Broadcast[Csr],
+      sources: Seq[Long],
+      alpha: Double,
+      rmax: Double,
+      maxSupersteps: Int,
+      slices: Int): DataFrame =
     SourceFanOut(spark, csr, sources, slices)(
       (g, sd) => runLocal(g, sd, alpha, rmax, maxSupersteps).reserve)
 

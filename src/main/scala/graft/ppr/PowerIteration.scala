@@ -1,5 +1,6 @@
 package graft.ppr
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.graph.{Csr, GraphOps}
@@ -73,6 +74,16 @@ object PowerIteration {
       alpha: Double = 0.15,
       iterations: Int = 100,
       slices: Int = 0): DataFrame =
+    batch(spark, spark.sparkContext.broadcast(csr), sources, alpha, iterations, slices)
+
+  /** [[batch]] over an already broadcast CSR. */
+  def batch(
+      spark: SparkSession,
+      csr: Broadcast[Csr],
+      sources: Seq[Long],
+      alpha: Double,
+      iterations: Int,
+      slices: Int): DataFrame =
     SourceFanOut(spark, csr, sources, slices)(
       (g, sd) => runLocal(g, sd, alpha, iterations))
 

@@ -196,14 +196,6 @@ object Graph {
     */
   val HitsIters = 6
 
-  /** `g_hyperball` radius bound: out-neighborhood-size HLL sketches at
-    * r = 1 and r = 2 (Boldi & Vigna 2013's HyperBall primitive — the
-    * neighborhood function this library's centrality work would build
-    * on). Two rounds keep the unrolled oracle and the board row cheap
-    * while exercising the register-merge recurrence; the radii share one
-    * pipeline (round 2 folds round 1's registers).
-    */
-  val HbRounds = 2
   val SingleSource = 1L
   val BatchSources: Seq[Long] = Seq(1L, 2L, 3L, 5L, 8L)
 

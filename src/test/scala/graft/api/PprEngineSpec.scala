@@ -1,16 +1,17 @@
 package graft.api
 
 import graft.SparkSpec
+import graft.graph.Csr
 import graft.ppr.{BackwardSearch, PowerIteration, PprConf}
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.{BroadcastValues, ListenerBusDrain}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.DataFrame
-import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+import org.scalatest.concurrent.{Eventually, Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.time.SpanSugar._
 
-class PprEngineSpec extends SparkSpec with TimeLimits {
+class PprEngineSpec extends SparkSpec with TimeLimits with Eventually {
 
   private def engineOf(edges: Seq[(Long, Long)], conf: PprConf = PprConf()) = {
     val s = spark
@@ -42,6 +43,27 @@ class PprEngineSpec extends SparkSpec with TimeLimits {
       try f finally sc.clearJobGroup()
       ListenerBusDrain(sc)
       jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Broadcasts made while `f` runs, besides the task binary Spark
+    * broadcasts for every stage it submits.
+    */
+  private def broadcastsDuring(f: => Unit): Long = {
+    val sc = spark.sparkContext
+    val stages = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        stages.incrementAndGet()
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val before = sc.broadcast(0).id
+      f
+      val after = sc.broadcast(0).id
+      ListenerBusDrain(sc)
+      after - before - 1 - stages.get
     } finally sc.removeSparkListener(listener)
   }
 
@@ -250,5 +272,75 @@ class PprEngineSpec extends SparkSpec with TimeLimits {
       rejects("pfail")(PprConf(pfail = v))
       rejects("delta")(PprConf(delta = v))
     }
+  }
+
+  test("FORA top-k runs its one Spark job in the call; collect runs none") {
+    val e = engine
+    e.csr // the lazy CSR build is set-up, not part of a query
+    val f = new e.fora(0.5)
+    var df: DataFrame = null
+    assert(jobsDuring { df = f.topkPpr(1L, 2) } == 1, "call")
+    var rows = 0
+    assert(jobsDuring { rows = df.collect().length } == 0, "collect")
+    assert(rows >= 2)
+    assert(jobsDuring { f.topkPpr(2L, 2).collect() } == 1, "call and collect")
+  }
+
+  test("every call of an engine reuses its CSR broadcasts") {
+    val e = engine
+    e.csr
+    val f = new e.fora(0.5)
+    assert(broadcastsDuring(f.topkPpr(1L, 2).collect()) == 1, "first call")
+    assert(broadcastsDuring {
+      for (i <- 0 until 10) f.topkPpr(1L + i % 4, 2).collect()
+      f.wholeGraphPpr(1L).collect()
+      e.power.topkPpr(1L, 2).collect()
+      new e.forwardPush(1e-4).wholeGraphPpr(1L).collect()
+      new e.monteCarlo(0.5).wholeGraphPpr(1L).collect()
+    } == 0, "later calls")
+    // the reversed CSR and its degree array, once
+    assert(broadcastsDuring(new e.backward(1e-4).pprColumn(1L).collect()) == 2)
+    assert(broadcastsDuring(new e.backward(1e-4).pprColumn(2L).collect()) == 0)
+  }
+
+  test("close destroys the broadcasts; later calls fail, a second close is harmless") {
+    val e = engine
+    val sc = spark.sparkContext
+    val before = sc.broadcast(0).id
+    val f = new e.fora(0.5)
+    assert(f.topkPpr(1L, 2).collect().nonEmpty)
+    assert(new e.backward(1e-4).pprColumn(1L).collect().nonEmpty)
+    e.close()
+    eventually(timeout(30.seconds)) {
+      val live = BroadcastValues.between(sc, before, sc.broadcast(0).id)
+      assert(!live.exists(_.isInstanceOf[Csr]), "a CSR broadcast outlived close()")
+    }
+    assert(!e.edgesDf.storageLevel.useMemory, "edges still cached")
+    val dir = Files.createTempDirectory("engine_closed").toString + "/store"
+    val calls = Seq[(String, () => Any)](
+      "fora top-k" -> (() => f.topkPpr(1L, 2)),
+      "fora" -> (() => new e.fora(0.5).wholeGraphPpr(1L)),
+      "power" -> (() => e.power.wholeGraphPpr(1L)),
+      "forwardPush" -> (() => new e.forwardPush(1e-4).topkPpr(1L, 2)),
+      "monteCarlo" -> (() => new e.monteCarlo(0.5).wholeGraphPpr(1L)),
+      "backward" -> (() => new e.backward(1e-4).pprColumn(1L)),
+      "base.preprocess" -> (() => new e.base(1e-4, 0.0).preprocess(dir)),
+      "base.readPpr" -> (() => new e.base(1e-4, 0.0).readPpr(dir, 1L)),
+      "library" -> (() => new e.libraryPpr(20).wholeGraphPpr(1L)))
+    for ((name, call) <- calls) {
+      var err: IllegalStateException = null
+      val jobs = jobsDuring { err = intercept[IllegalStateException](call()) }
+      assert(err.getMessage.contains("closed"), s"$name: ${err.getMessage}")
+      assert(jobs == 0, s"$name: $jobs Spark jobs ran after close()")
+    }
+    e.close()
+  }
+
+  test("monteCarlo rejects an epsilon whose walk count overflows") {
+    // 1→2→3→1, 3→4→1: ε = 1e-10 needs ω ≈ 2.5e21 > 2^63 walks
+    val e = engineOf(Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 1L)))
+    e.csr
+    rejects("epsilon")(new e.monteCarlo(1e-10).wholeGraphPpr(1L))
+    rejects("epsilon")(new e.monteCarlo(1e-10).topkPpr(1L, 2))
   }
 }

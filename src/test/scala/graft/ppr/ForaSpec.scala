@@ -2,6 +2,7 @@ package graft.ppr
 
 import graft.SparkSpec
 import graft.graph.GraphOps
+import java.util.Arrays
 
 class ForaSpec extends SparkSpec {
 
@@ -107,6 +108,35 @@ class ForaSpec extends SparkSpec {
       val err = intercept[IllegalArgumentException](
         Fora.topkTrace(csr, csr.denseOf(1L), k, conf))
       assert(err.getMessage.contains("k must be >= 1"), err.getMessage)
+    }
+  }
+
+  test("lock-step walks give the serial walk loop's answers bit for bit") {
+    for (g <- 1L to 6L) {
+      val csr = SerialWalks.randomDigraph(g)
+      val n = csr.numNodes
+      val conf = Fora.Conf(alpha = 0.15, epsilon = 0.5, seed = 40L + g)
+      assert((0 until n).exists(csr.outDegree(_) == 0), s"graph $g: no dangling node")
+      for (s <- 0 until n) {
+        val (whole, st, wholeWalks, wWalks) = SerialWalks.foraWhole(csr, s, conf)
+        assert(Arrays.equals(Fora.wholeGraphLocal(csr, s, conf), whole), s"graph $g src $s")
+        val wt = Fora.wholeGraphTrace(csr, s, conf)
+        assert(wt.numWalks == wholeWalks && Arrays.equals(wt.residue, st.residue))
+        assert(wt.walks.toSeq ==
+          wWalks.map { case (v, d) => (csr.originalOf(v), csr.originalOf(d)) },
+          s"graph $g src $s: whole-graph walks")
+        for (k <- Seq(1, 5, n - 1)) {
+          val (est, carried, numWalks, walks) = SerialWalks.foraTopk(csr, s, k, conf)
+          val what = s"graph $g src $s k $k"
+          assert(Arrays.equals(Fora.topkLocal(csr, s, k, conf), est), what)
+          val t = Fora.topkTrace(csr, s, k, conf)
+          assert(Arrays.equals(t.reserve, carried.reserve), what)
+          assert(Arrays.equals(t.residue, carried.residue), what)
+          assert(t.numWalks == numWalks, what)
+          assert(t.walks.toSeq ==
+            walks.map { case (v, d) => (csr.originalOf(v), csr.originalOf(d)) }, what)
+        }
+      }
     }
   }
 }

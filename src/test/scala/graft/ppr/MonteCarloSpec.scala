@@ -61,4 +61,23 @@ class MonteCarloSpec extends SparkSpec {
       .collect().map(r => (r.getLong(1), r.getDouble(2)))
     assert(est.toSeq == Seq((1L, 1.0)))
   }
+
+  test("lock-step walks give the serial walk loop's scores bit for bit") {
+    for (g <- 1L to 3L) {
+      val csr = SerialWalks.randomDigraph(g)
+      val n = csr.numNodes
+      val omega = MonteCarlo.omegaFor(0.5, 1.0 / n, 1.0 / n)
+      val dangling = (0 until n).filter(csr.outDegree(_) == 0).map(csr.originalOf)
+      assert(dangling.nonEmpty, s"graph $g: no dangling node")
+      val sources = Seq(csr.originalOf(0), csr.originalOf(n / 2), dangling.head)
+      val got = MonteCarlo.sspprBatch(spark, csr, sources, 0.15, 0.5, seed = g,
+          slicesPerSource = 3)
+        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+      for (s <- sources) {
+        val want = SerialWalks.mcScores(csr, s, 0.15, omega, g)
+        val row = Array.tabulate(n)(v => got.getOrElse((s, csr.originalOf(v)), 0.0))
+        assert(java.util.Arrays.equals(row, want), s"graph $g src $s")
+      }
+    }
+  }
 }
