@@ -35,9 +35,10 @@ trait PrecomputedPpr {
 /** Facade over all algorithm families (the reference's `newAlgoObj`
   * factory, `Gen_Util.java:66-97`). Holds the graph once, like the
   * reference holds its HeavyGraph: the edges DF, the CSR snapshot, and
-  * one broadcast of it (plus one of the reversed CSR for [[backward]]),
-  * made on first use and reused by every call. [[close]] destroys the
-  * broadcasts and unpersists the edges; a call after it fails.
+  * one broadcast of it (plus one of the reversed CSR for [[backward]] and
+  * the BASE preprocess), made on first use and reused by every call.
+  * [[close]] destroys the broadcasts and unpersists the edges; a call
+  * after it fails.
   */
 final class PprEngine(
     val spark: SparkSession,
@@ -47,7 +48,6 @@ final class PprEngine(
   val edgesDf: DataFrame = edges.persist()
   lazy val csr: Csr = GraphOps.buildCsr(edgesDf)
   private lazy val rcsr: Csr = Base.reversedCsr(edgesDf)
-  private lazy val fwdDeg: Array[Int] = Base.forwardDegrees(csr, rcsr)
 
   @volatile private var closed = false
   private var csrBc: Broadcast[Csr] = null
@@ -69,7 +69,7 @@ final class PprEngine(
     requireOpen()
     if (rcsrBc == null) {
       rcsrBc = spark.sparkContext.broadcast(rcsr)
-      fwdDegBc = spark.sparkContext.broadcast(fwdDeg)
+      fwdDegBc = spark.sparkContext.broadcast(Base.forwardDegrees(csr, rcsr))
     }
     (rcsrBc, fwdDegBc)
   }
@@ -127,7 +127,8 @@ final class PprEngine(
     * (reference re-implements it per algo, `Forward_Push.java:320-444`,
     * `Monte_Carlo.java:212-335`, `Neo4j_Method.java:157-304`): compute
     * every node's vector with the family's batch kernel, store via
-    * [[PprStore]], answer later queries by partition-pruned read.
+    * [[PprStore]], answer later queries by a one-task read of the
+    * source's files that runs in the call and returns local rows.
     */
   trait PrepVia extends PrecomputedPpr {
     /** `(src, node_id, score)` for all sources — the family's batch path. */
@@ -158,7 +159,7 @@ final class PprEngine(
       topkOf(wholeGraphPpr(source), k)
     protected def batchAll(sources: Seq[Long]): DataFrame =
       MonteCarlo.sspprBatch(spark, sharedCsr, sources, conf.alpha, epsilon,
-        0.0, 0.0, conf.seed, 0)
+        conf.pfail, conf.delta, conf.seed, 0)
   }
 
   /** K6/K7 — FORA. A top-k call with `k >= n` returns the whole vector.
@@ -198,8 +199,8 @@ final class PprEngine(
     requirePositive("rmax", rmax)
     require(threshold >= 0, s"threshold must be >= 0, got $threshold")
     def preprocess(dir: String): Unit = {
-      requireOpen()
-      val ap = Base.allPairs(spark, csr, rcsr, fwdDeg, conf.alpha, rmax, 0, threshold)
+      val (g, deg) = sharedReversed
+      val ap = Base.allPairs(spark, g, deg, csr.ids.toSeq, conf.alpha, rmax, 0, threshold)
       if (k > 0) Base.writeTopkStore(ap, dir, k)
       else Base.writeStore(ap, dir)
     }

@@ -1,7 +1,9 @@
 package graft.ppr
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 import graft.graph.{Csr, GraphOps}
 
 /** K9 — BASE all-pair PPR preprocessing + lookup store (SURVEY §2.8 K9,
@@ -16,11 +18,12 @@ import graft.graph.{Csr, GraphOps}
   *
   * Spark-first shape: fan out over targets (the embarrassingly parallel
   * axis) with the dense kernel per task, one shuffle to source-major via
-  * `partitionBy("src")` Parquet write, and Catalyst partition pruning turns
-  * the per-source lookup into a single-directory scan. Memory is bounded
-  * per task, so the reference's OOM disappears structurally. At 100 TB:
-  * targets × nodes >> cluster cores, and the write path streams through
-  * the shuffle — no driver materialization anywhere.
+  * `partitionBy("src")` Parquet write, and a lookup is one task that reads
+  * exactly the queried source's files through [[PprStore]]'s file index.
+  * Memory is bounded per task, so the reference's OOM disappears
+  * structurally. At 100 TB: targets × nodes >> cluster cores, and the
+  * write path streams through the shuffle — no driver materialization
+  * anywhere.
   */
 object Base {
 
@@ -46,7 +49,9 @@ object Base {
 
   /** [[allPairs]] over prebuilt graphs: `csr` of the edges, `rcsr` of the
     * reversed edges ([[reversedCsr]]) and `fwdDeg` the forward out-degrees
-    * in `rcsr`'s dense id space ([[forwardDegrees]]).
+    * in `rcsr`'s dense id space ([[forwardDegrees]]). Broadcasts `rcsr`
+    * and `fwdDeg` once; a caller that already holds the broadcasts uses
+    * the other overload.
     */
   def allPairs(
       spark: SparkSession,
@@ -58,8 +63,27 @@ object Base {
       maxSupersteps: Int,
       scoreThreshold: Double): DataFrame = {
     requireArgs(rmax, scoreThreshold)
+    allPairs(spark, spark.sparkContext.broadcast(rcsr),
+      spark.sparkContext.broadcast(fwdDeg), csr.ids.toSeq, alpha, rmax,
+      maxSupersteps, scoreThreshold)
+  }
+
+  /** [[allPairs]] over an already broadcast reversed CSR and degree array,
+    * with `sources` the nodes whose vectors are stored (every node of the
+    * graph, in the forward CSR's id order).
+    */
+  def allPairs(
+      spark: SparkSession,
+      rcsr: Broadcast[Csr],
+      fwdDeg: Broadcast[Array[Int]],
+      sources: Seq[Long],
+      alpha: Double,
+      rmax: Double,
+      maxSupersteps: Int,
+      scoreThreshold: Double): DataFrame = {
+    requireArgs(rmax, scoreThreshold)
     val inverted = BackwardSearch
-      .batch(spark, rcsr, fwdDeg, csr.ids.toSeq, alpha, rmax, maxSupersteps)
+      .batch(spark, rcsr, fwdDeg, sources, alpha, rmax, maxSupersteps, 0)
       .select(col("node_id").as("src"), col("dst"), col("score"))
     if (scoreThreshold > 0.0) inverted.where(col("score") >= scoreThreshold)
     else inverted
@@ -84,15 +108,16 @@ object Base {
 
   /** S7 — persist the all-pair table source-major via the shared
     * [[PprStore]] layout (Parquet partitioned by `src`, so a per-source
-    * query prunes to one directory).
+    * query reads one directory).
     */
   def writeStore(allPairs: DataFrame, dir: String): Unit =
     PprStore.write(allPairs.select(col("src"),
       col("dst").as("node_id"), col("score")), dir)
 
-  /** S8 — read one source's PPR vector back; Catalyst partition-prunes the
-    * scan to `dir/src=<s>/` (the Spark analogue of the reference's
-    * one-file-per-source read, `Base_Whole_Graph.java:167-186`).
+  /** S8 — read one source's PPR vector back as local `(node_id, score)`
+    * rows, one task reading the files of `dir/src=<s>/` (the Spark
+    * analogue of the reference's one-file-per-source read,
+    * `Base_Whole_Graph.java:167-186`).
     */
   def readSource(spark: SparkSession, dir: String, source: Long): DataFrame =
     PprStore.read(spark, dir, source)
@@ -114,7 +139,7 @@ object Base {
   }
 
   /** S7 (top-k mode) — persist the rank-truncated store source-major;
-    * same pruning contract and (src, node_id, score) naming as
+    * same lookup contract and (src, node_id, score) naming as
     * [[PprStore]], plus the rank column.
     */
   def writeTopkStore(allPairs: DataFrame, dir: String, k: Int): Unit =
@@ -123,13 +148,18 @@ object Base {
 
   /** S8 (top-k mode) — ordered read-back of one source's pre-truncated
     * vector: rank ascending (node_id tie-break), the reference's
-    * insertion-order `getTopKNodeIds` semantics. Served from the store
-    * opened once by [[PprStore.table]].
+    * insertion-order `getTopKNodeIds` semantics. One task reads the
+    * source's files as [[PprStore.read]] does; the rows are sorted on the
+    * driver and returned as a local `(node_id, score, rk)` DataFrame.
     */
-  def readTopkSource(spark: SparkSession, dir: String, source: Long): DataFrame =
-    PprStore.table(spark, dir).where(col("src") === source)
-      .select(col("node_id"), col("score"), col("rk"))
-      .orderBy(col("rk").asc, col("node_id").asc)
+  def readTopkSource(spark: SparkSession, dir: String, source: Long): DataFrame = {
+    val rows = PprStore.readRows(spark, dir, source, RankedSchema)
+      .sortBy(r => (r.getInt(2), r.getLong(0)))
+    PprStore.local(spark, rows, RankedSchema)
+  }
+
+  /** `(node_id, score, rk)` — a top-k store lookup's answer. */
+  private val RankedSchema = PprStore.VectorSchema.add("rk", IntegerType)
 
   /** S9 — store size in bytes (reference `getPrepSize`,
     * `Base_Whole_Graph.java:238-244`).

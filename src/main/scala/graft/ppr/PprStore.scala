@@ -3,9 +3,23 @@ package graft.ppr
 import java.io.FileNotFoundException
 import java.util.concurrent.ConcurrentHashMap
 
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.ColumnIOFactory
+import org.apache.parquet.schema.MessageType
+import org.apache.spark.SparkContext
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
+import org.apache.spark.util.SerializableConfiguration
 
 /** S7-S9 — the generic per-source PPR store, shared by EVERY algorithm
   * family (reference: each algo re-implements the same one-file-per-source
@@ -13,42 +27,50 @@ import org.apache.spark.sql.functions._
   * `Monte_Carlo.java:212-254`, `Neo4j_Method.java:157-216`,
   * `Base_Whole_Graph.java:118-186,238-251`; here it is one Parquet layout).
   *
-  * Layout: Parquet partitioned by `src`, so a per-source query is a
-  * Catalyst partition-pruned scan of exactly one directory — the Spark
-  * analogue of opening one `<srcId>.txt`. At 100 TB the write streams
-  * through one shuffle (repartition by src) with no driver
-  * materialization, and reads touch only the queried source's files.
+  * Layout: Parquet partitioned by `src`, so one source's rows sit in the
+  * files of one `src=<id>` directory — the Spark analogue of the
+  * reference's one `<srcId>.txt`. At 100 TB the write streams through one
+  * shuffle (repartition by src) with no driver materialization, and a
+  * read touches only the queried source's files.
   *
-  * Lookup contract: a store is opened once per (session, path) — one
-  * partition discovery and schema inference — and every later read reuses
-  * that file index, so a lookup costs Catalyst's partition pruning plus
-  * one scan task. Each read re-validates the opened store with one
-  * `FileStatus` of its root: every Spark write (this object's or any other
-  * session's or process's) recreates or rewrites the root and changes its
-  * modification time, which re-opens the store; a missing root fails the
-  * read exactly as an unopened path does. [[write]] and [[delete]] drop
-  * the opened entry outright.
+  * Lookup contract: a store is opened once per path — one recursive
+  * listing of its root into a file index `src → files` (names starting
+  * with `_` or `.` skipped) — and every later read reuses that index, so
+  * a lookup is one Spark job of one task that reads exactly the source's
+  * Parquet files and returns local rows. Each read re-validates the opened
+  * store with one `FileStatus` of its root: every Spark write (this
+  * object's or any other session's or process's) recreates or rewrites
+  * the root and changes its modification time, which re-opens the store;
+  * a missing root fails the read with `PATH_NOT_FOUND`, as Spark does for
+  * any absent path. [[write]] and [[delete]] drop the opened entry
+  * outright.
   */
 object PprStore {
 
-  private final case class Key(spark: SparkSession, path: String)
-
-  /** `table` is `spark.read.parquet(path)`, listed when the root's
-    * modification time was `stamp`.
+  /** The files of each source, listed when the root's modification time
+    * was `stamp`.
     */
-  private final case class Opened(stamp: Long, table: DataFrame)
+  private final case class Opened(stamp: Long, files: Map[Long, Array[String]])
 
-  private val opened = new ConcurrentHashMap[Key, Opened]()
+  /** Opened stores by qualified root path. */
+  private val opened = new ConcurrentHashMap[String, Opened]()
+
+  /** The Hadoop configuration the read tasks open files with, broadcast
+    * once per `SparkContext`.
+    */
+  private var sharedConf: (SparkContext, Broadcast[SerializableConfiguration]) = null
+
+  /** `(node_id, score)` — a lookup's answer, typed as Spark reads the
+    * stored columns.
+    */
+  private[ppr] val VectorSchema: StructType = StructType(Seq(
+    StructField("node_id", LongType), StructField("score", DoubleType)))
 
   private def qualified(spark: SparkSession, dir: String): (FileSystem, Path) = {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     (fs, fs.makeQualified(p))
   }
-
-  /** Drops every session's opened entry for the qualified `path`. */
-  private def forget(path: Path): Unit =
-    opened.keySet.removeIf(_.path == path.toString)
 
   /** S7 — persist `(src, node_id, score)` source-major. */
   def write(scores: DataFrame, dir: String): Unit =
@@ -66,40 +88,116 @@ object PprStore {
       rows.repartition(col("src")).write.mode("overwrite").partitionBy("src").parquet(dir)
       if (!fs.listStatus(path).exists(_.isDirectory))
         rows.limit(0).write.mode("overwrite").parquet(dir)
-    } finally forget(path)
+    } finally opened.remove(path.toString)
   }
 
-  /** The whole store as written (`src` plus the stored columns), opened
-    * once per session and path and re-validated on every call (see the
-    * lookup contract above).
+  /** S8 — one source's vector back: `(node_id, score)` as local rows,
+    * read by one task (see the lookup contract above).
     */
-  def table(spark: SparkSession, dir: String): DataFrame = {
-    val (fs, path) = qualified(spark, dir)
-    val key = Key(spark, path.toString)
+  def read(spark: SparkSession, dir: String, source: Long): DataFrame =
+    local(spark, readRows(spark, dir, source, VectorSchema), VectorSchema)
+
+  /** A DataFrame over `rows` held on the driver: an action on it runs no
+    * Spark job.
+    */
+  private[ppr] def local(spark: SparkSession, rows: Array[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+
+  /** The columns `schema` names of `source`'s stored rows, in file order,
+    * read by one Spark job of one task (an empty task when the source has
+    * no files).
+    */
+  private[ppr] def readRows(
+      spark: SparkSession,
+      dir: String,
+      source: Long,
+      schema: StructType): Array[Row] = {
+    val files = sourceFiles(spark, dir, source)
+    val conf = hadoopConf(spark.sparkContext)
+    spark.sparkContext.parallelize(Seq(files), 1)
+      .flatMap(paths => readFiles(conf.value.value, paths, schema))
+      .collect()
+  }
+
+  /** `source`'s files in the opened store at `dir`, opening or re-opening
+    * it when its root changed since.
+    */
+  private def sourceFiles(spark: SparkSession, dir: String, source: Long): Array[String] = {
+    val (fs, root) = qualified(spark, dir)
+    val key = root.toString
     val stamp =
-      try Some(fs.getFileStatus(path).getModificationTime)
-      catch { case _: FileNotFoundException => None }
-    stamp match {
-      case None =>
-        opened.remove(key)
-        spark.read.parquet(dir) // throws PATH_NOT_FOUND, as for any absent store
-      case Some(t) =>
-        val hit = opened.get(key)
-        if (hit != null && hit.stamp == t) hit.table
-        else {
-          // entries of stopped sessions would otherwise pin them forever
-          opened.keySet.removeIf(_.spark.sparkContext.isStopped)
-          opened.compute(key, (_, cur) =>
-            if (cur != null && cur.stamp == t) cur
-            else Opened(t, spark.read.parquet(path.toString))).table
+      try fs.getFileStatus(root).getModificationTime
+      catch {
+        case _: FileNotFoundException =>
+          opened.remove(key)
+          throw new AnalysisException("PATH_NOT_FOUND", Map("path" -> key))
+      }
+    val hit = opened.get(key)
+    val store =
+      if (hit != null && hit.stamp == stamp) hit
+      else opened.compute(key, (_, cur) =>
+        if (cur != null && cur.stamp == stamp) cur else Opened(stamp, list(fs, root)))
+    store.files.getOrElse(source, Array.empty[String])
+  }
+
+  /** The data files `root/src=<id>/<file>` of every source, by id. */
+  private def list(fs: FileSystem, root: Path): Map[Long, Array[String]] = {
+    val files = ArrayBuffer.empty[(Long, String)]
+    val it = fs.listFiles(root, true)
+    while (it.hasNext) {
+      val p = it.next().getPath
+      val dir = p.getParent
+      if (dir.getParent == root && !p.getName.startsWith("_") &&
+          !p.getName.startsWith(".") && dir.getName.startsWith("src="))
+        dir.getName.stripPrefix("src=").toLongOption.foreach(s => files += s -> p.toString)
+    }
+    files.groupMap(_._1)(_._2).map { case (s, paths) => s -> paths.sorted.toArray }
+  }
+
+  private def hadoopConf(sc: SparkContext): Broadcast[SerializableConfiguration] =
+    synchronized {
+      if (sharedConf == null || (sharedConf._1 ne sc))
+        sharedConf = (sc, sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration)))
+      sharedConf._2
+    }
+
+  /** Reads the columns `schema` names from each of `files`. The read
+    * options come from `conf` rather than parquet-hadoop's defaults, whose
+    * fresh `Configuration` reloads the default resources from every jar on
+    * the classpath, an order of magnitude above the read of a small file.
+    */
+  private def readFiles(conf: Configuration, files: Array[String], schema: StructType): Iterator[Row] = {
+    val options = HadoopReadOptions.builder(conf).build()
+    files.iterator.flatMap { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f), conf), options)
+      try {
+        val fileSchema = reader.getFileMetaData.getSchema
+        val projection = new MessageType(fileSchema.getName, schema.fieldNames.toSeq
+          .map(n => fileSchema.getType(fileSchema.getFieldIndex(n))): _*)
+        reader.setRequestedSchema(projection)
+        val columns = new ColumnIOFactory().getColumnIO(projection, fileSchema)
+        val rows = ArrayBuffer.empty[Row]
+        var pages = reader.readNextRowGroup()
+        while (pages != null) {
+          val records = columns.getRecordReader(pages, new GroupRecordConverter(projection))
+          var i = 0L
+          while (i < pages.getRowCount) { rows += rowOf(records.read(), schema); i += 1 }
+          pages = reader.readNextRowGroup()
         }
+        rows
+      } finally reader.close()
     }
   }
 
-  /** S8 — one source's vector back: `(node_id, score)`, partition-pruned. */
-  def read(spark: SparkSession, dir: String, source: Long): DataFrame =
-    table(spark, dir).where(col("src") === source)
-      .select(col("node_id"), col("score"))
+  private def rowOf(g: Group, schema: StructType): Row =
+    Row.fromSeq(schema.fields.toSeq.map { f =>
+      if (g.getFieldRepetitionCount(f.name) == 0) null
+      else f.dataType match {
+        case LongType => g.getLong(f.name, 0)
+        case DoubleType => g.getDouble(f.name, 0)
+        case IntegerType => g.getInteger(f.name, 0)
+      }
+    })
 
   /** S9 — store size in bytes (0 when absent). */
   def size(spark: SparkSession, dir: String): Long = {
@@ -110,6 +208,6 @@ object PprStore {
   /** S9 — recursive delete; false when nothing existed. */
   def delete(spark: SparkSession, dir: String): Boolean = {
     val (fs, p) = qualified(spark, dir)
-    try fs.delete(p, true) finally forget(p)
+    try fs.delete(p, true) finally opened.remove(p.toString)
   }
 }

@@ -2171,7 +2171,7 @@ object Graph {
 
     // S7/S8 beyond BASE: the forward-push preprocessing store — batch
     // results written source-major via the shared PprStore, then queried
-    // back by a partition-pruned read (the reference's per-algo
+    // back by a one-source read (the reference's per-algo
     // preprocessing/readPreprocessedPPR pair, `Forward_Push.java:320-362`).
     "g_prep_fwdpush" -> ((s, dir) => {
       val csr = GraphOps.lineitemCsr(s, dir, Mod)

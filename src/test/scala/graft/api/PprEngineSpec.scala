@@ -1,17 +1,16 @@
 package graft.api
 
-import graft.SparkSpec
+import graft.{SparkCounting, SparkSpec}
 import graft.graph.Csr
-import graft.ppr.{BackwardSearch, PowerIteration, PprConf}
+import graft.ppr.{BackwardSearch, MonteCarlo, PowerIteration, PprConf}
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.{BroadcastValues, ListenerBusDrain}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
+import org.apache.spark.BroadcastValues
 import org.apache.spark.sql.DataFrame
 import org.scalatest.concurrent.{Eventually, Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.time.SpanSugar._
 
-class PprEngineSpec extends SparkSpec with TimeLimits with Eventually {
+class PprEngineSpec extends SparkSpec with SparkCounting with TimeLimits
+    with Eventually {
 
   private def engineOf(edges: Seq[(Long, Long)], conf: PprConf = PprConf()) = {
     val s = spark
@@ -24,48 +23,6 @@ class PprEngineSpec extends SparkSpec with TimeLimits with Eventually {
 
   private def toMap(df: DataFrame): Map[Long, Double] =
     df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-
-  /** Spark jobs started while `f` runs, counted under a private job group. */
-  private def jobsDuring(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = "ppr-engine-spec"
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.incrementAndGet()
-    }
-    ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "PprEngineSpec")
-      try f finally sc.clearJobGroup()
-      ListenerBusDrain(sc)
-      jobs.get
-    } finally sc.removeSparkListener(listener)
-  }
-
-  /** Broadcasts made while `f` runs, besides the task binary Spark
-    * broadcasts for every stage it submits.
-    */
-  private def broadcastsDuring(f: => Unit): Long = {
-    val sc = spark.sparkContext
-    val stages = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-        stages.incrementAndGet()
-    }
-    ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    try {
-      val before = sc.broadcast(0).id
-      f
-      val after = sc.broadcast(0).id
-      ListenerBusDrain(sc)
-      after - before - 1 - stages.get
-    } finally sc.removeSparkListener(listener)
-  }
 
   /** `f` throws an IllegalArgumentException naming `arg`, and no Spark
     * job ran before it did.
@@ -342,5 +299,32 @@ class PprEngineSpec extends SparkSpec with TimeLimits with Eventually {
     e.csr
     rejects("epsilon")(new e.monteCarlo(1e-10).wholeGraphPpr(1L))
     rejects("epsilon")(new e.monteCarlo(1e-10).topkPpr(1L, 2))
+  }
+
+  test("monteCarlo runs with the engine's pfail and delta") {
+    val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (2L, 4L), (3L, 1L), (4L, 1L))
+    val e = engineOf(edges, PprConf(delta = 0.01, pfail = 0.01))
+    val got = toMap(new e.monteCarlo(0.5).wholeGraphPpr(1L))
+    val kernel = toMap(MonteCarlo.sspprBatch(spark, e.csr, Seq(1L), 0.15, 0.5,
+      0.01, 0.01, 42L, 0).select("node_id", "score"))
+    assert(got == kernel)
+    val byDefault = engineOf(edges)
+    assert(got != toMap(new byDefault.monteCarlo(0.5).wholeGraphPpr(1L)),
+      "pfail = delta = 0.01 gave the default conf's (1/n) answer")
+  }
+
+  test("the BASE preprocess reuses the reversed CSR broadcast of backward") {
+    val e = engine
+    val sc = spark.sparkContext
+    assert(new e.backward(1e-4).pprColumn(1L).collect().nonEmpty)
+    val dir = Files.createTempDirectory("engine_shared_rcsr").toString + "/store"
+    val b = new e.base(1e-4, 0.0)
+    val before = sc.broadcast(0).id
+    b.preprocess(dir)
+    val made = BroadcastValues.between(sc, before, sc.broadcast(0).id)
+    assert(!made.exists(v => v.isInstanceOf[Csr] || v.isInstanceOf[Array[Int]]),
+      "the preprocess broadcast its own reversed CSR or degree array")
+    assert(b.readPpr(dir, 1L).collect().nonEmpty)
+    assert(b.deletePrep(dir))
   }
 }

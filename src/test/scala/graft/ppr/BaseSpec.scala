@@ -116,6 +116,29 @@ class BaseSpec extends SparkSpec {
     assert(Base.deleteStore(spark, dir))
   }
 
+  test("every lookup of a written store equals a Spark SQL scan of it, full " +
+      "and top-k, bit for bit") {
+    val ap = Base.allPairs(spark, edgesDf, 0.15, 1e-6)
+    val full = Files.createTempDirectory("base_scan").toString + "/ppr"
+    val topk = Files.createTempDirectory("base_scan_topk").toString + "/ppr"
+    Base.writeStore(ap, full)
+    Base.writeTopkStore(ap, topk, 2)
+    def bits(rows: Array[org.apache.spark.sql.Row]) = rows.toSeq.map(r =>
+      (r.getLong(0), java.lang.Double.doubleToRawLongBits(r.getDouble(1)),
+        if (r.length > 2) r.getInt(2) else 0))
+    for (s <- Seq(1L, 2L, 3L, 4L)) {
+      val want = spark.read.parquet(full).where(col("src") === s)
+        .select("node_id", "score").collect()
+      assert(bits(Base.readSource(spark, full, s).collect()).sortBy(_._1) ==
+        bits(want).sortBy(_._1), s"source $s")
+      val wantTopk = spark.read.parquet(topk).where(col("src") === s)
+        .select("node_id", "score", "rk").orderBy("rk", "node_id").collect()
+      assert(bits(Base.readTopkSource(spark, topk, s).collect()) == bits(wantTopk),
+        s"top-k source $s")
+    }
+    assert(Base.deleteStore(spark, full) && Base.deleteStore(spark, topk))
+  }
+
   private def rejectsBoth(arg: String, rmax: Double, threshold: Double): Unit = {
     val csr = graft.graph.GraphOps.buildCsr(edgesDf)
     val rcsr = Base.reversedCsr(edgesDf)

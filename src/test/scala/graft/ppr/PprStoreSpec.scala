@@ -6,15 +6,16 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{AnalysisException, DataFrame}
+import org.apache.spark.sql.{AnalysisException, DataFrame, Row}
+import org.apache.spark.sql.functions.col
 
-import graft.SparkSpec
+import graft.{SparkCounting, SparkSpec}
 
 /** Pins the store's lookup contract ([[PprStore]]): a store is opened once
   * per session and path, yet a read never serves a file index older than
   * the store on disk — whoever rewrote or deleted it.
   */
-class PprStoreSpec extends SparkSpec {
+class PprStoreSpec extends SparkSpec with SparkCounting {
 
   /** (src, node_id, score) vectors; B differs from A in scores, support
     * and sources.
@@ -153,6 +154,92 @@ class PprStoreSpec extends SparkSpec {
       assert(jobsOf(1L) >= 1)
       for (s <- Seq(1L, 2L, 3L, 1L, 9L)) assert(jobsOf(s) == 1, s"source $s")
     } finally sc.removeSparkListener(listener)
+    assert(PprStore.delete(spark, dir))
+  }
+
+  /** Rows as (node_id, raw bits of score[, rk]), so doubles compare bit for bit. */
+  private def bits(rows: Array[Row]): Seq[Seq[Long]] = rows.toSeq.map { r =>
+    Seq(r.getLong(0), java.lang.Double.doubleToRawLongBits(r.getDouble(1))) ++
+      (if (r.length > 2) Seq(r.getInt(2).toLong) else Nil)
+  }
+
+  test("every source of a seeded store reads back bit for bit as a Spark SQL " +
+      "scan of the store, full and top-k") {
+    val rnd = new scala.util.Random(20261019L)
+    val sources = Seq(-7L, 0L, 3L, 12L, 1L << 40)
+    // 1-40 rows per source; a quarter of the scores repeat one value, so the
+    // top-k cut has ties
+    val rows = for (s <- sources; v <- 0 until 1 + rnd.nextInt(40)) yield
+      (s, v * 7L - 50L, if (rnd.nextInt(4) == 0) 0.125 else rnd.nextDouble() / (1 + v))
+    val full = newDir("seeded_full")
+    PprStore.write(df(rows), full)
+    val scan = spark.read.parquet(full)
+    for (s <- sources :+ 999L) {
+      val got = PprStore.read(spark, full, s)
+      val want = scan.where(col("src") === s).select("node_id", "score")
+      assert(got.schema == want.schema)
+      assert(bits(got.collect()).sortBy(_.head) == bits(want.collect()).sortBy(_.head),
+        s"source $s")
+    }
+    val k = 5
+    val topk = newDir("seeded_topk")
+    Base.writeTopkStore(df(rows, "dst"), topk, k)
+    val topkScan = spark.read.parquet(topk)
+    var tied = false
+    for (s <- sources :+ 999L) {
+      val got = Base.readTopkSource(spark, topk, s).collect()
+      val want = topkScan.where(col("src") === s)
+        .select("node_id", "score", "rk").orderBy("rk", "node_id").collect()
+      assert(bits(got) == bits(want), s"source $s")
+      tied ||= got.length > k
+    }
+    assert(tied, "no source has a tie at the top-k cut")
+    assert(PprStore.delete(spark, full) && PprStore.delete(spark, topk))
+  }
+
+  test("a schema-only empty store reads 0 rows with one job") {
+    val dir = newDir("empty")
+    PprStore.write(df(Seq.empty), dir)
+    var rows = -1
+    assert(jobsDuring { rows = read(dir, 1L).size } == 1)
+    assert(rows == 0)
+    assert(PprStore.delete(spark, dir))
+  }
+
+  test("files named _* or .* in the store are not read") {
+    val dir = newDir("hidden")
+    PprStore.write(df(vecA), dir)
+    val part = java.nio.file.Paths.get(dir, "src=1")
+    val names = Files.list(part).toArray.map(_.toString)
+    assert(names.exists(_.endsWith(".crc")), names.mkString(", "))
+    assert(Files.exists(java.nio.file.Paths.get(dir, "_SUCCESS")))
+    // not Parquet: reading either file would fail the read
+    Files.write(part.resolve("_SUCCESS"), "not parquet".getBytes)
+    Files.write(part.resolve(".stray.parquet"), "not parquet".getBytes)
+    assert(read(dir, 1L) == expect(vecA, 1L))
+    assert(PprStore.delete(spark, dir))
+  }
+
+  test("a read runs its job in the call: collect() on the result runs none") {
+    val dir = newDir("local")
+    PprStore.write(df(vecA), dir)
+    var got: DataFrame = null
+    assert(jobsDuring { got = PprStore.read(spark, dir, 1L) } == 1)
+    assert(jobsDuring { assert(got.collect().length == 2) } == 0)
+    val topk = newDir("local_topk")
+    Base.writeTopkStore(df(vecA, "dst"), topk, 1)
+    assert(jobsDuring { got = Base.readTopkSource(spark, topk, 1L) } == 1)
+    assert(jobsDuring { assert(got.collect().length == 1) } == 0)
+    assert(PprStore.delete(spark, dir) && PprStore.delete(spark, topk))
+  }
+
+  test("reads after the first make no new broadcast") {
+    val dir = newDir("conf")
+    PprStore.write(df(vecA), dir)
+    assert(read(dir, 1L) == expect(vecA, 1L))
+    assert(broadcastsDuring {
+      for (i <- 0 until 20) read(dir, 1L + i % 4)
+    } == 0)
     assert(PprStore.delete(spark, dir))
   }
 }
