@@ -200,7 +200,7 @@ object Bench {
       // is paid exactly once INSIDE a timed row per board — a gate
       // re-run can no longer inherit attempt 1's warm caches and time
       // pure cache reads for the ~45 fit-bearing rows. The call fans out
-      // to every family (Graph/Relational/GraphOps/Text ride
+      // to every family (Graph/GraphOps/Text ride
       // Embeddings.invalidateModels).
       graft.queries.Embeddings.invalidateModels(spark, sfDir)
       val preFloor = floorProbe() // also JIT-warms the per-row probes

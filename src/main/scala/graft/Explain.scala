@@ -13,8 +13,7 @@ object Explain {
     val names = if (args.length > 1) args.drop(1).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
     // the SHARED session recipe — the audit must show the plans the
-    // board actually runs (GraftExtensions' TopKRewrite included;
-    // a bare session under-reported the engine here before).
+    // board actually runs (a bare session would miss GraftExtensions).
     val spark = LocalSession.create()
     spark.sparkContext.setLogLevel("ERROR")
     for (n <- names) {

@@ -4,7 +4,6 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions.{KthScore, VecDot}
-import graft.plans.TopKRewrite
 
 /** One-stop session wiring for the library's custom Catalyst surface:
   *
@@ -15,10 +14,8 @@ import graft.plans.TopKRewrite
   * }}}
   *
   * registers the `vec_dot` expression and `kth_score` aggregate for
-  * SQL/`selectExpr` use and installs the [[graft.plans.TopKRewrite]]
-  * window-top-k optimizer rule. Equivalent per-session, post-hoc setup:
-  * `VectorFunctions.register` / `TopKFunctions.register` plus
-  * `spark.experimental.extraOptimizations :+= TopKRewrite`.
+  * SQL/`selectExpr` use. Equivalent per-session, post-hoc setup:
+  * `VectorFunctions.register` / `TopKFunctions.register`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -31,6 +28,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("kth_score"),
       new ExpressionInfo(classOf[KthScore].getName, "kth_score"),
       (children: Seq[Expression]) => KthScore(children.head, children(1))))
-    ext.injectOptimizerRule(_ => TopKRewrite)
   }
 }

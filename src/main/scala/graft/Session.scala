@@ -3,12 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one local session recipe every runtime main (Bench, Verify,
-  * perfbench) shares: env-sized `local[n]` master, the
-  * GraftExtensions (vec_dot/kth_score + TopKRewrite live), and the
-  * engine flags the driver tables need. One place to add the next
-  * config, so the mains cannot drift apart — sidecar measurements are
-  * only comparable to the board if both run under the same engine
-  * config.
+  * perfbench) shares: env-sized `local[n]` master, the GraftExtensions
+  * (vec_dot/kth_score), and the engine flags the driver tables need.
+  * One place to add the next config, so the mains cannot drift apart —
+  * sidecar measurements are only comparable to the board if both run
+  * under the same engine config.
   */
 object LocalSession {
   def create(): SparkSession = {

@@ -20,16 +20,14 @@ object SparkEntry {
     queries("g_ppr_topk")(spark, "/root/testdata/sf0.001")
 
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.Relational.queries ++
-      graft.queries.Graph.queries ++
+    graft.queries.Graph.queries ++
       graft.queries.GotQueries.queries ++
       graft.queries.Text.queries ++
       graft.queries.Embeddings.queries ++
       graft.queries.Events.queries
 
   def oracleSql: Map[String, String] =
-    graft.queries.Relational.oracleSql ++
-      graft.queries.Graph.oracleSql ++
+    graft.queries.Graph.oracleSql ++
       graft.queries.GotQueries.oracleSql ++
       graft.queries.Text.oracleSql ++
       graft.queries.Embeddings.oracleSql ++

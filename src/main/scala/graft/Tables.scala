@@ -26,10 +26,10 @@ object Tables {
 }
 
 /** Per-application scratch namespace for queries that materialize stores
-  * (bucketed tables, shard exports, PPR prep stores). Paths and table
-  * names are suffixed with the Spark applicationId, so two concurrent
-  * runs (e.g. Bench and Verify, or parallel test JVMs) write disjoint
-  * locations instead of racing on a shared fixed path.
+  * (shard exports, PPR prep stores). Paths are suffixed with the Spark
+  * applicationId, so two concurrent runs (e.g. Bench and Verify, or
+  * parallel test JVMs) write disjoint locations instead of racing on a
+  * shared fixed path.
   */
 object Scratch {
   private val hooked = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
@@ -49,10 +49,6 @@ object Scratch {
     installCleanup(spark)
     s"${root(spark)}/$leaf"
   }
-
-  /** Application-unique catalog table name `<base>_<appId>`. */
-  def table(spark: SparkSession, base: String): String =
-    s"${base}_${appTag(spark)}"
 
   private def installCleanup(spark: SparkSession): Unit =
     if (hooked.add(appTag(spark))) {

@@ -633,8 +633,7 @@ object Embeddings {
     })
 
   /** One Lloyd fit at an explicit k — the body behind [[kmCentroids]]
-    * (which caches + pins the k = [[KmK]] model) and the harness scale
-    * hook [[semDedupAtK]].
+    * (which caches + pins the k = [[KmK]] model).
     */
   private def kmFitAt(s: SparkSession, dir: String,
       k: Int): (DataFrame, DataFrame) = {
@@ -654,21 +653,6 @@ object Embeddings {
         .selectExpr("cid", cvArray))
     }
     (emb, cent)
-  }
-
-  /** Harness-only scale hook: the `e_semdedup` BODY at an explicit k.
-    * The documented SemDeDup scale contract is k ∝ corpus size (in-cell
-    * pairing is quadratic BY DESIGN, held linear overall by cell
-    * occupancy staying ~constant) — so an octave blowup must refit at
-    * k·blowup rather than serve the fixed-[[KmK]] model, whose cells
-    * (and the quadratic pairing inside them) would grow with the corpus.
-    * No caching, no pins — the caller's per-row reap releases the fit.
-    */
-  private[graft] def semDedupAtK(s: SparkSession, dir: String,
-      k: Int): DataFrame = {
-    val (emb, cent) = kmFitAt(s, dir, k)
-    semDedup(kmAssign(emb, cent).select(col("vec_id"), col("cell"))
-      .localCheckpoint(true), emb, SemDupThreshold, MaxSemCellDistinct)
   }
 
   private def kmAssign(emb: DataFrame, c: DataFrame): DataFrame =

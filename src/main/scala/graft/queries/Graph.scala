@@ -498,7 +498,6 @@ object Graph {
     lpaCache.remove((s, dir))
     lpaPins.remove((s, dir)).foreach(ids =>
       graft.operators.SessionPins.unpin(s.sparkContext, ids))
-    graft.queries.Relational.invalidateBuckets(s, dir)
     GraphOps.invalidateGraphs(s, dir)
     graft.queries.Text.invalidateShared(s, dir)
   }
@@ -907,33 +906,11 @@ object Graph {
     }.getOrElse(attempt(rungs.last, last = true).get)
   }
 
-  /** The per-node triangle family's shared wedge body over an undirected
-    * `(a, b)` edge list (a < b, deduped) — `g_local_cc`'s row shape
-    * `(node_id, dg, tri, cc)`; `g_clustering`'s global scalar folds from
-    * the same outputs (T = Σtri/3, S₂ = Σ dg·(dg−1), C = 6T/S₂ — the
-    * octave harness does exactly that fold). Pipeline: degree-ordered
-    * orientation (each edge leaves its lower-degree endpoint, so
-    * out-degree is O(√m)-bounded and hub centers cannot go quadratic),
-    * wedge self-join on the oriented source, triangle closure via a
-    * left-semi join back to the edge list, per-node participation via
-    * explode + one map-side-combined count. Checkpoints: the edge list
-    * feeds degrees/orientation/closure; degrees feed orientation and the
-    * final profile; oriented feeds both wedge sides.
-    */
-  private[graft] def localCcRun(und0: DataFrame): DataFrame = {
-    val und = und0.localCheckpoint(true)
-    val deg = und.select(col("a").as("id"))
-      .unionAll(und.select(col("b").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("dg"))
-      .localCheckpoint(true)
-    localCcFinish(deg, triPerNodeFrom(und, deg))
-  }
-
   /** The degree-ordered wedge/triangle enumeration: orientation (each
     * edge leaves its lower-(deg, id) endpoint — O(√m)-bounded oriented
     * out-degree), wedge self-join, left-semi closure, per-node
-    * participation count. `g_triangles`' output frame verbatim, shared
-    * by [[localCcRun]] and [[triShared]] so the pipeline cannot drift.
+    * participation count. `g_triangles`' output frame verbatim, built
+    * once by [[triShared]].
     * `und` must be pre-checkpointed (it feeds orientation AND closure);
     * `deg` too (orientation joins it twice).
     */
@@ -1547,13 +1524,12 @@ object Graph {
     // — the node-granular companion of g_clustering's global scalar
     // (Watts & Strogatz 1998): triangle participation over possible
     // neighbor pairs. Runs g_triangles' degree-ordered wedge pipeline
-    // verbatim inside [[localCcRun]] (the two rows may not drift —
+    // verbatim via [[triShared]] (the two rows may not drift —
     // TrianglesSpec brute-pins both) plus one degree aggregate and a
     // left join so triangle-free and degree-1 nodes report 0 — integer
     // inputs, one float division per node.
     "g_local_cc" -> ((s, dir) => {
-      // r19: finish from the shared triangle fold — localCcFinish is
-      // localCcRun's exact projection (spec-pinned).
+      // r19: finish from the shared triangle fold (spec-pinned).
       val (deg, triPerNode) = triShared(s, dir)
       localCcFinish(deg, triPerNode)
     }),

@@ -15,10 +15,9 @@ class BenchFitPolicySpec extends SparkSpec {
       "pins, and the refit reproduces the same rows") {
     val sc = spark.sparkContext
     // Touch one fit-bearing row per family: PPR family loop (Graph),
-    // LSH pair table (Text), bucketed tables (Relational), graph
-    // snapshot (GraphOps), served GT (Embeddings).
-    val rows = Seq("g_pagerank", "d_lsh_pairs",
-      "q12_bucket_join", "g_degree", "e_cosine_topk")
+    // LSH pair table (Text), graph snapshot (GraphOps), served GT
+    // (Embeddings).
+    val rows = Seq("g_pagerank", "d_lsh_pairs", "g_degree", "e_cosine_topk")
     val before = rows.map { n =>
       n -> SparkEntry.queries(n)(spark, sfDir).collect().toSeq
     }.toMap

@@ -35,6 +35,14 @@ class DriverCompatSpec extends SparkSpec {
     }
   }
 
+  test("every oracle entry names a query row") {
+    // compare_oracle.py replays each oracle against the row's dump; an
+    // oracle whose row is gone reports MISSING-RESULT forever
+    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
+    assert(orphans.isEmpty,
+      s"oracle entries without a query row: ${orphans.toSeq.sorted.mkString(", ")}")
+  }
+
   /** Per-offset (paren depth, inside-string-literal) scan. Single-quoted
     * SQL string literals are skipped — an unbalanced '(' inside a quoted
     * regex/pattern must not skew the depth — and the doubled `''` escape

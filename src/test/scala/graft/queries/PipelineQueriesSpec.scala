@@ -78,180 +78,6 @@ class PipelineQueriesSpec extends SparkSpec {
     }
   }
 
-  test("q8_rollup subtotal levels are mutually consistent") {
-    val rows = Relational.queries("q8_rollup")(spark, sfDir).collect()
-      .map(r => (Option(r.getString(0)), Option(r.getString(1)),
-        r.getAs[Double]("sum_qty"), r.getAs[Long]("n"), r.getAs[Long]("gid")))
-    val detail = rows.filter(_._5 == 0L)
-    val flagLvl = rows.filter(_._5 == 1L)
-    val grand = rows.filter(_._5 == 3L)
-    assert(grand.length == 1)
-    assert(grand.head._4 == detail.map(_._4).sum, "grand n = sum of detail n")
-    flagLvl.foreach { case (f, _, _, n, _) =>
-      assert(n == detail.filter(_._1 == f).map(_._4).sum, s"flag $f subtotal")
-    }
-  }
-
-  test("q18_except and q17_intersect partition the 1995 customer set") {
-    import org.apache.spark.sql.functions.{col, year}
-    val except = Relational.queries("q18_except")(spark, sfDir).collect()
-      .map(_.getLong(0)).toSet
-    val intersect = Relational.queries("q17_intersect")(spark, sfDir)
-      .collect().map(_.getLong(0)).toSet
-    val o = graft.Tables(spark, sfDir, "orders")
-    def custs(y: Int) = o.where(year(col("o_orderdate")) === y)
-      .select("o_custkey").distinct().collect().map(_.getLong(0)).toSet
-    assert(except.nonEmpty && (except intersect custs(1996)).isEmpty)
-    assert((except & intersect).isEmpty)
-    assert((except | intersect) == custs(1995),
-      "churned ∪ retained = all 1995 customers")
-  }
-
-  test("q26_unpivot is the exact inverse of q9_pivot: the long rows " +
-      "equal the direct grouped aggregate, null cells dropped") {
-    import org.apache.spark.sql.functions._
-    val long = Relational.queries("q26_unpivot")(spark, sfDir).collect()
-      .map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSet
-    val direct = graft.Tables(spark, sfDir, "lineitem")
-      .groupBy(col("l_returnflag"), col("l_linestatus"))
-      .agg(round(sum(col("l_quantity")), 2).as("qty"))
-      .collect()
-      .map(r => (r.getString(0),
-        if (r.getString(1) == "F") "qty_f" else "qty_o", r.getDouble(2)))
-      .toSet
-    assert(long == direct)
-    assert(long.nonEmpty)
-    // round-trip: every wide row contributes at most 2 long rows
-    val wide = Relational.queries("q9_pivot")(spark, sfDir).count()
-    assert(long.size <= 2 * wide)
-  }
-
-  test("q26_unpivot drops an ABSENT pivot cell instead of emitting a " +
-      "NULL-qty row (Spark's unpivot keeps null cells; our filter drops)") {
-    import spark.implicits._
-    // a wide frame with a missing (returnflag, linestatus) combination —
-    // the standard-TPC-H shape (no R/O rows): qty_o is NULL for "R".
-    val wide = Seq(("A", Some(10.0), Some(20.0)), ("R", Some(5.5), None))
-      .toDF("l_returnflag", "qty_f", "qty_o")
-    val got = Relational.unpivotQty(wide).collect()
-      .map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSet
-    assert(got == Set(("A", "qty_f", 10.0), ("A", "qty_o", 20.0),
-      ("R", "qty_f", 5.5)), s"NULL cell must melt to NO row, got $got")
-    // and the raw Spark unpivot really does keep the null cell — the
-    // regression this spec exists to catch: if this ever starts failing,
-    // the explicit filter went redundant, not wrong.
-    val raw = wide.unpivot(Array(col("l_returnflag")),
-      Array(col("qty_f"), col("qty_o")), "linestatus", "qty").count()
-    assert(raw == 4, "Spark unpivot emits the NULL cell as a row")
-  }
-
-  test("q21_late_suppliers: the aggregate rewrite equals the literal " +
-      "EXISTS/NOT-EXISTS semantics replayed in memory") {
-    import org.apache.spark.sql.functions.col
-    val got = Relational.queries("q21_late_suppliers")(spark, sfDir)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-
-    val od = graft.Tables(spark, sfDir, "orders")
-      .selectExpr("o_orderkey", "unix_micros(o_orderdate) AS ous")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val li = graft.Tables(spark, sfDir, "lineitem")
-      .selectExpr("l_orderkey", "l_suppkey", "unix_micros(l_shipdate) AS sus")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    val lateUs = Relational.QLateDays * Events.DayUs
-    val perOrder = li.groupBy(_._1).map { case (ok, ls) =>
-      val bySupp = ls.groupBy(_._2).view
-        .mapValues(_.exists(t => t._3 - od(ok) > lateUs)).toMap
-      ok -> bySupp
-    }
-    // literal semantics: supplier s credited in order o iff s late,
-    // EXISTS another supplier, NOT EXISTS another late supplier
-    val credit = perOrder.toSeq.flatMap { case (_, bySupp) =>
-      bySupp.collect { case (s0, true)
-        if bySupp.size >= 2 && bySupp.count(_._2) == 1 => s0 }
-    }
-    val names = graft.Tables(spark, sfDir, "supplier")
-      .select(col("s_suppkey"), col("s_name")).collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
-    val want = credit.groupBy(identity).map { case (s0, xs) =>
-      (names(s0), xs.size.toLong)
-    }.toSeq.sortBy { case (n, c) => (-c, n) }.take(Relational.QLateTopN)
-    assert(want.nonEmpty && got == want)
-  }
-
-  test("q22_idle_customers: integer-exact threshold equals the float-avg " +
-      "semantics and every reported customer group has no orders") {
-    val got = Relational.queries("q22_idle_customers")(spark, sfDir)
-      .collect()
-      .map(r => r.getAs[Number](0).longValue ->
-        ((r.getLong(1), r.getDouble(2))))
-      .toMap
-    val cust = graft.Tables(spark, sfDir, "customer")
-      .selectExpr("c_custkey", "CAST(c_nationkey AS LONG) AS c_nationkey",
-        "CAST(round(c_acctbal * 100) AS LONG) AS cents").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    val ordered = graft.Tables(spark, sfDir, "orders")
-      .where(org.apache.spark.sql.functions.col("o_orderdate") >=
-        org.apache.spark.sql.functions.lit(Relational.Q22Cutoff)
-          .cast("timestamp"))
-      .select("o_custkey").collect().map(_.getLong(0)).toSet
-    val pos = cust.map(_._3).filter(_ > 0)
-    val (nPos, sPos) = (pos.length.toLong, pos.sum)
-    val want = cust
-      .filter { case (ck, _, c) => c * nPos > sPos && !ordered(ck) }
-      .groupBy(_._2).map { case (nk, xs) =>
-        nk -> ((xs.length.toLong,
-          xs.map(_._3).sum.toDouble / 100.0))
-      }
-    assert(want.nonEmpty && got == want)
-    // the integer predicate IS the above-average predicate
-    cust.foreach { case (_, _, c) =>
-      assert((c * nPos > sPos) ==
-        (c.toDouble > sPos.toDouble / nPos.toDouble) ||
-        c.toDouble == sPos.toDouble / nPos.toDouble)
-    }
-  }
-
-  test("q19_distribution: ratios replay from per-partition ranks and " +
-      "ntile groups differ in size by at most one") {
-    val rows = Relational.queries("q19_distribution")(spark, sfDir)
-      .collect().map(r => (r.getString(1), r.getLong(0), r.getDouble(2),
-        r.getDouble(3), r.getDouble(4), r.getInt(5)))
-    assert(rows.nonEmpty)
-    rows.groupBy(_._1).foreach { case (_, part) =>
-      val n = part.length
-      val sorted = part.sortBy(t => (t._3, t._2))
-      sorted.zipWithIndex.foreach { case ((_, _, _, pr, cd, _), i) =>
-        val wantPr = if (n == 1) 0.0 else i.toDouble / (n - 1)
-        assert(pr == graft.graph.Hashing.round6(wantPr))
-        assert(cd == graft.graph.Hashing.round6((i + 1).toDouble / n))
-      }
-      val tiles = sorted.map(_._6)
-      assert(tiles.sameElements(tiles.sorted), "tiles follow the order")
-      val sizes = tiles.groupBy(identity).view.mapValues(_.length).values
-      assert(sizes.max - sizes.min <= 1, "ntile balance")
-    }
-  }
-
-  test("q20_running_total: exact-cents cumulative sums per customer in " +
-      "(date, key) order; final value equals the customer's total") {
-    val rows = Relational.queries("q20_running_total")(spark, sfDir)
-      .collect().map(r => (r.getLong(1), r.getTimestamp(2).getTime,
-        r.getLong(0), r.getDouble(3)))
-    assert(rows.nonEmpty)
-    rows.groupBy(_._1).foreach { case (_, os) =>
-      val ordered = os.sortBy(t => (t._2, t._3))
-      var acc = 0L
-      ordered.foreach { case (_, _, _, run) =>
-        // recover this order's cents from the running difference — the
-        // reported total must be the exact prefix sum
-        val cents = math.round(run * 100) - acc
-        assert(cents > 0, "order amounts are positive")
-        acc += cents
-        assert(run == acc.toDouble / 100.0, "exact cents, one division")
-      }
-    }
-  }
-
   test("ev_sliding counts every event in exactly two hopping windows") {
     val slide = Events.queries("ev_sliding")(spark, sfDir).collect()
       .map(_.getAs[Long]("n")).sum

@@ -42,8 +42,6 @@ FIT_BEARING = {
     "g_power_ppr", "g_ppr_seedset", "g_pagerank",
     # r19 optimization: Katz + HITS joined the tagged family loop
     "g_katz", "g_hits",
-    # r19 optimization: bucketed tables written once per session
-    "q12_bucket_join",
     # r19 optimization: served row results (exact GT + index searches,
     # consumed by the recall rows)
     "e_cosine_topk", "e_ann_lsh", "e_ann_ivf", "e_bq_search",
