@@ -24,6 +24,21 @@ import graft.graph.Csr
   * mass alone: its push runs, but its walks are skipped and its estimate,
   * which could only be thrown away, is never built.
   *
+  * Pilot: only the terminating round's walks are kept, so before a
+  * round's full walks the loop runs a pilot — W = ⌊walks/32⌋ walks
+  * (`PilotShare`), spread over the residue by systematic sampling, each
+  * crediting Σr/W onto its own copy of the reserve, on RNG streams apart
+  * from every full round's. The full walks run only when the pilot's kth
+  * score is at least 0.9·(1+ε′)·δ (`PilotMargin`); otherwise the round's
+  * walks are skipped and its push state carries on. No pilot runs in the
+  * last round (δ = 1/n, which always ends) or in a round of fewer than n
+  * walks (Σ⌈r_v·ω_r⌉ ≈ ω_r·Σr), where its O(n) pass costs more than the
+  * walks it could save. The termination test is always the full
+  * estimate's. So when the same round ends the answer is bit-identical to
+  * walking every round; when a pilot skipped a round that would have
+  * ended, the answer comes from a later round with a smaller δ, inside
+  * the same (ε, δ, p_fail) bound.
+  *
   * Walks: each residual node's walks run [[MonteCarlo.Lanes]] at a time
   * in lock-step ([[MonteCarlo.walkEndpoints]]), one RNG stream per
   * (round key, node, walk index), and are credited in walk order — the
@@ -134,16 +149,36 @@ object Fora {
     def reset(): Unit = walks = Array.newBuilder[(Int, Int)]
   }
 
+  /** A pilot's share of its round's walks: W = ⌊walks / PilotShare⌋. */
+  private val PilotShare = 32
+
+  /** The round's full walks run when the pilot's kth score is at least
+    * PilotMargin·(1+ε′)·δ.
+    */
+  private val PilotMargin = 0.9
+
+  /** Keeps the pilots' RNG streams apart from the full rounds'. */
+  private val PilotSalt = 0x5851F42D4C957F2DL
+
+  /** The terminating round of [[topkRun]]: its carried push state, walk
+    * budget and estimate vector, its index, and the pilot and full walks
+    * run over all rounds.
+    */
+  private final case class TopkEnd(
+      carried: ForwardPush.PushState,
+      numWalks: Long,
+      est: Array[Double],
+      round: Int,
+      pilotWalks: Long,
+      fullWalks: Long)
+
   /** Shared top-k δ-halving round loop — ONE body serves both the
     * production kernel ([[topkLocal]], `rec = null`) and the
     * verification trace ([[topkTrace]]), so rmax/ω formulas, RNG stream
-    * keys and the round-advance decision cannot drift between them.
-    * Returns the terminating round's (carried push state, walk count,
-    * estimate vector).
+    * keys, the pilot and the round-advance decision cannot drift between
+    * them.
     */
-  private def topkRun(
-      csr: Csr, srcDense: Int, k: Int, conf: Conf,
-      rec: WalkRec): (ForwardPush.PushState, Long, Array[Double]) = {
+  private def topkRun(csr: Csr, srcDense: Int, k: Int, conf: Conf, rec: WalkRec): TopkEnd = {
     val n = csr.numNodes.toDouble
     val m = csr.numEdges.toDouble
     val alpha = conf.alpha
@@ -161,11 +196,12 @@ object Fora {
     if (csr.outDegree(srcDense) == 0) { // Fora_Topk.java:127-131
       val res = new Array[Double](csr.numNodes)
       res(srcDense) = 1.0
-      return (ForwardPush.PushState(res, new Array[Double](csr.numNodes), 0.0),
-        0L, res)
+      return TopkEnd(ForwardPush.PushState(res, new Array[Double](csr.numNodes), 0.0),
+        0L, res, 0, 0L, 0L)
     }
 
     val srcKey = Rng.mix(conf.seed ^ (srcDense * 0xC2B2AE3D27D4EB4FL))
+    val pilotKey = Rng.mix(srcKey ^ PilotSalt)
     var carried = {
       val init = new Array[Double](csr.numNodes)
       init(srcDense) = 1.0
@@ -173,7 +209,9 @@ object Fora {
     }
     val ends = new Array[Int](MonteCarlo.WalkBlock)
     var round = 0
-    var result: (ForwardPush.PushState, Long, Array[Double]) = null
+    var pilotWalks = 0L
+    var fullWalks = 0L
+    var result: TopkEnd = null
     while (result == null) {
       if (rec != null) rec.reset()
       var rmax = eps * math.sqrt(deltaLocal / 3.0 / m / math.log(2.0 / pf))
@@ -181,20 +219,32 @@ object Fora {
       rmax *= math.sqrt(m * rmax) * 3.0 // Fora_Topk.java:133
 
       carried = ForwardPush.runLocalFrom(csr, carried, srcDense, alpha, rmax)
+      val last = deltaLocal <= minDelta
+      val bar = (1.0 + eps) * deltaLocal
       // The estimate sums to 1, so while k·(1+ε′)·δ > 1 no k scores can
       // reach (1+ε′)·δ: such a round (always the first, δ = 1/k) cannot
       // end, and its walks are skipped. The last round (δ = 1/n) always
       // ends. The 1e-6 margin covers the rounding of the sums.
-      val canEnd = k * (1.0 + eps) * deltaLocal <= 1.0 + 1e-6 || deltaLocal <= minDelta
-      if (canEnd) {
-        val rsumRw = carried.residue.sum * (1.0 - alpha)
+      if (last || k * bar <= 1.0 + 1e-6) {
+        val residueSum = carried.residue.sum
+        val rsumRw = residueSum * (1.0 - alpha)
         val numWalks = (omega * rsumRw).toLong
-        val est = carried.reserve.clone()
-        if (numWalks > 0)
-          topkWalks(csr, carried.residue, numWalks, alpha, srcKey + round, est, rec, ends)
-        val kth = kthLargest(est, k)
-        if (kth >= (1.0 + eps) * deltaLocal || deltaLocal <= minDelta)
-          result = (carried, numWalks, est)
+        val walks = numWalks * residueSum // ≈ Σ⌈r_v·numWalks⌉
+        val pilot = (walks / PilotShare).toLong
+        val worthWalking = last || walks < n || pilot == 0L || {
+          val (kth, ran) = pilotKth(csr, carried, residueSum, pilot, alpha,
+            pilotKey + round, k, ends)
+          pilotWalks += ran
+          kth >= PilotMargin * bar
+        }
+        if (worthWalking) {
+          val est = carried.reserve.clone()
+          if (numWalks > 0)
+            fullWalks += topkWalks(csr, carried.residue, numWalks, alpha, srcKey + round,
+              est, rec, ends)
+          if (kthLargest(est, k) >= bar || last)
+            result = TopkEnd(carried, numWalks, est, round, pilotWalks, fullWalks)
+        }
       }
       if (result == null)
         deltaLocal = math.max(minDelta, deltaLocal / 4.0) // Fora_Topk.java:179
@@ -203,13 +253,54 @@ object Fora {
     result
   }
 
+  /** A round's pilot: `w` walks placed on the residue by systematic
+    * sampling — the points (u + i)·Σr/w, u uniform in [0, 1), falling in
+    * node v's share of [0, Σr) are v's walks — each crediting Σr/w to its
+    * endpoint on a copy of the reserve. Returns that copy's kth score and
+    * the walks run.
+    */
+  private def pilotKth(
+      csr: Csr, carried: ForwardPush.PushState, residueSum: Double, w: Long,
+      alpha: Double, key: Long, k: Int, ends: Array[Int]): (Double, Long) = {
+    val est = carried.reserve.clone()
+    val residue = carried.residue
+    val step = residueSum / w
+    val u = Rng.unit(Rng.mix(key))
+    var cum = 0.0
+    var ran = 0L
+    var v = 0
+    while (v < csr.numNodes && ran < w) {
+      val r = residue(v)
+      if (r != 0.0) {
+        cum += r
+        val upTo = math.min(w, math.ceil(cum / step - u).toLong) // points below cum
+        if (upTo > ran) {
+          val walkKey = Rng.streamKey(key, v)
+          var j = 0L
+          while (j < upTo - ran) {
+            val b = math.min(MonteCarlo.WalkBlock.toLong, upTo - ran - j).toInt
+            MonteCarlo.walkEndpoints(csr, v, alpha, noZeroHop = false, walkKey, j, b, ends)
+            var i = 0
+            while (i < b) { est(ends(i)) += step; i += 1 }
+            j += b
+          }
+          ran = upTo
+        }
+      }
+      v += 1
+    }
+    (kthLargest(est, k), ran)
+  }
+
   /** One top-k round's residual walks: ω_v = ⌈r_v·numWalks⌉ walks from
     * every residual node v, each crediting r_v/ω_v to its endpoint in
-    * `est`, in walk order; `ends` is the endpoint buffer.
+    * `est`, in walk order; `ends` is the endpoint buffer. Returns the
+    * walks run.
     */
   private def topkWalks(
       csr: Csr, residue: Array[Double], numWalks: Long, alpha: Double,
-      roundKey: Long, est: Array[Double], rec: WalkRec, ends: Array[Int]): Unit = {
+      roundKey: Long, est: Array[Double], rec: WalkRec, ends: Array[Int]): Long = {
+    var total = 0L
     var v = 0
     while (v < csr.numNodes) {
       val r = residue(v)
@@ -230,10 +321,12 @@ object Fora {
             }
             j += b
           }
+          total += omegaI
         }
       }
       v += 1
     }
+    total
   }
 
   /** K7 — top-k FORA for one source; returns the full estimate vector of
@@ -244,19 +337,44 @@ object Fora {
     */
   def topkLocal(csr: Csr, srcDense: Int, k: Int, conf: Conf): Array[Double] =
     if (k >= csr.numNodes) wholeGraphLocal(csr, srcDense, conf)
-    else topkRun(csr, srcDense, k, conf, rec = null)._3
+    else topkRun(csr, srcDense, k, conf, rec = null).est
 
-  /** kth largest value (0.0 when fewer than k nonzero entries) — the
-    * `Algo_Util.kth_ppr` quickselect becomes a sort over the nonzero
-    * support (reference `Algo_Util.java:32-79`).
+  /** kth largest value (0.0 when fewer than k positive entries) — the
+    * `Algo_Util.kth_ppr` quickselect (reference `Algo_Util.java:32-79`)
+    * as one pass that keeps the k largest positive entries in a min-heap:
+    * O(n log k) time and O(k) space.
     */
   def kthLargest(scores: Array[Double], k: Int): Double = {
-    val nz = scores.filter(_ > 0.0)
-    if (nz.length < k) 0.0
-    else {
-      java.util.Arrays.sort(nz)
-      nz(nz.length - k)
+    require(k >= 1, s"k must be >= 1, got $k")
+    if (k > scores.length) return 0.0
+    val heap = new Array[Double](k)
+    var size = 0
+    var i = 0
+    while (i < scores.length) {
+      val x = scores(i)
+      if (x > 0.0) {
+        if (size < k) { // sift up
+          var c = size
+          size += 1
+          while (c > 0 && heap((c - 1) / 2) > x) { heap(c) = heap((c - 1) / 2); c = (c - 1) / 2 }
+          heap(c) = x
+        } else if (x > heap(0)) { // replace the root, sift down
+          var c = 0
+          var done = false
+          while (!done) {
+            val l = 2 * c + 1
+            if (l >= k) done = true
+            else {
+              val m = if (l + 1 < k && heap(l + 1) < heap(l)) l + 1 else l
+              if (heap(m) < x) { heap(c) = heap(m); c = m } else done = true
+            }
+          }
+          heap(c) = x
+        }
+      }
+      i += 1
     }
+    if (size < k) 0.0 else heap(0)
   }
 
   /** Verification-mode trace of one [[wholeGraphLocal]] run: the post-push
@@ -287,26 +405,35 @@ object Fora {
   }
 
   /** Verification-mode trace of [[topkLocal]]'s TERMINATING round: the
-    * carried post-push state, the round's walk count, and every walk's
-    * endpoint (original ids). The round-advance decision (kth score vs
-    * (1+ε′)·δ) is made by the kernel exactly as in [[topkLocal]]; the
-    * oracle replays only the terminating round's reduce and tie-inclusive
-    * cut. ForaSpec pins the recomposed cut to [[topkLocal]]'s.
+    * carried post-push state, the round's walk budget, and every walk's
+    * endpoint (original ids); then the schedule the loop ran: the
+    * terminating round's index (0 = δ of 1/k) and the pilot and full walks
+    * run, summed over all rounds. The round-advance decision (pilot, then
+    * kth score vs (1+ε′)·δ) is made by the kernel exactly as in
+    * [[topkLocal]]; the oracle replays only the terminating round's reduce
+    * and tie-inclusive cut. ForaSpec pins the recomposed cut to
+    * [[topkLocal]]'s. Needs 1 ≤ k < n: [[topkLocal]] answers `k ≥ n` with
+    * the whole-graph vector, which has no rounds.
     */
   final case class TopkTrace(
       reserve: Array[Double],
       residue: Array[Double],
       numWalks: Long,
-      walks: Array[(Long, Long)])
+      walks: Array[(Long, Long)],
+      round: Int,
+      pilotWalks: Long,
+      fullWalks: Long)
 
   def topkTrace(csr: Csr, srcDense: Int, k: Int, conf: Conf): TopkTrace = {
     require(k >= 1, s"k must be >= 1, got $k")
+    require(k < csr.numNodes,
+      s"k must be < n = ${csr.numNodes} for a top-k trace, got $k")
     val rec = new WalkRec
-    val (carried, numWalks, _) = topkRun(csr, srcDense, k, conf, rec)
-    TopkTrace(carried.reserve.clone(), carried.residue.clone(), numWalks,
+    val end = topkRun(csr, srcDense, k, conf, rec)
+    TopkTrace(end.carried.reserve.clone(), end.carried.residue.clone(), end.numWalks,
       rec.walks.result().map { case (v, dest) =>
         (csr.originalOf(v), csr.originalOf(dest))
-      })
+      }, end.round, end.pilotWalks, end.fullWalks)
   }
 
   /** Batched whole-graph FORA. Returns (src, node_id, score). */

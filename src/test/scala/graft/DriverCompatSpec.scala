@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
+import scala.util.control.NonFatal
 
 /** Driver-compat static checks. The correctness harness compares Spark
   * parquet output to DuckDB oracle output through pandas, which (a) cannot
@@ -15,24 +16,34 @@ class DriverCompatSpec extends SparkSpec {
 
   test("every query's final schema is scalar-only (pandas-sortable)") {
     val sc = spark.sparkContext
-    SparkEntry.queries.foreach { case (name, fn) =>
+    // every row is checked: a row that throws is one finding, and the rows
+    // after it are still checked
+    val findings = SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
       val pinned = sc.getPersistentRDDs.keySet
-      val bad = fn(spark, sfDir).schema.fields.filter(f => f.dataType match {
-        case _: ArrayType | _: MapType | _: StructType => true
-        case _ => false
-      })
-      assert(bad.isEmpty, s"$name emits non-scalar columns " +
-        s"[${bad.map(f => s"${f.name}: ${f.dataType.simpleString}").mkString(", ")}] — " +
-        "the driver comparator cannot sort them; encode as string/hash")
-      // release whatever the query pinned (same hygiene as Verify/Bench —
-      // INCLUDING the SessionPins exemption those harnesses apply: a
-      // session fit materialized during construction is still served to
-      // later rows, so reaping its blocks here crashed the first
-      // consumer after the reap with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND)
-      val now = sc.getPersistentRDDs
-      (now.keySet -- pinned -- graft.operators.SessionPins.pinned(sc))
-        .foreach(id => now.get(id).foreach(_.unpersist(false)))
+      try {
+        val bad = fn(spark, sfDir).schema.fields.filter(f => f.dataType match {
+          case _: ArrayType | _: MapType | _: StructType => true
+          case _ => false
+        })
+        if (bad.isEmpty) None
+        else Some(s"$name emits non-scalar columns " +
+          s"[${bad.map(f => s"${f.name}: ${f.dataType.simpleString}").mkString(", ")}] — " +
+          "the driver comparator cannot sort them; encode as string/hash")
+      } catch {
+        case NonFatal(e) => Some(s"$name threw $e")
+      } finally {
+        // release whatever the query pinned (same hygiene as Verify/Bench —
+        // INCLUDING the SessionPins exemption those harnesses apply: a
+        // session fit materialized during construction is still served to
+        // later rows, so reaping its blocks here crashed the first
+        // consumer after the reap with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND)
+        val now = sc.getPersistentRDDs
+        (now.keySet -- pinned -- graft.operators.SessionPins.pinned(sc))
+          .foreach(id => now.get(id).foreach(_.unpersist(false)))
+      }
     }
+    assert(findings.isEmpty,
+      s"${findings.size} of ${SparkEntry.queries.size} rows:\n${findings.mkString("\n")}")
   }
 
   test("every oracle entry names a query row") {

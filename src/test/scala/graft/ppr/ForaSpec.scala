@@ -111,6 +111,108 @@ class ForaSpec extends SparkSpec {
     }
   }
 
+  test("topkTrace rejects k >= n, naming k and n") {
+    val csr = GraphOps.buildCsr(edgesDf)
+    val conf = Fora.Conf(alpha = 0.15, epsilon = 0.5, seed = 42L)
+    for (k <- Seq(4, 5)) {
+      val err = intercept[IllegalArgumentException](
+        Fora.topkTrace(csr, csr.denseOf(1L), k, conf))
+      assert(err.getMessage.contains(s"k must be < n = 4") &&
+        err.getMessage.contains(s"got $k"), err.getMessage)
+    }
+  }
+
+  test("kthLargest equals the sort over the positive entries") {
+    val rnd = new scala.util.Random(11L)
+    for (trial <- 0 until 300) {
+      val n = rnd.nextInt(40)
+      // few distinct values: ties, zeros and negatives are common
+      val scores = Array.fill(n)((rnd.nextInt(9) - 2) / 4.0)
+      val k = 1 + rnd.nextInt(n + 5)
+      val nz = scores.filter(_ > 0.0).sorted
+      val bySort = if (nz.length < k) 0.0 else nz(nz.length - k)
+      assert(Fora.kthLargest(scores, k) == bySort,
+        s"trial $trial: k $k scores ${scores.mkString(",")}")
+    }
+    val dense = Array.tabulate(5000)(i => ((i * 7919L) % 1009).toDouble / 1009.0)
+    for (k <- Seq(1, 2, 50, 1009, 4994, 4995, 4996, 6000)) {
+      val nz = dense.filter(_ > 0.0).sorted
+      assert(Fora.kthLargest(dense, k) == (if (nz.length < k) 0.0 else nz(nz.length - k)))
+    }
+  }
+
+  /** Seeded digraph of `n` nodes, 2 to 24 out-edges per node, heads drawn
+    * with density skewed towards low ids, so a few nodes hold most of the
+    * PPR mass.
+    */
+  private def skewedDigraph(seed: Long, n: Int): graft.graph.Csr = {
+    val rnd = new scala.util.Random(seed)
+    val edges = for {
+      u <- 0 until n
+      _ <- 0 until 2 + rnd.nextInt(23)
+      v = (n * math.pow(rnd.nextDouble(), 3)).toInt
+      if v != u
+    } yield (u.toLong, v.toLong)
+    graft.graph.Csr.fromEdges(edges.distinct.toArray)
+  }
+
+  /** The carried push state after each top-k round, in round order, on
+    * `Fora.topkRun`'s rmax schedule (δ: 1/k, ÷4, down to 1/n).
+    */
+  private def pushRounds(csr: graft.graph.Csr, s: Int, k: Int, conf: Fora.Conf)
+      : IndexedSeq[ForwardPush.PushState] = {
+    val n = csr.numNodes.toDouble
+    val m = csr.numEdges.toDouble
+    val eps = conf.epsilon * 0.5
+    val pf = 1.0 / n / n / n / math.log(n / k.toDouble)
+    val deltas = Iterator.iterate(1.0 / k)(d => math.max(1.0 / n, d / 4.0))
+      .takeWhile(_ > 1.0 / n).toIndexedSeq :+ 1.0 / n
+    val init = new Array[Double](csr.numNodes)
+    init(s) = 1.0
+    deltas.scanLeft(ForwardPush.PushState(new Array[Double](csr.numNodes), init, 1.0)) {
+      (st, d) =>
+        var rmax = eps * math.sqrt(d / 3.0 / m / math.log(2.0 / pf))
+        rmax *= math.sqrt(m * rmax) * 3.0
+        ForwardPush.runLocalFrom(csr, st, s, conf.alpha, rmax)
+    }.tail
+  }
+
+  test("a pilot skips rounds' walks; answers equal every-round walking or come from a later round") {
+    val k = 10
+    val conf = Fora.Conf(alpha = 0.15, epsilon = 0.5, seed = 7L)
+    var skipped = 0
+    var sameRound = 0
+    for (g <- 1L to 2L) {
+      val csr = skewedDigraph(g, 2000)
+      val n = csr.numNodes
+      for (s <- Seq(0, 3, 250, 1200, 1999)) {
+        val what = s"graph $g src $s"
+        val (est, carried, _, _) = SerialWalks.foraTopk(csr, s, k, conf)
+        val t = Fora.topkTrace(csr, s, k, conf)
+        val local = Fora.topkLocal(csr, s, k, conf)
+        // round 0 (δ = 1/k) cannot end by mass; when later rounds before
+        // the terminating one ran no full walks, their pilots skipped them
+        if (t.round >= 2 && t.pilotWalks > 0 && t.fullWalks == t.walks.length) skipped += 1
+        val rounds = pushRounds(csr, s, k, conf)
+        assert(Arrays.equals(rounds(t.round).residue, t.residue), what)
+        val serialRound = rounds.indexWhere(st =>
+          Arrays.equals(st.residue, carried.residue) && Arrays.equals(st.reserve, carried.reserve))
+        assert(serialRound >= 0, what)
+        if (t.round == serialRound) {
+          sameRound += 1
+          assert(Arrays.equals(local, est), what)
+        } else assert(t.round > serialRound, s"$what: round ${t.round} vs $serialRound")
+        val exact = PowerIteration.runLocal(csr, s, conf.alpha, 200)
+        val kth = Fora.kthLargest(local, k)
+        for (v <- 0 until n if local(v) > 0 && local(v) >= kth)
+          assert(math.abs(local(v) - exact(v)) <= conf.epsilon * exact(v) + 1.0 / n,
+            s"$what node $v: ${local(v)} vs ${exact(v)}")
+      }
+    }
+    assert(skipped > 0, "no pilot skipped a round's walks")
+    info(s"$skipped of 10 sources skipped a round's walks, $sameRound ended in the same round")
+  }
+
   test("lock-step walks give the serial walk loop's answers bit for bit") {
     for (g <- 1L to 6L) {
       val csr = SerialWalks.randomDigraph(g)
