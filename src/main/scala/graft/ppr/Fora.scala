@@ -31,13 +31,15 @@ import graft.graph.Csr
   * from every full round's. The full walks run only when the pilot's kth
   * score is at least 0.9·(1+ε′)·δ (`PilotMargin`); otherwise the round's
   * walks are skipped and its push state carries on. No pilot runs in the
-  * last round (δ = 1/n, which always ends) or in a round of fewer than n
-  * walks (Σ⌈r_v·ω_r⌉ ≈ ω_r·Σr), where its O(n) pass costs more than the
-  * walks it could save. The termination test is always the full
-  * estimate's. So when the same round ends the answer is bit-identical to
-  * walking every round; when a pilot skipped a round that would have
-  * ended, the answer comes from a later round with a smaller δ, inside
-  * the same (ε, δ, p_fail) bound.
+  * last round (δ = 1/n, which always ends) or when W is 0. Systematic
+  * sampling, not ⌈r_v·W⌉ walks per node as in [[topkWalks]]: the ceiling
+  * gives every residual node a walk, about 3× the pilot walks on
+  * `topk_serve`'s graph, and that workload ran 11 % fewer queries per
+  * second with it. The termination test is always the full estimate's.
+  * So when the same round ends the answer is bit-identical to walking
+  * every round; when a pilot skipped a round that would have ended, the
+  * answer comes from a later round with a smaller δ, inside the same
+  * (ε, δ, p_fail) bound.
   *
   * Walks: each residual node's walks run [[MonteCarlo.Lanes]] at a time
   * in lock-step ([[MonteCarlo.walkEndpoints]]), one RNG stream per
@@ -229,9 +231,8 @@ object Fora {
         val residueSum = carried.residue.sum
         val rsumRw = residueSum * (1.0 - alpha)
         val numWalks = (omega * rsumRw).toLong
-        val walks = numWalks * residueSum // ≈ Σ⌈r_v·numWalks⌉
-        val pilot = (walks / PilotShare).toLong
-        val worthWalking = last || walks < n || pilot == 0L || {
+        val pilot = (numWalks * residueSum / PilotShare).toLong // walks ≈ Σ⌈r_v·numWalks⌉
+        val worthWalking = last || pilot == 0L || {
           val (kth, ran) = pilotKth(csr, carried, residueSum, pilot, alpha,
             pilotKey + round, k, ends)
           pilotWalks += ran
@@ -339,42 +340,17 @@ object Fora {
     if (k >= csr.numNodes) wholeGraphLocal(csr, srcDense, conf)
     else topkRun(csr, srcDense, k, conf, rec = null).est
 
-  /** kth largest value (0.0 when fewer than k positive entries) — the
-    * `Algo_Util.kth_ppr` quickselect (reference `Algo_Util.java:32-79`)
-    * as one pass that keeps the k largest positive entries in a min-heap:
-    * O(n log k) time and O(k) space.
+  /** kth largest value (0.0 when fewer than k nonzero entries) — the
+    * `Algo_Util.kth_ppr` quickselect becomes a sort over the nonzero
+    * support (reference `Algo_Util.java:32-79`).
     */
   def kthLargest(scores: Array[Double], k: Int): Double = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    if (k > scores.length) return 0.0
-    val heap = new Array[Double](k)
-    var size = 0
-    var i = 0
-    while (i < scores.length) {
-      val x = scores(i)
-      if (x > 0.0) {
-        if (size < k) { // sift up
-          var c = size
-          size += 1
-          while (c > 0 && heap((c - 1) / 2) > x) { heap(c) = heap((c - 1) / 2); c = (c - 1) / 2 }
-          heap(c) = x
-        } else if (x > heap(0)) { // replace the root, sift down
-          var c = 0
-          var done = false
-          while (!done) {
-            val l = 2 * c + 1
-            if (l >= k) done = true
-            else {
-              val m = if (l + 1 < k && heap(l + 1) < heap(l)) l + 1 else l
-              if (heap(m) < x) { heap(c) = heap(m); c = m } else done = true
-            }
-          }
-          heap(c) = x
-        }
-      }
-      i += 1
+    val nz = scores.filter(_ > 0.0)
+    if (nz.length < k) 0.0
+    else {
+      java.util.Arrays.sort(nz)
+      nz(nz.length - k)
     }
-    if (size < k) 0.0 else heap(0)
   }
 
   /** Verification-mode trace of one [[wholeGraphLocal]] run: the post-push

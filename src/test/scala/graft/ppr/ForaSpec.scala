@@ -122,25 +122,6 @@ class ForaSpec extends SparkSpec {
     }
   }
 
-  test("kthLargest equals the sort over the positive entries") {
-    val rnd = new scala.util.Random(11L)
-    for (trial <- 0 until 300) {
-      val n = rnd.nextInt(40)
-      // few distinct values: ties, zeros and negatives are common
-      val scores = Array.fill(n)((rnd.nextInt(9) - 2) / 4.0)
-      val k = 1 + rnd.nextInt(n + 5)
-      val nz = scores.filter(_ > 0.0).sorted
-      val bySort = if (nz.length < k) 0.0 else nz(nz.length - k)
-      assert(Fora.kthLargest(scores, k) == bySort,
-        s"trial $trial: k $k scores ${scores.mkString(",")}")
-    }
-    val dense = Array.tabulate(5000)(i => ((i * 7919L) % 1009).toDouble / 1009.0)
-    for (k <- Seq(1, 2, 50, 1009, 4994, 4995, 4996, 6000)) {
-      val nz = dense.filter(_ > 0.0).sorted
-      assert(Fora.kthLargest(dense, k) == (if (nz.length < k) 0.0 else nz(nz.length - k)))
-    }
-  }
-
   /** Seeded digraph of `n` nodes, 2 to 24 out-edges per node, heads drawn
     * with density skewed towards low ids, so a few nodes hold most of the
     * PPR mass.
@@ -213,6 +194,13 @@ class ForaSpec extends SparkSpec {
     info(s"$skipped of 10 sources skipped a round's walks, $sameRound ended in the same round")
   }
 
+  // SerialWalks.foraTopk walks every round, so its top-k answers match only
+  // while no pilot skips a round that would end. On these graphs (n ≤ 64)
+  // a round's walks far outnumber its nodes, so a pilot's kth score lies
+  // close to the full estimate's and no pilot skips such a round; that is
+  // a property of these graphs and seeds, not a guarantee. If only the top-k asserts
+  // here fail, look first at the pilot (Fora's PilotShare and PilotMargin),
+  // then at the lock-step walks.
   test("lock-step walks give the serial walk loop's answers bit for bit") {
     for (g <- 1L to 6L) {
       val csr = SerialWalks.randomDigraph(g)
