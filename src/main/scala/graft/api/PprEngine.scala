@@ -189,15 +189,16 @@ final class PprEngine(
     }
   }
 
-  /** K9 — BASE all-pair store (S7-S9 lifecycle). `k > 0` selects the T5
+  /** K9 — BASE all-pair store (S7-S9 lifecycle). `k >= 1` selects the T5
     * top-k store mode: rank-truncated vectors with an explicit rank
     * column, read back in rank order (reference `preprocessing(threshold,
-    * k)`, `Base_Whole_Graph.java:120-162`).
+    * k)`, `Base_Whole_Graph.java:120-162`); `k = -1` stores full vectors.
     */
   final class base(rmax: Double, threshold: Double, k: Int = -1)
       extends PrecomputedPpr {
     requirePositive("rmax", rmax)
     require(threshold >= 0, s"threshold must be >= 0, got $threshold")
+    require(k == -1 || k >= 1, s"k must be -1 (full vectors) or >= 1, got $k")
     def preprocess(dir: String): Unit = {
       val (g, deg) = sharedReversed
       val ap = Base.allPairs(spark, g, deg, csr.ids.toSeq, conf.alpha, rmax, 0, threshold)

@@ -2,8 +2,7 @@ package graft.operators
 
 import scala.collection.mutable
 
-/** Misra-Gries frequent-items summary over long keys (Misra & Gries 1982;
-  * merge analysis in Agarwal et al., "Mergeable Summaries", PODS 2012).
+/** Misra-Gries frequent-items summary over long keys (Misra & Gries 1982).
   *
   * Bounded state: at most `k` counters regardless of stream length. After
   * consuming `n` items, every key's counter is a LOWER bound on its true
@@ -53,39 +52,4 @@ final class MisraGries(val k: Int) {
   /** Surviving (key, lowerBoundCount) entries, counter ≥ 1, ≤ k of them. */
   def entries: Iterator[(Long, Long)] =
     counters.iterator.map { case (kk, v) => (kk, v) }
-
-  /** Absorb another summary — the mergeable-summaries rule (Agarwal et
-    * al. 2012): add counters entry-wise, then if more than k survive,
-    * subtract the (k+1)-th largest counter value from every counter and
-    * drop the non-positives (the batched form of the one-at-a-time
-    * cancellation). The merged summary keeps the MG GUARANTEE over the
-    * combined stream (undercount ≤ n_total/(k+1), so any key with share
-    * > 1/(k+1) survives) for ANY merge tree; the exact counter values,
-    * unlike every other sketch in this codebase, DO depend on merge
-    * order — callers must pin properties, not byte-equality, except in
-    * the no-cancellation regime (k ≥ distinct keys) where the summary
-    * degenerates to exact counting and is order-free.
-    */
-  def merge(other: MisraGries): Unit = {
-    n += other.n
-    other.counters.foreachEntry { (kk, v) =>
-      counters.update(kk, counters.getOrElse(kk, 0L) + v)
-    }
-    if (counters.size > k) {
-      val vals = counters.values.toArray
-      java.util.Arrays.sort(vals)
-      val sub = vals(vals.length - k - 1) // (k+1)-th largest
-      val dead = mutable.ArrayBuffer.empty[Long]
-      counters.foreachEntry { (kk, v) =>
-        if (v - sub <= 0L) dead += kk else counters.update(kk, v - sub)
-      }
-      dead.foreach(counters.remove)
-    }
-  }
-
-  /** Deserialization helpers: raw counter insert + processed-count
-    * restore (bypassing `add`'s cancellation bookkeeping).
-    */
-  private[graft] def put(key: Long, c: Long): Unit = counters.update(key, c)
-  private[graft] def setProcessed(total: Long): Unit = n = total
 }

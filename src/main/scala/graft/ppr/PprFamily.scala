@@ -59,18 +59,6 @@ object PprFamily {
   val FamKatz = 3
   val FamHits = 4
 
-  /** The `GRAFT_FAM_P` shuffle-width override: a positive integer, else
-    * the run fails naming the variable. Announced on stderr when set.
-    */
-  private[ppr] def widthOverride(raw: Option[String]): Option[Int] =
-    raw.map { v =>
-      val p = v.trim.toIntOption.getOrElse(throw new IllegalArgumentException(
-        s"GRAFT_FAM_P must be an integer, got '$v'"))
-      require(p >= 1, s"GRAFT_FAM_P must be >= 1, got $p")
-      System.err.println(s"[PprFamily] GRAFT_FAM_P override active: width $p")
-      p
-    }
-
   /** Run the five-member family in one tagged superstep loop. Returns
     * the RAW final state `(fam INT, id LONG, r DOUBLE, acc DOUBLE)`:
     * for [[FamPower]]/[[FamSeed]] `acc` is the residue accumulator (the
@@ -118,9 +106,8 @@ object PprFamily {
     // the union adjacency holds ~6 weighted copies of the graph (3 for
     // the PPR trio, 1 for Katz, 2 for HITS' direction pair); width
     // scoped to that (same rationale as the standalone runs).
-    val p = widthOverride(sys.env.get("GRAFT_FAM_P")).getOrElse(
-      math.min(sc.defaultParallelism.toLong,
-        6L * m / 1000000L + 1L).toInt)
+    val p = math.min(sc.defaultParallelism.toLong,
+      6L * m / 1000000L + 1L).toInt
 
     // per-family pre-weighted edges — the standalone runs' expressions
     // verbatim (w = 1/deg for the PPR pair, damping/deg for PageRank,

@@ -6,11 +6,8 @@ import org.apache.spark.sql.expressions.Window
 import graft.Tables
 
 /** Event-stream operators over the `events` table: tumbling-window
-  * aggregation and gap-based sessionization. These are the BATCH
-  * definitions (SQL-expressible, oracle-checked); the streaming
-  * equivalents with watermarks / mapGroupsWithState live in
-  * [[graft.streaming.EventStreams]] and are asserted equal to these on
-  * the same data in ScalaTest.
+  * aggregation and gap-based sessionization, as batch definitions
+  * (SQL-expressible, oracle-checked).
   *
   * Scale shape: both queries shuffle once on their natural key (window ×
   * type, user) and aggregate with partial map-side combine. Timestamps
@@ -136,26 +133,20 @@ object Events {
   val CmsSalt = 715827883L
 
   /** Row-j CMS bucket of `user_id` — ONE Spark SQL text shared by the
-    * batch row, the per-key estimate join (literal-`j` overload) and the
-    * streaming twin's matrix (column-`j` generic form): an edit to the
-    * bucket math lands in every caller or none.
+    * counter matrix and the per-key estimate join: an edit to the
+    * bucket math lands in both or neither.
     */
-  private[graft] def cmsBucketSql(jExpr: String): String = {
+  private def cmsBucketSql(j: Int): String = {
     val P = graft.graph.Hashing.P
     s"${graft.graph.Hashing.spark.kmvMix(
-      s"((user_id + ($jExpr) * CAST($CmsSalt AS BIGINT)) % $P)")} % $CmsW"
+      s"((user_id + ($j) * CAST($CmsSalt AS BIGINT)) % $P)")} % $CmsW"
   }
-
-  private[graft] def cmsBucketSql(j: Int): String = cmsBucketSql(j.toString)
 
   /** The CMS counter matrix of a `(day, user_id)` event table: one row
     * per (day, hash row j, bucket) with its count — d·w aggregate rows
-    * per day regardless of user count. Shared by the batch `ev_cms_freq`
-    * row and pinned equal to the streaming twin's full-replay output
-    * ([[graft.streaming.EventStreams.dailyCmsMatrix]]) in
-    * EventStreamsSpec.
+    * per day regardless of user count.
     */
-  private[graft] def cmsMatrix(ev: DataFrame): DataFrame =
+  private def cmsMatrix(ev: DataFrame): DataFrame =
     (0 until CmsD).map { j =>
         ev.selectExpr("day", s"$j AS j", s"${cmsBucketSql(j)} AS b")
       }.reduce(_.unionAll(_))
@@ -167,11 +158,9 @@ object Events {
     * combine, m rows per day total, the bounded-state property. ρ is
     * computed bit-exactly in BOTH engines as W + 1 − bitlen(w) via
     * `length(bin(w))` (no floating log2, whose libm rounding could
-    * desync the engines at exact powers of two). Shared by the batch
-    * `ev_daily_hll` row and the streaming twin's register matrix
-    * ([[graft.streaming.EventStreams.dailyHllRegisters]]).
+    * desync the engines at exact powers of two).
     */
-  private[graft] def hllRegisters(ev: DataFrame): DataFrame =
+  private def hllRegisters(ev: DataFrame): DataFrame =
     ev.selectExpr("day", s"hm % $HllM AS b", s"hm div $HllM AS w")
       .selectExpr("day", "b",
         s"CASE WHEN w = 0 THEN ${HllW + 1} " +
@@ -236,10 +225,8 @@ object Events {
 
   /** `ev_bitmap_retention`'s per-user state table `(user_id, f, mask)` —
     * first-seen day + the 60-bit activity bitmask anchored at it.
-    * Extracted so the [[graft.streaming.EventStreams.bitmapState]]
-    * streaming twin can pin stream ≡ batch on the mask itself.
     */
-  private[graft] def retentionMasks(s: SparkSession,
+  private def retentionMasks(s: SparkSession,
       dir: String): DataFrame = {
     val ud = Tables(s, dir, "events")
       .selectExpr("user_id", s"unix_micros(ts) div $DayUs AS day")
@@ -677,8 +664,7 @@ object Events {
     // Both engines then evaluate the identical literal-α IEEE expression
     // over identical daily inputs in identical day order, so the
     // recurrence is bit-identical step by step (round-6 is display
-    // only); the oracle replays it as a recursive CTE, and
-    // [[graft.streaming.EventStreams.ewmaState]] is the stateful twin.
+    // only); the oracle replays it as a recursive CTE.
     "ev_ewma" -> ((s, dir) => {
       import s.implicits._
       Tables(s, dir, "events")
@@ -1144,11 +1130,10 @@ object Events {
     }),
 
     // Approximate distinct users per daily window via the KMV sketch
-    // aggregate — the sketch-in-window composition a streaming
-    // dashboard runs (distinct-count state per window bounded at k
-    // longs instead of one entry per user; the same agg runs under a
-    // watermarked streaming groupBy). The exact count rides along to
-    // oracle-check the estimate; at scale it is the column you DROP.
+    // aggregate — the sketch-in-window composition (distinct-count state
+    // per window bounded at k longs instead of one entry per user). The
+    // exact count rides along to oracle-check the estimate; at scale it
+    // is the column you DROP.
     // User ids hash through the full-range mixer so the estimate's
     // uniformity assumption holds regardless of id distribution;
     // n_exact counts RAW ids (the % P reduction exists only to feed the
@@ -1245,8 +1230,7 @@ object Events {
     // bucket counts. Built here in its TABLE form — the matrix is d·w
     // aggregate rows per day (256 longs regardless of user count, the
     // bounded-state property), produced by a plain groupBy with
-    // map-side combine; no custom aggregate needed, and the same shape
-    // runs under a watermarked streaming groupBy. Exact counts ride
+    // map-side combine; no custom aggregate needed. Exact counts ride
     // along to oracle-check the estimate (and would be the dropped
     // column at scale). CMS can only overestimate (est ≥ n_exact) —
     // pinned in the spec; the small w makes collisions real at sf0.01+
@@ -1323,11 +1307,10 @@ object Events {
       evValueQuantiles(Tables(s, dir, "events")))
   )
 
-  /** `ev_value_quantiles` body over any `(ts, event_id, value)` events
-    * frame — extracted so the null-value contract below is unit-testable
-    * against the streaming twin on a synthetic frame.
+  /** `ev_value_quantiles` body over a `(ts, event_id, value)` events
+    * frame.
     */
-  private[graft] def evValueQuantiles(events: DataFrame): DataFrame = {
+  private def evValueQuantiles(events: DataFrame): DataFrame = {
     val P = graft.graph.Hashing.P
     val ev = events
       .selectExpr("date_format(date_trunc('day', ts), 'yyyy-MM-dd') AS day",
@@ -1340,15 +1323,11 @@ object Events {
       "ex")
     val sample = quantileSelect(
       // value joins the cut's order key so duplicate (hm, event_id)
-      // rows — replayed events — resolve the boundary deterministically
-      // and identically to the streaming twin's multiset buffer. The
-      // null-value filter matches the twin's BottomKSample.update, which
-      // skips null-valued rows — without it a null row would consume one
-      // of the k sample slots here and not in the stream, silently
-      // narrowing the stream≡batch contract to non-null corpora. (The
-      // exact ex_* companions are the documented drop-at-scale oracle
-      // ride-alongs and assume non-null values, like the raw order-by
-      // they need.)
+      // rows — replayed events — resolve the boundary deterministically.
+      // The null-value filter keeps a null-valued row from taking one of
+      // the k sample slots. (The exact ex_* companions are the documented
+      // drop-at-scale oracle ride-alongs and assume non-null values, like
+      // the raw order-by they need.)
       ev.where(col("value").isNotNull)
         .withColumn("rs", row_number().over(
           Window.partitionBy(col("day"))

@@ -130,11 +130,11 @@ object TextOps {
     * [[graft.graph.Hashing.kmvMix]] keys live in [0, P²), so h_k maps to
     * the unit interval as u = (h_k+1)/P² (the +1 guards the measure-zero h_k = 0 corner) and
     * the estimate is (k−1)/u. ONE SQL text shared by every sketch row's
-    * batch query, DuckDB oracle and streaming twin — both engines
-    * evaluate the identical IEEE expression chain over the identical
-    * integer, and a future edit cannot desync the copies. P² is spelled
-    * as a DOUBLE product of CASTs (a `P.0` literal parses as DECIMAL in
-    * DuckDB and overflows the decimal multiply).
+    * batch query and DuckDB oracle — both engines evaluate the identical
+    * IEEE expression chain over the identical integer, and a future edit
+    * cannot desync the copies. P² is spelled as a DOUBLE product of
+    * CASTs (a `P.0` literal parses as DECIMAL in DuckDB and overflows the
+    * decimal multiply).
     */
   def kmvEstSql(col: String, k: Int): String =
     s"round(CAST(${k - 1} AS DOUBLE) / " +

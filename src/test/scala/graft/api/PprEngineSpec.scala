@@ -192,6 +192,7 @@ class PprEngineSpec extends SparkSpec with SparkCounting with TimeLimits
       rejects("k")(new e.monteCarlo(0.5).topkPpr(1L, k))
       rejects("k")(new e.fora(0.5).topkPpr(1L, k))
     }
+    for (k <- Seq(0, -2)) rejects("k")(new e.base(1e-4, 0.0, k))
   }
 
   test("fora and monteCarlo reject epsilon <= 0") {

@@ -171,14 +171,4 @@ class PprFamilySpec extends SparkSpec {
       .map(r => (r.getLong(0), (r.getDouble(1), r.getDouble(2)))).toMap
     assert(afterHits == beforeHits)
   }
-
-  test("GRAFT_FAM_P override: unset keeps the formula, else a positive " +
-      "integer or a failure naming the variable") {
-    assert(PprFamily.widthOverride(None).isEmpty)
-    assert(PprFamily.widthOverride(Some(" 8 ")).contains(8))
-    for (bad <- Seq("eight", "", "2.5", "0", "-3")) {
-      val e = intercept[IllegalArgumentException](PprFamily.widthOverride(Some(bad)))
-      assert(e.getMessage.contains("GRAFT_FAM_P"), s"'$bad': ${e.getMessage}")
-    }
-  }
 }
