@@ -18,10 +18,11 @@ object LocalSession {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // driver-generated events.parquet stores naive timestamp[us];
-      // Spark 4 would infer TIMESTAMP_NTZ, which unix_micros/double
-      // casts reject. Read it as session-TZ (UTC) TIMESTAMP instead —
-      // the same wall-clock integers DuckDB's naive read produces.
+      // lineitem.l_shipdate and orders.o_orderdate are stored as naive
+      // timestamp[us]; Spark 4 would infer TIMESTAMP_NTZ, which
+      // unix_micros/double casts reject. Read them as session-TZ (UTC)
+      // TIMESTAMP instead — the same wall-clock integers DuckDB's naive
+      // read produces.
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -23,13 +23,11 @@ object SparkEntry {
     graft.queries.Graph.queries ++
       graft.queries.GotQueries.queries ++
       graft.queries.Text.queries ++
-      graft.queries.Embeddings.queries ++
-      graft.queries.Events.queries
+      graft.queries.Embeddings.queries
 
   def oracleSql: Map[String, String] =
     graft.queries.Graph.oracleSql ++
       graft.queries.GotQueries.oracleSql ++
       graft.queries.Text.oracleSql ++
-      graft.queries.Embeddings.oracleSql ++
-      graft.queries.Events.oracleSql
+      graft.queries.Embeddings.oracleSql
 }

@@ -3,26 +3,14 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
 
 /** Uniform access to the driver-generated parquet tables under an sf dir
   * (see TESTDATA.md). All SparkEntry queries and tests read through here so
   * the scan schema/pushdown behavior is consistent.
-  *
-  * The `events` table stores TIMESTAMP(NANOS) which Spark's parquet reader
-  * rejects; sessions must set `spark.sql.legacy.parquet.nanosAsLong=true`
-  * (done by Verify/Bench/tests), and the nanos column is converted here to
-  * a microsecond timestamp (the data has no sub-µs values).
   */
 object Tables {
-  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
-    if (name == "events" &&
-        df.schema.fields.exists(f => f.name == "ts" && f.dataType == LongType))
-      df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-    else df
-  }
+  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    spark.read.parquet(s"$sfDir/$name.parquet")
 }
 
 /** Per-application scratch namespace for queries that materialize stores

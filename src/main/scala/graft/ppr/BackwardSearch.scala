@@ -20,12 +20,13 @@ import graft.graph.Csr
   * bulk-synchronous superstep; a FIXED superstep count gives the
   * deterministic schedule the unrolled-SQL oracle replays.
   *
-  * Scale: [[batch]] broadcasts the reversed CSR and runs the kernel
-  * ([[runLocal]], or its bit-identical sparse twin [[runLocalSparse]]) for
-  * a slice of targets per task, zero per-superstep shuffles. The same
-  * batch serves a single column (`PprEngine.backward`) and the BASE
-  * all-pair preprocessing ([[Base]]), which fans out over every target —
-  * the embarrassingly parallel axis is *targets*, not edges.
+  * Scale: [[batch]] broadcasts the reversed CSR and runs the sparse
+  * kernel [[runLocalSparse]] (bit-identical to the dense [[runLocal]],
+  * which the specs use as reference) for a slice of targets per task,
+  * zero per-superstep shuffles. The same batch serves a single column
+  * (`PprEngine.backward`) and the BASE all-pair preprocessing ([[Base]]),
+  * which fans out over every target — the embarrassingly parallel axis
+  * is *targets*, not edges.
   */
 object BackwardSearch {
 

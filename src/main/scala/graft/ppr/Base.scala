@@ -17,9 +17,12 @@ import graft.graph.{Csr, GraphOps}
   * (Dissertation §5.3).
   *
   * Spark-first shape: fan out over targets (the embarrassingly parallel
-  * axis) with the dense kernel per task, one shuffle to source-major via
-  * `partitionBy("src")` Parquet write, and a lookup is one task that reads
-  * exactly the queried source's files through [[PprStore]]'s file index.
+  * axis) with the sparse backward-search kernel per task
+  * ([[BackwardSearch.runLocalSparse]] through [[BackwardSearch.batch]];
+  * the dense `runLocal` is only the specs' reference), one shuffle to
+  * source-major via `partitionBy("src")` Parquet write, and a lookup is
+  * one task that reads exactly the queried source's files through
+  * [[PprStore]]'s file index.
   * Memory is bounded per task, so the reference's OOM disappears
   * structurally. At 100 TB: targets × nodes >> cluster cores, and the
   * write path streams through the shuffle — no driver materialization

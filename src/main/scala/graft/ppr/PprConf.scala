@@ -9,7 +9,6 @@ package graft.ppr
   */
 final case class PprConf(
     alpha: Double = 0.15,
-    epsilon: Double = 0.5,
     pfail: Double = 0.0,   // derived per-algo when 0 (1/n, Algo_Conf.java:45-53)
     delta: Double = 0.0,   // derived per-algo when 0 (1/n)
     seed: Long = 42L

@@ -1042,10 +1042,10 @@ object Text {
     // p = c/n is ONE division over exact integers; each pair-bucket
     // mass m = p_a/2 + p_b/2 sums ≤ 2 addends (IEEE addition is
     // commutative — order-free); every entropy Σ folds from a
-    // bucket-SORTED array on both engines (the ev_markov_entropy
-    // pattern). Scale: bucket counts are map-side-combined to
-    // |sources|·B rows; the pair stage is a broadcast join over the
-    // bounded source list — |sources| is a domain catalog, not data.
+    // bucket-SORTED array on both engines. Scale: bucket counts are
+    // map-side-combined to |sources|·B rows; the pair stage is a
+    // broadcast join over the bounded source list — |sources| is a
+    // domain catalog, not data.
     "d_domain_jsd" -> ((s, dir) => {
       import s.implicits._
       val B = JsdBuckets
@@ -1100,10 +1100,10 @@ object Text {
     // one partition, while the sampled thresholds are a
     // TakeOrderedAndProject over CcnetSampleK rows plus a broadcast
     // 1-row crossJoin — the corpus-scale pass stays a map-side CASE.
-    // Same rank rule as ev_value_quantiles (value at
-    // floor(q·(k−1))+1, all-DOUBLE floor math); boundary docs equal to a
-    // threshold land in the better bucket (>= head cut → head,
-    // >= tail cut → middle), deterministic on the 6-dp-rounded score.
+    // Rank rule: the value at floor(q·(k−1))+1, all-DOUBLE floor math;
+    // boundary docs equal to a threshold land in the better bucket
+    // (>= head cut → head, >= tail cut → middle), deterministic on the
+    // 6-dp-rounded score.
     "d_ccnet_buckets" -> ((s, dir) => {
       val scored = bigramScore(s, dir)
         .selectExpr("doc_id", "avg_logp",

@@ -78,13 +78,6 @@ class PipelineQueriesSpec extends SparkSpec {
     }
   }
 
-  test("ev_sliding counts every event in exactly two hopping windows") {
-    val slide = Events.queries("ev_sliding")(spark, sfDir).collect()
-      .map(_.getAs[Long]("n")).sum
-    val total = graft.Tables(spark, sfDir, "events").count()
-    assert(slide == 2 * total)
-  }
-
   test("e_kmeans assigns every vector to one of K cells, deterministically") {
     val a = Embeddings.queries("e_kmeans")(spark, sfDir).collect()
       .map(r => r.getLong(0) -> r.getAs[Int]("cell")).toMap
@@ -469,96 +462,6 @@ class PipelineQueriesSpec extends SparkSpec {
         case Array(a, b) => assert(a._4 >= b._4)
         case _ => ()
       }
-    }
-  }
-
-  test("ev_cms_freq: CMS never underestimates and matches exact counts " +
-      "replayed from the raw events") {
-    val rows = graft.queries.Events.queries("ev_cms_freq")(spark, sfDir)
-      .collect()
-      .map(r => ((r.getString(0), r.getLong(1)), (r.getLong(2), r.getLong(3))))
-    assert(rows.nonEmpty)
-    // the defining one-sided error: min over d rows of bucket counts
-    // includes every one of the key's own increments
-    rows.foreach { case (k, (exact, est)) =>
-      assert(est >= exact, s"$k: est $est < exact $exact")
-    }
-    // exact column replays from the raw table
-    val want = graft.Tables(spark, sfDir, "events")
-      .selectExpr("date_format(date_trunc('day', ts), 'yyyy-MM-dd') AS day",
-        "user_id").collect()
-      .map(r => (r.getString(0), r.getLong(1)))
-      .groupBy(identity).view.mapValues(_.length.toLong).toMap
-    assert(rows.map { case (k, (exact, _)) => k -> exact }.toMap == want)
-  }
-
-  test("ev_daily_hll equals an independent in-memory HLL replay of the " +
-      "raw events") {
-    val E = graft.queries.Events
-    val H = graft.graph.Hashing
-    val rows = E.queries("ev_daily_hll")(spark, sfDir).collect()
-      .map(r => r.getString(0) ->
-        ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
-    assert(rows.nonEmpty)
-    // replay: same mixer, registers and correction computed straight in
-    // Scala (numberOfLeadingZeros instead of the SQL bin-length spelling)
-    val P = graft.graph.Hashing.P
-    val raw = graft.Tables(spark, sfDir, "events")
-      .selectExpr("date_format(date_trunc('day', ts), 'yyyy-MM-dd') AS day",
-        "user_id").collect()
-      .map(r => (r.getString(0), r.getLong(1)))
-    val want = raw.groupBy(_._1).map { case (day, evs) =>
-      val regs = new Array[Int](H.HllM)
-      evs.foreach { case (_, uid) =>
-        val hm = graft.graph.Hashing.kmvMix(uid % P)
-        val b = (hm % H.HllM).toInt
-        val w = hm / H.HllM
-        val rho =
-          if (w == 0) H.HllW + 1
-          else H.HllW + 1 - (64 - java.lang.Long.numberOfLeadingZeros(w))
-        if (rho > regs(b)) regs(b) = rho
-      }
-      val v = regs.count(_ == 0)
-      val sScaled = regs.map(m => 1L << (H.HllW + 1 - m)).sum
-      val rawEst = (0.673 * H.HllM * H.HllM) /
-        (sScaled.toDouble / (1L << (H.HllW + 1)).toDouble)
-      val est =
-        if (rawEst <= 2.5 * H.HllM && v > 0) H.HllM * math.log(H.HllM.toDouble / v)
-        else rawEst
-      val est4 = BigDecimal(est)
-        .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-      day -> ((evs.map(_._2).distinct.size.toLong, v.toLong, est4))
-    }
-    assert(rows == want)
-  }
-
-  test("ev_value_quantiles: exact columns replay from raw values by the " +
-      "rank rule, sample degenerates to exact when a day fits the sample, " +
-      "and the sample cut is a WindowGroupLimit") {
-    val E = graft.queries.Events
-    val df = E.queries("ev_value_quantiles")(spark, sfDir)
-    // scale shape: the bottom-k-by-hash sample cut must stay map-side
-    // bounded like its sibling rows' cuts.
-    assert(df.queryExecution.executedPlan.toString.contains("WindowGroupLimit"))
-    val rows = df.collect().map(r => r.getString(0) ->
-      ((r.getLong(1), (r.getDouble(2), r.getDouble(3), r.getDouble(4)),
-        (r.getDouble(5), r.getDouble(6), r.getDouble(7))))).toMap
-    assert(rows.nonEmpty)
-    val raw = graft.Tables(spark, sfDir, "events")
-      .selectExpr("date_format(date_trunc('day', ts), 'yyyy-MM-dd') AS day",
-        "value").collect()
-      .map(r => (r.getString(0), r.getDouble(1)))
-      .groupBy(_._1).view.mapValues(_.map(_._2).sorted).toMap
-    def rank(q: Double, n: Int): Int = math.floor(q * (n - 1)).toInt
-    rows.foreach { case (day, (n, ex, sp)) =>
-      val vs = raw(day)
-      assert(n == vs.length, s"$day: n $n vs ${vs.length}")
-      val want = (vs(rank(0.5, vs.length)), vs(rank(0.9, vs.length)),
-        vs(rank(0.99, vs.length)))
-      assert(ex == want, s"$day: exact $ex vs replay $want")
-      // sf0.001 days are all smaller than the sample: the deterministic
-      // sample IS the population, so the sketch must equal the truth.
-      if (n <= E.EvQK) assert(sp == ex, s"$day: sample $sp vs exact $ex")
     }
   }
 

@@ -12,7 +12,7 @@ only = set(sys.argv[3:])
 
 con = duckdb.connect()
 for t in ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]:
+          "lineitem", "documents", "embeddings"]:
     p = f"{sf_dir}/{t}.parquet"
     if os.path.exists(p):
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
